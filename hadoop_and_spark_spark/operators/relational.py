@@ -359,11 +359,11 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-flag prefix-sum window over the bucket TOTALS (≤ domain/width
     rows, broadcast back onto the histogram). cum/lo/n are sums of
     longs grouped identically either way, so results are
-    bit-identical to the single-window form (equality-gated in
-    tools/ab_r13.py before promotion): floor(price/width) is monotone
-    in price, so (b asc, price asc within b) IS global price order,
-    and a NULL price folds into the NULLs-first bucket both levels
-    order first.
+    bit-identical to the single-window form (equality-gated before
+    promotion, mode q9two of `git show 7d0ad39:tools/ab_r13.py`):
+    floor(price/width) is monotone in price, so (b asc, price asc
+    within b) IS global price order, and a NULL price folds into the
+    NULLs-first bucket both levels order first.
 
     Interpolation mirrors Spark's own Percentile.getPercentile
     arithmetic exactly — pos = p·(n−1), lower/higher bracketing

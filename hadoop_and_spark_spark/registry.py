@@ -94,8 +94,7 @@ def last_green_round(has_oracle: set[str] | None = None) -> dict[str, int]:
 def query_modules() -> dict[str, str]:
     """Query name -> owning operator module (short name) — the
     ATTRIBUTION map (which family owns a query), used by family-scoped
-    sweeps like the hot-user test. For concurrency grouping see
-    ``sweep_groups``."""
+    sweeps like the hot-user test."""
     out: dict[str, str] = {}
     for modname in _OPERATOR_MODULES:
         try:
@@ -108,31 +107,6 @@ def query_modules() -> dict[str, str]:
         for name in getattr(mod, "QUERIES", {}):
             out[name] = short
     return out
-
-
-def sweep_groups() -> dict[str, str]:
-    """Serialization groups for callers running registered queries on
-    CONCURRENT threads (tests' run_queries_concurrently): query name
-    -> group key; queries in different groups may run simultaneously.
-
-    Returns the EMPTY map — every query is its own group — because as
-    of round 9 every piece of cross-query shared state is guarded at
-    its own source, each behind a per-key lock so distinct artifacts
-    still build in parallel: session-memoized artifacts
-    (maintenance.session_memo), on-disk builds incl. the replay dirs
-    three streaming modules share (maintenance.build_once), the
-    module-local model caches (similarity._MODEL_LOCKS,
-    graph._RANKS_CACHE_LOCKS), the replay shuffle-partition pin
-    (streaming/runtime.py, refcounted), the memory-sink sequence
-    (trending._SEQ_LOCK), and scoped SQL-conf mutation
-    (catalog._CONF_LOCK). History: rounds 7-8 serialized per MODULE
-    (double-build races) with one coarse group for all streaming
-    (session-wide replay state); both hazards are now locked where
-    they live, which is what lets the all-query sweeps pack the
-    thread pool instead of queueing behind the widest family. A new
-    module-level mutable cache MUST either take a per-key lock like
-    the above or re-introduce its group here."""
-    return {}
 
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:

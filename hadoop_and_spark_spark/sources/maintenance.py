@@ -65,7 +65,16 @@ _LOCK_GUARD = threading.Lock()
 def _keyed_lock(locks: dict, key) -> object:
     """One lock per key, allocated under a module guard — concurrent
     sweep threads building the SAME artifact serialize on its key
-    while different artifacts build in parallel."""
+    while different artifacts build in parallel.
+
+    Registered queries may run on concurrent threads with no
+    cross-query serialization (tests' run_queries_concurrently), so
+    all shared state is locked at its source: session memos and
+    on-disk builds here, the similarity/graph model caches, the replay
+    shuffle-partition pin (streaming/runtime.py, refcounted), the
+    memory-sink sequence (trending._SEQ_LOCK) and scoped SQL-conf
+    mutation (catalog._CONF_LOCK). A new module-level mutable cache
+    MUST take a per-key lock through this helper as well."""
     with _LOCK_GUARD:
         return locks.setdefault(key, threading.Lock())
 

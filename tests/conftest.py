@@ -28,44 +28,24 @@ def run_queries_concurrently(names, worker, max_workers: int = 16) -> list:
     the registry-wide sweeps are latency-bound (driver-side planning,
     Py4J round-trips, many small jobs), so concurrent submission cuts
     their wall time ~3-4x without changing what executes. Spark
-    supports concurrent job submission from threads; serialization
-    groups come from registry.sweep_groups(), which is EMPTY since
-    round 9 (every cross-query shared-state hazard is locked at its
-    own source — see its docstring), so queries pack the pool freely.
+    supports concurrent job submission from threads, and every
+    cross-query shared-state hazard is locked at its own source (see
+    maintenance._keyed_lock), so queries pack the pool freely.
     Worker exceptions are collected, not raised mid-pool, and
     re-raised as one AssertionError naming every failed query."""
-    import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    from hadoop_and_spark_spark.registry import sweep_groups
-
-    groups = sweep_groups()
-    locks: dict[str, threading.Lock] = {}
     failures: list[str] = []
     results: list = []
 
     def run(name: str) -> None:
-        lock = locks.setdefault(groups.get(name, name), threading.Lock())
-        with lock:
-            try:
-                results.append(worker(name))
-            except Exception as exc:  # noqa: BLE001 — re-raised below
-                failures.append(f"{name}: {type(exc).__name__}: {exc}")
-
-    # Interleave names across groups so workers don't pile up behind
-    # one group's lock (e.g. 13 streaming queries submitted back to
-    # back would idle 7 workers).
-    from itertools import zip_longest
-
-    by_group: dict[str, list[str]] = {}
-    for n in names:
-        by_group.setdefault(groups.get(n, n), []).append(n)
-    interleaved = [
-        n for tier in zip_longest(*by_group.values()) for n in tier if n is not None
-    ]
+        try:
+            results.append(worker(name))
+        except Exception as exc:  # noqa: BLE001 — re-raised below
+            failures.append(f"{name}: {type(exc).__name__}: {exc}")
 
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        list(pool.map(run, interleaved))
+        list(pool.map(run, names))
     assert not failures, "query sweep failures:\n" + "\n".join(failures)
     return results
 

@@ -1,4 +1,5 @@
-"""bench.py session-death resilience (round 13).
+"""Timing-harness logic: bench.py session-death resilience and the
+tools/qtime.py A/B equality gate.
 
 The r12 driver bench lost its JVM gateway mid-run and the harness
 recorded 77 bogus per-query "failures" (every later py4j call raised
@@ -16,9 +17,12 @@ import os
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import bench  # noqa: E402
+import qtime  # noqa: E402
 
 
 def _chain(outer: Exception, inner: Exception) -> Exception:
@@ -134,3 +138,55 @@ class TestTimedRun:
         with pytest.raises(ConnectionRefusedError):
             bench.timed_run(state, run)
         assert len(log) == 1 and state["rebuilds"] == 1
+
+
+class TestQtimeEqualityGate:
+    """qtime.mismatch decides whether a NAME=module:function variant
+    may be timed; anything but exact equality must stop the A/B."""
+
+    @pytest.fixture(scope="class")
+    def q9(self, spark, sf_dir):
+        from hadoop_and_spark_spark.registry import collect
+
+        queries, _ = collect()
+        df = queries["q9_price_percentiles"](spark, sf_dir)
+        return df, df.collect()
+
+    def test_registered_query_matches_itself(self, spark, sf_dir, q9):
+        from hadoop_and_spark_spark.registry import collect
+
+        queries, _ = collect()
+        again = queries["q9_price_percentiles"](spark, sf_dir)
+        assert qtime.mismatch(q9[0], again) == []
+
+    def test_one_changed_value_fails(self, spark, q9):
+        df, rows = q9
+        first = rows[0].asDict()
+        first["cnt"] += 1
+        changed = [tuple(first.values())] + [tuple(r) for r in rows[1:]]
+        diff = qtime.mismatch(df, spark.createDataFrame(changed, df.schema))
+        assert diff and any(line.startswith("  + ") for line in diff)
+
+    def test_dropped_row_fails(self, spark, q9):
+        df, rows = q9
+        assert len(rows) > 1
+        diff = qtime.mismatch(df, spark.createDataFrame(rows[1:], df.schema))
+        assert diff and any(line.startswith("  - ") for line in diff)
+
+    def test_renamed_column_fails(self, q9):
+        df, _ = q9
+        assert qtime.mismatch(df, df.withColumnRenamed("cnt", "n"))
+
+    @pytest.mark.parametrize(
+        "ref, got, equal",
+        [
+            (0.0, -0.0, False),  # repr tells the zeros apart; == does not
+            (float("nan"), float("nan"), True),  # NaN-safe
+            (0.1 + 0.2, 0.3, False),  # no float rounding
+        ],
+    )
+    def test_float_exactness(self, spark, ref, got, equal):
+        def frame(v):
+            return spark.createDataFrame([(v,)], "x double")
+
+        assert (qtime.mismatch(frame(ref), frame(got)) == []) is equal

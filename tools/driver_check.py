@@ -14,6 +14,7 @@ Usage:  python tools/driver_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pandas as pd
@@ -31,7 +32,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from hadoop_and_spark_spark.oracle import duckdb_connect
     from hadoop_and_spark_spark.session import get_spark

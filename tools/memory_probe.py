@@ -56,10 +56,10 @@ CHILD_SHUFFLE = "8"
 
 # Child script: runs in its own JVM (small heap), prints one JSON line
 # per query. Checksum is an order-independent SUM of row hashes, so it
-# is partitioning- and spill-independent.
+# is partitioning- and spill-independent. It runs with the repo root
+# as cwd, which `python -c` puts on sys.path for the package import.
 _CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from hadoop_and_spark_spark.registry import collect
 from hadoop_and_spark_spark.session import get_spark
@@ -132,6 +132,7 @@ def main() -> None:
     t0 = time.perf_counter()
     proc = subprocess.run(
         [sys.executable, "-c", _CHILD, corpus, *names],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=env,
         capture_output=True,
         text=True,

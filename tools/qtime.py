@@ -1,29 +1,71 @@
-"""Isolated per-query timing (guide §1): one warm-up pass, then N
-interleaved timed passes over the named queries, min per query —
-bench.py's protocol scoped to a few queries for optimization work.
+"""Isolated per-query timing and equality-gated A/B (guide §1):
+bench.warm_up, then N interleaved timed passes over the named
+queries, min per query — bench.py's protocol scoped to a few queries
+for optimization work.
 
-Usage: python tools/qtime.py [-n PASSES] <query> [query ...]
+Usage: python tools/qtime.py [-n PASSES] [--noop] ARG [ARG ...]
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
+
+Each ARG is a registered query name, or NAME=module:function for a
+candidate variant of the registered query NAME (the function takes
+(spark, sf_dir) like a registered query; its module must be
+importable, e.g. via PYTHONPATH). A variant is timed beside NAME in
+the same interleaved passes, but first both are collected once — which
+doubles as their warm-up — and compared exactly (see mismatch); on any
+difference qtime prints the first differing rows and exits 1 before
+timing anything, so a faster-but-different variant is never timed.
 
 Times .collect() (the bench action) so numbers are comparable with
 BENCH_QUERIES.json rows; pass --noop to time a noop-sink write
 instead (computes every column, excludes driver row transfer).
+Prints {label: min seconds}, a variant's label being module:function.
 """
 
 from __future__ import annotations
 
 import gc
+import importlib
 import json
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_up
 from hadoop_and_spark_spark.registry import collect
 from hadoop_and_spark_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+N_SHOWN = 3  # differing rows printed per side on a mismatch
+
+
+def mismatch(ref_df, got_df) -> list[str]:
+    """Exact equality gate between two DataFrames: the column lists,
+    then the multisets of rows as sorted ``repr(tuple(row))`` strings.
+    repr is exact where ``==`` is not — no float rounding, -0.0 is not
+    0.0, and NaN equals NaN. Collects both sides. Returns [] when
+    equal, else lines naming the first differences."""
+    if ref_df.columns != got_df.columns:
+        return [f"columns differ: {ref_df.columns} vs {got_df.columns}"]
+    ref = Counter(repr(tuple(r)) for r in ref_df.collect())
+    got = Counter(repr(tuple(r)) for r in got_df.collect())
+    if ref == got:
+        return []
+    only_ref = sorted((ref - got).elements())
+    only_got = sorted((got - ref).elements())
+    return (
+        [f"rows only in the registered query: {len(only_ref)}"]
+        + [f"  - {r}" for r in only_ref[:N_SHOWN]]
+        + [f"rows only in the variant: {len(only_got)}"]
+        + [f"  + {r}" for r in only_got[:N_SHOWN]]
+    )
+
+
+def _variant(spec: str):
+    module, _, fn = spec.partition(":")
+    return getattr(importlib.import_module(module), fn)
 
 
 def main() -> int:
@@ -37,33 +79,42 @@ def main() -> int:
     if "--noop" in args:
         noop = True
         args.remove("--noop")
-    names = args
-    spark = get_spark("qtime")
     queries, _ = collect()
+    fns = {}
+    pairs = []  # (registered name, variant label)
+    for arg in args:
+        name, _, spec = arg.partition("=")
+        fns[name] = queries[name]
+        if spec:
+            fns[spec] = _variant(spec)
+            pairs.append((name, spec))
+    spark = get_spark("qtime")
 
-    def run(name: str) -> float:
+    def run(label: str) -> float:
         gc.collect()
-        spark.sparkContext.setJobDescription(f"qtime: {name}")
+        spark.sparkContext.setJobDescription(f"qtime: {label}")
         t0 = time.perf_counter()
-        df = queries[name](spark, SF_DIR)
+        df = fns[label](spark, SF_DIR)
         if noop:
             df.write.format("noop").mode("overwrite").save()
         else:
             df.collect()
         return time.perf_counter() - t0
 
-    # warm-up (codegen + build-once artifacts + worker pool)
-    spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).count()
-    ncpu = spark.sparkContext.defaultParallelism
-    spark.range(ncpu, numPartitions=ncpu).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
-    for name in names:
-        run(name)
-    passes = [{name: run(name) for name in names} for _ in range(n_passes)]
-    out = {
-        name: round(min(p[name] for p in passes), 3) for name in names
-    }
+    warm_up(spark, SF_DIR)
+    for name, spec in pairs:
+        diff = mismatch(fns[name](spark, SF_DIR), fns[spec](spark, SF_DIR))
+        print(f"equal[{spec} vs {name}]: {not diff}", flush=True)
+        if diff:
+            print("\n".join(diff), flush=True)
+            spark.stop()
+            return 1
+    gated = {label for pair in pairs for label in pair}
+    for label in fns:
+        if label not in gated:
+            run(label)
+    passes = [{label: run(label) for label in fns} for _ in range(n_passes)]
+    out = {label: round(min(p[label] for p in passes), 3) for label in fns}
     print(json.dumps(out, indent=1))
     spark.stop()
     return 0

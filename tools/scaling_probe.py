@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from hadoop_and_spark_spark.registry import collect
 from hadoop_and_spark_spark.session import get_spark
+from hadoop_and_spark_spark.sources.maintenance import clear_session_caches
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PROBE_DIR = "/tmp/sfprobe10x"
@@ -393,48 +394,34 @@ def build_spot_corpus(spark, factor: int) -> str:
     return out_dir
 
 
-# Queries whose cost is memoized per (session, corpus) have EVERY
-# in-session cache cleared before each timed run, so the published
-# growth number includes the iterative compute (training /
-# convergence / pair mining), not just the cached extract.
-def _clear_memo_caches(name: str) -> None:  # noqa: ARG001 — kept for call sites
-    from hadoop_and_spark_spark.sources.maintenance import clear_session_caches
+def cold_min(fn, spark, sf_dir: str, engine: bool = False) -> float:
+    """Cold cost, min of two timed runs after an untimed warm-up
+    (codegen + footer cache). EVERY in-session cache is cleared before
+    each run, so a query whose cost is memoized per (session, corpus)
+    is priced with its iterative compute (training / convergence /
+    pair mining), not just the cached extract.
+
+    ``engine`` drains the plan into Spark's JVM noop sink instead of
+    collect(): the executors do ALL the plan's work and zero rows
+    cross to the driver. total − engine is therefore the harness's own
+    materialization cost (serialize + ship + build Row objects), which
+    a production job writing to parquet never pays. This separates
+    "the operator scales" from "collecting a corpus-proportional
+    result to one process scales", measured instead of attributed."""
+    def action():
+        df = fn(spark, sf_dir)
+        if engine:
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            df.collect()
 
     clear_session_caches()
-
-
-def steady_state(name, fn, spark, sf_dir: str) -> float:
-    _clear_memo_caches(name)
-    fn(spark, sf_dir).collect()  # warm-up: codegen + footer cache
+    action()
     best = float("inf")
     for _ in range(2):
-        _clear_memo_caches(name)
+        clear_session_caches()
         t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def engine_side(name, fn, spark, sf_dir: str) -> float:
-    """Engine-side cold cost: the identical cold protocol, but the
-    plan drains into Spark's JVM noop sink instead of collect() — the
-    executors do ALL the plan's work and zero rows cross to the
-    driver. total − engine is therefore the harness's own
-    materialization cost (serialize + ship + build Row objects),
-    which a production job writing to parquet never pays. This
-    separates "the operator scales" from "collecting a
-    corpus-proportional result to one process scales", measured
-    instead of attributed."""
-    def drain():
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    _clear_memo_caches(name)
-    drain()  # warm-up: codegen + footer cache
-    best = float("inf")
-    for _ in range(2):
-        _clear_memo_caches(name)
-        t0 = time.perf_counter()
-        drain()
+        action()
         best = min(best, time.perf_counter() - t0)
     return best
 
@@ -578,10 +565,11 @@ def main() -> None:
         # Both tables carry measured engine-side (noop sink) twins —
         # the 10x table gained them in round 9 so neither table mixes
         # harness collect cost into its growth column.
-        one = steady_state(name, queries[name], spark, BASE_SF)
-        big = steady_state(name, queries[name], spark, probe_dir)
-        eone = engine_side(name, queries[name], spark, BASE_SF)
-        ebig = engine_side(name, queries[name], spark, probe_dir)
+        fn = queries[name]
+        one = cold_min(fn, spark, BASE_SF)
+        big = cold_min(fn, spark, probe_dir)
+        eone = cold_min(fn, spark, BASE_SF, engine=True)
+        ebig = cold_min(fn, spark, probe_dir, engine=True)
         print(
             f"{name:32s} {one:6.2f}s {big:6.2f}s {big / one:6.1f}x "
             f"eng {eone:6.2f}s {ebig:6.2f}s {ebig / eone:6.1f}x",

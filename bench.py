@@ -47,6 +47,7 @@ import gc
 import json
 import os
 import re
+import socket
 import sys
 import time
 
@@ -84,8 +85,9 @@ def _session_died(exc: BaseException | None) -> bool:
     gone (py4j connection loss / dead socket), as opposed to a
     query-level failure inside a healthy session. Walks __cause__ /
     __context__ because py4j wraps the socket error at several layers
-    (the r12 crash surfaced raw ConnectionRefusedError from
-    clientserver.py, but Py4JNetworkError wrappers are equally fatal)."""
+    (a dead gateway can surface as a raw ConnectionRefusedError from
+    clientserver.py or inside Py4JNetworkError wrappers; both are
+    fatal)."""
     from py4j.protocol import Py4JNetworkError
 
     seen: set[int] = set()
@@ -109,12 +111,14 @@ def _session_died(exc: BaseException | None) -> bool:
 def _revive(old) -> "object":
     """Replace a dead SparkSession with a fresh JVM.
 
-    PySpark's own stop() path assumes a live gateway (the r12 run died
-    INSIDE spark.stop() with the singletons half-cleared), so every
-    Python-side singleton that still points at the dead JVM is cleared
-    explicitly before getOrCreate launches a new one. The in-session
-    artifact caches are cleared too: their DataFrames/models reference
-    the dead context and would poison the first memo hit."""
+    PySpark's own stop() path assumes a live gateway (against a dead
+    JVM it can raise INSIDE spark.stop() with the singletons
+    half-cleared), so every Python-side singleton that still points at
+    the dead JVM is cleared explicitly before getOrCreate launches a
+    new one (test_bench_harness.TestPrivateInternals pins that these
+    private attributes exist). The in-session artifact caches are
+    cleared too: their DataFrames/models reference the dead context and
+    would poison the first memo hit."""
     from pyspark import SparkContext
     from pyspark.sql import SparkSession
     from pyspark.sql.context import SQLContext
@@ -174,8 +178,8 @@ def _jvm_gc(spark) -> None:
     """One explicit full GC, called between suite passes (never inside
     a timed region): ContextCleaner only releases dead localCheckpoint
     blocks / shuffle state after a JVM GC notices the weak refs, and on
-    an unpressured 16 GiB heap that can lag a whole bench run — the
-    accumulation suspected of killing the r12 32-core JVM. A
+    an unpressured 16 GiB heap that can lag a whole bench run, and the
+    accumulated residue can exhaust the heap and kill the JVM. A
     per-QUERY System.gc() was measured ~15% slower in total and stays
     rejected; 4 calls per run are noise."""
     try:
@@ -206,6 +210,7 @@ def main() -> None:
     sf_m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(sf_m.group(1)) if sf_m else -1.0
     spark = get_spark("bench")  # session.py silences console progress
+    cpus = spark.sparkContext.defaultParallelism  # the N of local[N]
     queries, _ = collect()
     names = sorted(queries)
 
@@ -325,6 +330,10 @@ def main() -> None:
         # the affected pass's timings include memo rebuilds, so treat
         # this run's numbers with suspicion and re-run if possible.
         "n_session_rebuilds": state["rebuilds"],
+        # where it ran: timings compare only across the same host/cores
+        "host": socket.gethostname(),
+        "nproc": len(os.sched_getaffinity(0)),
+        "SPARK_GRAFT_CPUS": cpus,
     }
     # The committed artifact records the DEFAULT (sf0.1) bench; a
     # verification run at another SF (e.g. the verify skill's sf0.01
@@ -371,8 +380,8 @@ def main() -> None:
         )
     )
     # Guarded: a gateway that dies between the last query and here must
-    # not turn an already-printed complete result into rc 1 (exactly
-    # how the r12 run ended — traceback out of spark.stop()).
+    # not turn an already-printed complete result into rc 1 with a
+    # traceback out of spark.stop().
     try:
         state["spark"].stop()
     except Exception as exc:  # noqa: BLE001

@@ -13,6 +13,9 @@ One place to encode the execution-model decisions that matter at
 - Shuffle partitions default small locally (override with
   SPARK_GRAFT_SHUFFLE); on a real cluster this would be sized to
   ~128 MB post-shuffle partitions, and AQE coalesces down anyway.
+- Generated-code cache sized to the registry, so a query shape that
+  already ran reuses its compiled classes instead of recompiling them
+  with Janino and JIT-compiling them again.
 """
 
 from __future__ import annotations
@@ -207,11 +210,26 @@ def get_spark(
         # periodic System.gc() interval (30min) never fires inside a
         # bench-length run, so on an unpressured 16 GiB ParallelGC heap
         # dead localCheckpoint blocks from ~430 query executions
-        # accumulate until the JVM dies (the r12 32-core driver-run
-        # crash signature). 90s bounds the residue to ~a pass's worth;
+        # accumulate until the heap is exhausted and the JVM dies on a
+        # long multi-pass run. 90s bounds the residue to ~a pass's worth;
         # measured whole-suite impact is inside the host noise band
         # (full GCs on this heap are tens of ms).
         .config("spark.cleaner.periodicGC.interval", "90s")
+        # Generated-code cache: Spark keeps compiled whole-stage and
+        # expression classes in a cache of this many entries (default
+        # 100). One pass over the full registry generates ~1,330
+        # distinct classes and one relational_warm pass compiles ~182,
+        # so at the default every repeated pass recompiles every query
+        # with Janino and HotSpot JIT-compiles the fresh classes again.
+        # 4096 holds a full registry pass with ~3x headroom for the
+        # test session, which runs extra shapes. It caches code, never
+        # data or results. Static conf: read once when CodeGenerator's
+        # cache is built, so it must be set on the builder.
+        # Rejected on top of it: -XX:TieredStopAtLevel=1 (C1 only).
+        # It cut sf0.01 pass CPU a further 20-27%, but made sf0.1
+        # queries 1.1-2.3x slower (q9_price_percentiles 2.67 ->
+        # 5.5-6.2 s), because C1 code is slower once work grows.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
         # Console progress bars share stdout with the driver's JSON
         # tail capture (bench.py prints its result line there); static

@@ -1,5 +1,6 @@
-"""Timing-harness logic: bench.py session-death resilience and the
-tools/qtime.py A/B equality gate.
+"""Timing-harness logic: bench.py session-death resilience, the
+tools/qtime.py A/B equality gate, and the session's generated-code
+cache that keeps warm passes from recompiling.
 
 The r12 driver bench lost its JVM gateway mid-run and the harness
 recorded 77 bogus per-query "failures" (every later py4j call raised
@@ -12,8 +13,10 @@ query-level failure as a session death.
 
 from __future__ import annotations
 
-import sys
+import importlib
+import importlib.util
 import os
+import sys
 
 import pytest
 
@@ -190,3 +193,53 @@ class TestQtimeEqualityGate:
             return spark.createDataFrame([(v,)], "x double")
 
         assert (qtime.mismatch(frame(ref), frame(got)) == []) is equal
+
+
+class TestPrivateInternals:
+    """bench._revive resets these PySpark private singletons by name.
+    Assigning a missing class attribute just creates it and leaves the
+    real singleton pointing at the dead JVM, so a PySpark upgrade that
+    renames one must fail here, not silently in a dying-JVM retry."""
+
+    @pytest.mark.parametrize(
+        "owner, attr",
+        [
+            ("pyspark.SparkContext", "_lock"),
+            ("pyspark.SparkContext", "_gateway"),
+            ("pyspark.SparkContext", "_jvm"),
+            ("pyspark.SparkContext", "_active_spark_context"),
+            ("pyspark.sql.SparkSession", "_instantiatedSession"),
+            ("pyspark.sql.SparkSession", "_activeSession"),
+            ("pyspark.sql.context.SQLContext", "_instantiatedContext"),
+        ],
+    )
+    def test_attribute_exists(self, owner, attr):
+        module, _, cls = owner.rpartition(".")
+        assert hasattr(getattr(importlib.import_module(module), cls), attr)
+
+
+class TestCodegenCache:
+    """session.get_spark sizes Spark's generated-code cache so that a
+    repeated query shape reuses its compiled classes. At Spark's
+    default (100 entries) the relational_warm workload's ~180 classes
+    evict each other and every pass recompiles all of them."""
+
+    def test_second_pass_compiles_nothing(self, spark, sf_dir):
+        from hadoop_and_spark_spark.registry import collect
+
+        spec = importlib.util.spec_from_file_location(
+            "perfbench_run", os.path.join(ROOT, "perfbench", "run.py")
+        )
+        perfbench_run = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(perfbench_run)
+        _, names = perfbench_run.WORKLOADS["relational_warm"]
+        queries, _ = collect()
+
+        def compiles_in_one_pass() -> int:
+            before = qtime.codegen_counters(spark)["janino_compiles"]
+            for name in names:
+                queries[name](spark, sf_dir).collect()
+            return qtime.codegen_counters(spark)["janino_compiles"] - before
+
+        compiles_in_one_pass()
+        assert compiles_in_one_pass() == 0

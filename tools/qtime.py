@@ -19,6 +19,10 @@ Times .collect() (the bench action) so numbers are comparable with
 BENCH_QUERIES.json rows; pass --noop to time a noop-sink write
 instead (computes every column, excludes driver row transfer).
 Prints {label: min seconds}, a variant's label being module:function.
+After the timed passes one stderr line prices the codegen layer over
+them (see codegen_counters): Janino compiles and generated classes
+(both 0 when the generated-code cache holds every shape), JIT ms and
+Metaspace MB — all read outside the timed calls.
 """
 
 from __future__ import annotations
@@ -61,6 +65,27 @@ def mismatch(ref_df, got_df) -> list[str]:
         + [f"rows only in the variant: {len(only_got)}"]
         + [f"  + {r}" for r in only_got[:N_SHOWN]]
     )
+
+
+def codegen_counters(spark) -> dict[str, float]:
+    """JVM-wide codegen readings. Janino compiles and generated-class
+    count (Spark's CodegenMetrics histograms) and HotSpot JIT compile ms
+    are cumulative since JVM start, so difference two reads to price a
+    span; Metaspace used MB (where generated classes live) is a level."""
+    jvm = spark.sparkContext._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    mgmt = jvm.java.lang.management.ManagementFactory
+    metaspace = next(
+        p for p in mgmt.getMemoryPoolMXBeans() if p.getName() == "Metaspace"
+    )
+    return {
+        "janino_compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+        "generated_classes": (
+            codegen.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount()
+        ),
+        "jit_ms": mgmt.getCompilationMXBean().getTotalCompilationTime(),
+        "metaspace_mb": round(metaspace.getUsage().getUsed() / (1 << 20), 1),
+    }
 
 
 def _variant(spec: str):
@@ -113,9 +138,20 @@ def main() -> int:
     for label in fns:
         if label not in gated:
             run(label)
+    before = codegen_counters(spark)
     passes = [{label: run(label) for label in fns} for _ in range(n_passes)]
+    after = codegen_counters(spark)
     out = {label: round(min(p[label] for p in passes), 3) for label in fns}
     print(json.dumps(out, indent=1))
+    spent = " ".join(
+        f"{k}={after[k] - before[k]}"
+        for k in ("janino_compiles", "generated_classes", "jit_ms")
+    )
+    print(
+        f"# qtime codegen over {n_passes} timed passes: {spent} "
+        f"metaspace_mb={after['metaspace_mb']}",
+        file=sys.stderr,
+    )
     spark.stop()
     return 0
 

@@ -21,13 +21,12 @@ flap up to 7x on identical plans, while the min of interleaved
 passes tracks the plan's actual cost.
 
 Memoized queries: several registered queries serve a per-(session,
-corpus) derived artifact (dup pair graph, trained models, replay
-streams, IVF index) from a session memo, so their warm rows price the
-serving read, not the build — the deployment contract of an index or
-stream. To keep the artifact self-describing, bench detects memo
-usage mechanically (session_memo call counting during the warm-up
-pass + the known module-local caches) and re-times each such query
-COLD (all session caches cleared) after the timed passes — min of two
+corpus) derived artifact (dup pair graph, trained models, converged
+ranks, replay streams, IVF index) from the session memo, so their warm
+rows price the serving read, not the build — the deployment contract
+of an index or stream. To keep the artifact self-describing, bench
+detects memo usage mechanically (session_memo call counting,
+maintenance.MEMO_TOUCHES) and re-times each such query COLD (all session caches cleared) after the timed passes — min of two
 interleaved cold passes, since a single end-of-session sample can be
 inflated several-fold by GC/page-cache stalls; the cold numbers land
 under "memoized" in BENCH_QUERIES.json next to the warm rows.
@@ -60,20 +59,6 @@ from hadoop_and_spark_spark.sources import maintenance
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 N_SLOWEST_INLINE = 10  # per-query entries that fit the driver's tail window
-
-# Queries served from module-local model caches that do NOT route
-# through maintenance.session_memo (whose calls are detected
-# mechanically via MEMO_TOUCHES): IVF centroid/inverted-file memos,
-# the k-means model, converged PageRank ranks. Their warm rows also
-# need a cold twin in the artifact.
-EXTRA_MEMOIZED = {
-    "knn_ivf",
-    "knn_ivf_persisted",
-    "kmeans_centroids",
-    "knn_ivf_kmeans",
-    "personalized_pagerank",
-    "pagerank_top_nodes",
-}
 
 # One session death is survivable noise; repeated deaths mean the host
 # or the code is sick and the run must fail loudly instead of looping.
@@ -221,14 +206,13 @@ def main() -> None:
     # — the reference's own phase-handoff design — so the steady-state
     # numbers below price the extract/search step, with the iterative
     # compute paid in the warm-up pass. The COLD cost (training
-    # included) is published separately by tools/scaling_probe.py,
-    # which clears the memo caches before every timed run.
+    # included) is re-timed below, after the session memo is cleared.
     # (A forced System.gc() between queries was tried and rejected —
     # ~15% slower TOTAL, measured twice; the interleaved-pass min
     # handles the rare GC flap instead.)
 
     failed: set[str] = set()
-    memo_users: set[str] = set(EXTRA_MEMOIZED)
+    memo_users: set[str] = set()
     state = {"spark": spark, "revive": _revive, "rebuilds": 0}
 
     def run_one(name: str) -> float:
@@ -281,8 +265,7 @@ def main() -> None:
         total += dt
 
     # Cold re-pricing of every memo-served query (detected
-    # mechanically via session_memo call counting during the warm-up
-    # pass, plus the module-local model caches): the warm rows above
+    # mechanically via session_memo call counting): the warm rows above
     # measure the serving contract (index built once, queries seek);
     # cold_s measures the BUILD — both belong in the artifact so a
     # 0.02 s cached read can't be mistaken for pipeline cost.
@@ -338,13 +321,13 @@ def main() -> None:
     # The committed artifact records the DEFAULT (sf0.1) bench; a
     # verification run at another SF (e.g. the verify skill's sf0.01
     # drive) writes a sibling file instead of silently clobbering the
-    # round's published detail.
+    # published detail.
     # realpath both sides: a trailing slash or symlinked SF dir must
     # still update the committed artifact, not a gitignored sibling.
     # SPARK_GRAFT_BENCH_PUBLISH=1 marks an INTENTIONAL regeneration of
     # the committed artifact; without it (e.g. the driver's own
     # post-commit rerun) the detail goes to a gitignored _run sibling,
-    # so a round can never end with a timing-jitter-dirty tree.
+    # so a bench run never leaves a timing-jitter-dirty tree.
     publish = os.environ.get("SPARK_GRAFT_BENCH_PUBLISH") == "1"
     if os.path.realpath(SF_DIR) == os.path.realpath("/root/testdata/sf0.1"):
         detail_name = (

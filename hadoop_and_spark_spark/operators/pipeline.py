@@ -96,9 +96,10 @@ def corpus_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the kept-set-equality test pins them against the standalone
     # stages). The pre-fusion plan composed them as two more scans
     # joined on doc_id: 8 documents scans and 9 join nodes; this plan
-    # has 5 and 6 (plans/r12/corpus_training_set_*; guide §2.4 — the
-    # join's only purpose was to re-attach a predicate already
-    # computable in place).
+    # has 5 and 6 (`git show
+    # 79dd7a2:plans/r12/corpus_training_set_{before,after}.txt`; guide
+    # §2.4 — the join's only purpose was to re-attach a predicate
+    # already computable in place).
     gated = (
         fan_out(load_table(spark, sf_dir, "documents"))
         .where(

@@ -69,12 +69,12 @@ def _keyed_lock(locks: dict, key) -> object:
 
     Registered queries may run on concurrent threads with no
     cross-query serialization (tests' run_queries_concurrently), so
-    all shared state is locked at its source: session memos and
-    on-disk builds here, the similarity/graph model caches, the replay
-    shuffle-partition pin (streaming/runtime.py, refcounted), the
-    memory-sink sequence (trending._SEQ_LOCK) and scoped SQL-conf
-    mutation (catalog._CONF_LOCK). A new module-level mutable cache
-    MUST take a per-key lock through this helper as well."""
+    all shared state is locked at its source: the session memo and
+    on-disk builds here, the replay shuffle-partition pin
+    (streaming/runtime.py, refcounted), the memory-sink sequence
+    (trending._SEQ_LOCK) and scoped SQL-conf mutation
+    (catalog._CONF_LOCK). An in-session artifact cache is a
+    ``session_memo`` call, not a new module-level dict."""
     with _LOCK_GUARD:
         return locks.setdefault(key, threading.Lock())
 
@@ -119,13 +119,12 @@ def build_once(out_path: str, marker: str, build) -> bool:
 _SESSION_MEMO: dict[tuple[str, str], object] = {}
 _MEMO_LOCKS: dict[tuple[str, str], object] = {}
 
-# Guards ITERATION + MUTATION of every shared artifact cache (the
-# session memo here and the similarity-module model caches). The
-# per-KEY locks above serialize same-artifact builds but still allow
-# thread A to insert key X while thread B's evict_superseded iterates
-# the same dict for key Y — CPython raises 'dictionary changed size
-# during iteration'. All cache inserts/evictions/clears take THIS
-# lock; it is never held across a Spark call (unpersist runs outside).
+# Guards every iteration and mutation of _SESSION_MEMO. The per-key
+# locks above serialize same-artifact builds but still let thread A
+# insert key X while thread B scans the dict for key Y's superseded
+# entries, and an unlocked scan raises 'dictionary changed size
+# during iteration'. Never held across a Spark call: unpersist runs
+# after it is released.
 _CACHE_LOCK = threading.Lock()
 
 # Total session_memo calls (hits AND builds). bench.py diffs this
@@ -135,25 +134,12 @@ MEMO_TOUCHES = 0
 
 
 def clear_session_caches() -> None:
-    """Clear EVERY in-session derived-artifact cache: the central
-    session memo plus the module-local model caches (IVF centroids,
-    k-means models, converged PageRank). Used by bench.py and
-    tools/scaling_probe.py to price COLD runs honestly; persisted
+    """Clear the in-session derived-artifact memo. Used by bench.py
+    and tools/scaling_probe.py to price COLD runs honestly; persisted
     on-disk artifacts (build_once markers) are deliberately left —
     those are built once across sessions by contract."""
-    from ..operators.graph import _RANKS_CACHE
-    from ..operators.similarity import (
-        _IVF_CACHE,
-        _KMEANS_CACHE,
-        _PERSISTED_CENT_CACHE,
-    )
-
     with _CACHE_LOCK:
         _SESSION_MEMO.clear()
-        _IVF_CACHE.clear()
-        _KMEANS_CACHE.clear()
-        _PERSISTED_CENT_CACHE.clear()
-        _RANKS_CACHE.clear()
 
 
 def _try_unpersist(obj) -> None:
@@ -172,65 +158,29 @@ def _try_unpersist(obj) -> None:
             pass
 
 
-def _pop_superseded(cache: dict, key: tuple[str, str]) -> list:
-    """Under _CACHE_LOCK (caller holds it): remove and return the
-    values whose key shares ``key``'s (applicationId, table path,
-    artifact version) but a DIFFERENT source mtime/size."""
+def _memo_insert(key: tuple[str, str], value) -> None:
+    """Insert ``value`` into the session memo and evict, in the same
+    _CACHE_LOCK hold, every entry with ``key``'s (applicationId, table
+    path, artifact version) but a DIFFERENT source mtime/size — the
+    entries an in-place table rewrite superseded. One atomic mutation,
+    so no concurrent same-table build can slip an entry in between
+    the scan and the insert; without the eviction every rewrite would
+    leak the old entry (and its checkpoint blocks) for the application
+    lifetime. The victims' unpersist (a Py4J call) runs after the lock
+    is released."""
     app, marker = key
     # rsplit, not split: the marker tail (mtime|size|version) is
     # '|'-free by construction (source_marker), but the PATH prefix
     # is user-controlled — a table path containing '|' would
     # over-split a plain split() and silently skip eviction.
-    parts = marker.rsplit("|", 3)
-    if len(parts) != 4:
-        return []
-    path, _mt, _sz, version = parts
-    victims = []
-    for k in [k for k in cache if k != key and k[0] == app]:
-        kp = k[1].rsplit("|", 3)
-        if len(kp) == 4 and kp[0] == path and kp[3] == version:
-            victims.append(cache.pop(k))
-    return victims
-
-
-def evict_superseded(cache: dict, key: tuple[str, str]) -> None:
-    """Drop cache entries for the same (applicationId, table path,
-    artifact version) as ``key`` but a DIFFERENT source mtime/size —
-    i.e. entries superseded by an in-place table rewrite. Without this
-    every rewrite would leak the old entry (and its localCheckpoint
-    blocks) for the application lifetime. Shared by the central
-    session_memo and the similarity-module model caches.
-
-    Iterates under _CACHE_LOCK: concurrent sweep threads holding
-    OTHER keys' build locks may insert into the same dict, and an
-    unlocked scan races their resize. The superseded values'
-    unpersist (a Py4J call) runs after the lock is released.
-
-    NOTE for new build sites: use ``insert_evicting`` (evict + insert
-    as one atomic mutation) — calling this function followed by a
-    bare dict insert reopens the window it closes."""
+    path, _mt, _sz, version = marker.rsplit("|", 3)
     with _CACHE_LOCK:
-        victims = _pop_superseded(cache, key)
-    for v in victims:
-        _try_unpersist(v)
-
-
-def cache_get(cache: dict, key):
-    """Shared-cache read under _CACHE_LOCK (a bare dict.get is safe in
-    CPython, but taking the lock keeps every access to these dicts on
-    one discipline and costs nothing off the contended path)."""
-    with _CACHE_LOCK:
-        return cache.get(key)
-
-
-def insert_evicting(cache: dict, key: tuple[str, str], value) -> None:
-    """The evict-superseded + insert pair as ONE atomic cache
-    mutation — every shared-cache build site uses this, so no window
-    exists where a concurrent same-table build could slip a second
-    entry in between the eviction scan and the insert."""
-    with _CACHE_LOCK:
-        victims = _pop_superseded(cache, key)
-        cache[key] = value
+        victims = []
+        for k in [k for k in _SESSION_MEMO if k != key and k[0] == app]:
+            kp = k[1].rsplit("|", 3)
+            if len(kp) == 4 and kp[0] == path and kp[3] == version:
+                victims.append(_SESSION_MEMO.pop(k))
+        _SESSION_MEMO[key] = value
     for v in victims:
         _try_unpersist(v)
 
@@ -268,16 +218,19 @@ def artifact_checkpoint(df, eager: bool = True):
 
 def session_memo(spark: SparkSession, sf_dir: str, table: str, version: str, build):
     """In-session twin of ``build_once``: memoize a derived artifact
-    (checkpointed frame, trained model, pair graph) per
-    (applicationId, source_marker) — the phase-handoff pattern the
-    PageRank/k-means/IVF memos share, centralized. The source marker
-    (path + mtime_ns + size) invalidates the memo when the source
-    table is rewritten in-place, and inserting the fresh entry EVICTS
-    the superseded one (same app/table/version, older marker) so dead
+    (checkpointed frame, trained model, converged ranks, IVF index,
+    pair graph) per (applicationId, source_marker) — the one
+    phase-handoff cache of the package. The source marker (path +
+    mtime_ns + size) invalidates the memo when the source table is
+    rewritten in-place, and inserting the fresh entry EVICTS the
+    superseded one (same app/table/version, older marker) so dead
     checkpoint blocks don't accumulate across rewrites; a new session
     starts cold (checkpoint blocks die with the application).
-    tools/scaling_probe.py clears this dict so published cold numbers
-    include the build."""
+    clear_session_caches empties it so cold runs include the build.
+
+    Call sites import this function inside their bodies, so a wrapper
+    installed on the module attribute (the benchmark tracer) sees
+    every call."""
     global MEMO_TOUCHES
     MEMO_TOUCHES += 1
     key = (spark.sparkContext.applicationId, source_marker(sf_dir, table, version))
@@ -290,7 +243,7 @@ def session_memo(spark: SparkSession, sf_dir: str, table: str, version: str, bui
             hit = _SESSION_MEMO.get(key)
         if hit is None:
             hit = build()
-            insert_evicting(_SESSION_MEMO, key, hit)
+            _memo_insert(key, hit)
     return hit
 
 
@@ -299,7 +252,7 @@ def evict_version(version: str) -> None:
     matches — the supported test-facing way to force a rebuild of one
     artifact family (the budget-guard and recovery-contract tests
     need a memo MISS so the build path actually runs). Matches on the
-    marker's version field proper (rsplit, the _pop_superseded
+    marker's version field proper (rsplit, the _memo_insert
     discipline), not a substring of the whole key, so a path that
     happens to contain the version string can't be swept by accident.
     Unpersist of evicted values runs outside the lock, as everywhere."""

@@ -1,14 +1,13 @@
-"""Timing-harness logic: bench.py session-death resilience, the
-tools/qtime.py A/B equality gate, and the session's generated-code
-cache that keeps warm passes from recompiling.
+"""Timing-harness logic: bench.py session-death resilience and memo
+detection, the tools/qtime.py A/B equality gate, and the session's
+generated-code cache that keeps warm passes from recompiling.
 
-The r12 driver bench lost its JVM gateway mid-run and the harness
-recorded 77 bogus per-query "failures" (every later py4j call raised
-[Errno 111]) plus rc 1 from the final spark.stop(). These tests pin
-the fix's decision logic WITHOUT a dying JVM: the death classifier
-walks exception chains correctly, and timed_run revives + retries
-exactly once per death, caps total rebuilds, and never treats a
-query-level failure as a session death.
+A lost JVM gateway makes every later py4j call raise [Errno 111]; the
+harness must not record those as per-query failures or turn the final
+spark.stop() into rc 1. These tests pin that decision logic WITHOUT a
+dying JVM: the death classifier walks exception chains correctly, and
+timed_run revives + retries exactly once per death, caps total
+rebuilds, and never treats a query-level failure as a session death.
 """
 
 from __future__ import annotations
@@ -243,3 +242,40 @@ class TestCodegenCache:
 
         compiles_in_one_pass()
         assert compiles_in_one_pass() == 0
+
+
+class TestMemoDetection:
+    """bench.py tags a query as memo-served when its call advances
+    maintenance.MEMO_TOUCHES, and re-times it cold after
+    clear_session_caches. Every in-session model cache is the session
+    memo, so the counter finds these queries with no hand-kept list,
+    and the clear really drops their artifacts."""
+
+    @pytest.mark.parametrize(
+        "name",
+        [
+            "knn_ivf",
+            "knn_ivf_persisted",
+            "kmeans_centroids",
+            "knn_ivf_kmeans",
+            "personalized_pagerank",
+            "pagerank_top_nodes",
+        ],
+    )
+    def test_query_touches_session_memo(self, spark, sf_dir, name):
+        from hadoop_and_spark_spark.registry import collect
+        from hadoop_and_spark_spark.sources import maintenance
+
+        queries, _ = collect()
+        before = maintenance.MEMO_TOUCHES
+        queries[name](spark, sf_dir)
+        assert maintenance.MEMO_TOUCHES > before
+
+    def test_clear_drops_converged_ranks(self, spark, sf_dir):
+        from hadoop_and_spark_spark.operators.graph import converged_lineitem_ranks
+        from hadoop_and_spark_spark.sources import maintenance
+
+        first = converged_lineitem_ranks(spark, sf_dir)
+        assert converged_lineitem_ranks(spark, sf_dir) is first
+        maintenance.clear_session_caches()
+        assert converged_lineitem_ranks(spark, sf_dir) is not first

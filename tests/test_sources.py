@@ -542,11 +542,20 @@ def test_session_memo_evicts_superseded_entries(spark, sf_dir, tmp_path):
     assert len(matching) == 1, matching  # superseded entry evicted
 
 
-def test_evict_superseded_unpersists_stale_values():
-    """The eviction helper must release the superseded value's cached
-    blocks (DataFrames directly or inside tuples) and leave unrelated
-    entries alone."""
-    from hadoop_and_spark_spark.sources.maintenance import evict_superseded
+def _drop_memo_app(app: str) -> None:
+    """Remove a test's synthetic entries from the shared session memo."""
+    from hadoop_and_spark_spark.sources import maintenance as m
+
+    with m._CACHE_LOCK:
+        for k in [k for k in m._SESSION_MEMO if k[0] == app]:
+            del m._SESSION_MEMO[k]
+
+
+def test_memo_insert_unpersists_superseded_values():
+    """Inserting a memo entry must release the superseded value's
+    cached blocks (DataFrames directly or inside tuples) and leave
+    unrelated entries alone."""
+    from hadoop_and_spark_spark.sources import maintenance as m
 
     class Frame:
         def __init__(self):
@@ -555,17 +564,21 @@ def test_evict_superseded_unpersists_stale_values():
         def unpersist(self):
             self.released = True
 
+    app = "test-memo-insert"
     stale, fresh, other = Frame(), Frame(), Frame()
-    cache = {
-        ("app", "/t/docs.parquet|1|10|v1"): ("model", stale),
-        ("app", "/t/other.parquet|1|10|v1"): other,
-    }
-    new_key = ("app", "/t/docs.parquet|2|11|v1")
-    evict_superseded(cache, new_key)
-    cache[new_key] = fresh
-    assert stale.released and not other.released and not fresh.released
-    assert ("app", "/t/docs.parquet|1|10|v1") not in cache
-    assert ("app", "/t/other.parquet|1|10|v1") in cache
+    old_key = (app, "/t/docs.parquet|1|10|v1")
+    other_key = (app, "/t/other.parquet|1|10|v1")
+    new_key = (app, "/t/docs.parquet|2|11|v1")
+    try:
+        m._memo_insert(old_key, ("model", stale))
+        m._memo_insert(other_key, other)
+        m._memo_insert(new_key, fresh)
+        assert stale.released and not other.released and not fresh.released
+        assert old_key not in m._SESSION_MEMO
+        assert m._SESSION_MEMO[other_key] is other
+        assert m._SESSION_MEMO[new_key] is fresh
+    finally:
+        _drop_memo_app(app)
 
 
 def test_mem_bytes_tolerates_sloppy_specs():
@@ -630,37 +643,45 @@ def test_scoped_conf_is_thread_safe(spark):
 
 
 def test_cache_mutation_is_safe_under_concurrent_inserts():
-    """Round-9 advice: evict_superseded iterated a shared cache dict
-    while per-KEY locks still allowed a thread holding a DIFFERENT
-    key's lock to insert concurrently — CPython raises 'dictionary
-    changed size during iteration'. All mutation now goes through
-    insert_evicting under one cache-wide lock; this stress drives
-    many threads through interleaved insert+evict cycles on one dict
-    (the unlocked form fails this reliably at these sizes)."""
+    """Per-KEY build locks let a thread holding one key's lock insert
+    into the session memo while another thread scans it for a
+    different key's superseded entries; an unlocked scan raises
+    'dictionary changed size during iteration'. Every memo mutation
+    therefore runs under the one _CACHE_LOCK. This stress drives many
+    threads through interleaved insert+evict cycles on the memo (the
+    unlocked form fails it)."""
+    import sys
     import threading
 
-    from hadoop_and_spark_spark.sources.maintenance import (
-        evict_superseded,
-        insert_evicting,
-    )
+    from hadoop_and_spark_spark.sources import maintenance as m
 
-    cache: dict = {}
+    app = "test-memo-stress"
     errs: list[str] = []
 
     def worker(tid: int) -> None:
         try:
             for i in range(300):
-                key = ("app", f"/t/tab{tid}_{i % 7}.parquet|{i}|{i}|v1")
-                insert_evicting(cache, key, object())
-                evict_superseded(
-                    cache, ("app", f"/t/tab{tid}_{i % 7}.parquet|{i + 1}|{i}|v1")
-                )
+                path = f"/t/tab{tid}_{i % 7}.parquet"
+                # insert, then supersede it: the second insert evicts
+                # the first under the same lock hold
+                m._memo_insert((app, f"{path}|{i}|{i}|v1"), object())
+                m._memo_insert((app, f"{path}|{i + 1}|{i}|v1"), object())
         except Exception as exc:  # noqa: BLE001
             errs.append(repr(exc))
 
     threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs, errs[:3]
+    # A tiny GIL switch interval makes threads preempt each other
+    # inside the scan, so the race shows on every run, not by luck.
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errs, errs[:3]
+        # each (thread, path) keeps exactly its latest entry
+        assert sum(k[0] == app for k in list(m._SESSION_MEMO)) == 8 * 7
+    finally:
+        sys.setswitchinterval(interval)
+        _drop_memo_app(app)

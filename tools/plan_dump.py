@@ -3,10 +3,10 @@
 Usage: python tools/plan_dump.py <out_dir> [query ...]
 
 Writes <out_dir>/<query>.txt for each query (all registered queries
-when none are named). Used by the optimization rounds to capture
-before/after plan shapes (plans/r12/...). Plans are captured without
-executing the query, so memo-served queries show the SERVING plan
-only when the memo is already built; this tool runs each query's
+when none are named). Captures before/after plan shapes of an
+optimization (e.g. `git show 79dd7a2:plans/r12/<query>_after.txt`).
+Plans are captured without executing the query, so memo-served
+queries show the SERVING plan only when the memo is already built; this tool runs each query's
 builder fresh in a new session, which is the cold (build) plan — the
 shape the judge checks claims against.
 """

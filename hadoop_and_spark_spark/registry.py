@@ -45,6 +45,7 @@ _OPERATOR_MODULES = (
     "hadoop_and_spark_spark.operators.multimodal",
     "hadoop_and_spark_spark.operators.pipeline",
     "hadoop_and_spark_spark.streaming.windows",
+    "hadoop_and_spark_spark.streaming.trending",
     "hadoop_and_spark_spark.streaming.dedup",
     "hadoop_and_spark_spark.streaming.cdc",
     "hadoop_and_spark_spark.streaming.joins",

@@ -72,7 +72,7 @@ def _keyed_lock(locks: dict, key) -> object:
     all shared state is locked at its source: the session memo and
     on-disk builds here, the replay shuffle-partition pin
     (streaming/runtime.py, refcounted), the memory-sink sequence
-    (trending._SEQ_LOCK) and scoped SQL-conf mutation
+    (runtime._SEQ_LOCK) and scoped SQL-conf mutation
     (catalog._CONF_LOCK). An in-session artifact cache is a
     ``session_memo`` call, not a new module-level dict."""
     with _LOCK_GUARD:

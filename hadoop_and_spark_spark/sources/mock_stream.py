@@ -1,4 +1,6 @@
-"""Deterministic replayable stream source for tests.
+"""Deterministic replayable stream sources: the scripted replay
+files behind every registered streaming query (streaming/runtime.py
+runs them) and the streaming unit tests.
 
 Reference (S7/T1): sorted per-minute part files → queue of RDDs →
 `queueStream` driven by a ManualClock (a7/EventCount.scala:62-83,
@@ -170,10 +172,14 @@ def write_scripted_batches(dfs: list[DataFrame], out_dir: str) -> int:
     return len(dfs)
 
 
-def read_replay_stream(spark: SparkSession, dir_path: str, schema) -> DataFrame:
-    """File-source stream over the replay dir, one file per trigger."""
+def read_replay_stream(
+    spark: SparkSession, dir_path: str, schema, fmt: str = "parquet"
+) -> DataFrame:
+    """File-source stream over the replay dir (or file glob), one file
+    per trigger."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(dir_path)
+        .format(fmt)
+        .load(dir_path)
     )

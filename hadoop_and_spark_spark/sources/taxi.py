@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .mock_stream import read_replay_stream
+
 # (lon_min, lon_max, lat_min, lat_max), RegionEventCount.scala:67-75
 GOLDMAN = (-74.0144185, -74.013777, 40.7138745, 40.7152275)
 CITIGROUP = (-74.012083, -74.009867, 40.720053, 40.7217236)
@@ -57,12 +59,9 @@ def read_taxi_csv_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     """The same positional projection over a file-source STREAM — the
     reference's actual deployment shape (a7 consumed the taxi feed as
     a DStream; here the CSV directory is the micro-batch source)."""
-    raw = (
-        spark.readStream.schema(_TAXI_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .csv(dir_path)
+    return _taxi_projection(
+        read_replay_stream(spark, dir_path, _TAXI_SCHEMA, fmt="csv")
     )
-    return _taxi_projection(raw)
 
 
 def in_bbox(lon: Column, lat: Column, bbox: tuple[float, float, float, float]) -> Column:

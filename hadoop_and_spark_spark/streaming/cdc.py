@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .runtime import start_and_await
-
 _CDC_COLS = "user_id long, ts timestamp, event_type string, event_id long"
 
 
@@ -48,18 +46,14 @@ def cdc_upsert_stream(spark, sf_dir: str) -> DataFrame:
 def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
 
-    from ..sources.maintenance import build_once, merge_upsert, source_marker
-    from .trending import weekly_replay_path, write_weekly_replay
+    from ..sources.maintenance import merge_upsert
+    from ..sources.mock_stream import read_replay_stream
+    from .runtime import scratch_dir, start_and_await
+    from .trending import weekly_replay_source
 
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    work = tempfile.mkdtemp(prefix="hs_cdc_")
+    src = weekly_replay_source(spark, sf_dir)
+    work = scratch_dir("cdc")
     table = os.path.join(work, "table")
     # versioned changelog row: (ts, event_id) is a unique per-key total
     # order, so max_by on it IS "latest"
@@ -77,13 +71,9 @@ def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(table)
         os.replace(staged, table)
 
-    stream = (
-        spark.readStream.schema(_CDC_COLS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
     writer = (
-        stream.writeStream.foreachBatch(apply_batch)
+        read_replay_stream(spark, src, _CDC_COLS)
+        .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", os.path.join(work, "ckpt"))
         .trigger(availableNow=True)
     )

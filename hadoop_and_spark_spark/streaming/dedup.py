@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .runtime import start_and_await
+from .runtime import run_replay
 
 
 def streaming_dedup_exact(
@@ -74,33 +74,19 @@ def write_doc_replay(spark, sf_dir: str, out_path: str) -> None:
     replay; files 1..N-1 additionally RE-DELIVER bucket 0's lowest
     doc_ids so every later batch contains exact re-arrivals the
     dedup state must drop."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
-
     from ..catalog import load_table
+    from ..sources.mock_stream import write_scripted_batches
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     rearrivals = docs.where(
         (F.col("doc_id") % DOC_REPLAY_BUCKETS == 0)
         & (F.col("doc_id") < REARRIVAL_IDS_LT)
     )
-    os.makedirs(out_path, exist_ok=True)
-    base = time.time()
+    batches = []
     for k in range(DOC_REPLAY_BUCKETS):
         part = docs.where(F.col("doc_id") % DOC_REPLAY_BUCKETS == k)
-        if k > 0:
-            part = part.unionByName(rearrivals)
-        stage = os.path.join(out_path, "_stage")
-        part.coalesce(1).write.mode("overwrite").parquet(stage)
-        (pf,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(out_path, f"b{k:03d}.parquet")
-        os.replace(pf, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (base + k, base + k))
+        batches.append(part.unionByName(rearrivals) if k > 0 else part)
+    write_scripted_batches(batches, out_path)
 
 
 def dedup_exact_stream(spark, sf_dir: str) -> DataFrame:
@@ -132,34 +118,20 @@ def dedup_exact_stream(spark, sf_dir: str) -> DataFrame:
 
 
 def _run_dedup_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.maintenance import build_once, source_marker
 
     src = doc_replay_path(sf_dir)
     build_once(
         src,
-        source_marker(sf_dir, "documents", "docdedup_v1"),
+        source_marker(sf_dir, "documents", "docdedup_v2"),
         lambda: write_doc_replay(spark, sf_dir, src),
     )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*.parquet")
-    )
-    out = streaming_dedup_exact(stream).select("text_md5")
-    from .trending import register_sink
-
-    qname = register_sink("dedup_stream", sf_dir)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_dedup_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).sortWithinPartitions("text_md5")
+    return run_replay(
+        spark, sf_dir, "dedup_stream", src + "/part-*.parquet",
+        "doc_id long, text string",
+        lambda stream: streaming_dedup_exact(stream).select("text_md5"),
+        "append",
+    ).sortWithinPartitions("text_md5")
 
 
 # ------------------------------- bounded-state (watermarked) variant
@@ -204,14 +176,9 @@ def write_doc_timed_replay(spark, sf_dir: str, out_path: str) -> None:
     eviction. min() keeps the selection deterministic and DuckDB-
     mirrorable."""
     import datetime as dt
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import functions as F
 
     from ..catalog import load_table
+    from ..sources.mock_stream import write_scripted_batches
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -224,22 +191,17 @@ def write_doc_timed_replay(spark, sf_dir: str, out_path: str) -> None:
         & (F.col("doc_id") < REARRIVAL_IDS_LT)
     )
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    os.makedirs(out_path, exist_ok=True)
-    base = time.time()
+    batches = []
     for k in range(DOC_REPLAY_BUCKETS):
         part = docs.where(F.col("doc_id") % DOC_REPLAY_BUCKETS == k)
         if k in (REDELIVER_WITHIN_IDX, REDELIVER_BEYOND_IDX):
             part = part.unionByName(rearrivals)
-        part = part.withColumn(
-            "ts", F.lit(t0 + dt.timedelta(hours=k)).cast("timestamp")
+        batches.append(
+            part.withColumn(
+                "ts", F.lit(t0 + dt.timedelta(hours=k)).cast("timestamp")
+            )
         )
-        stage = os.path.join(out_path, "_stage")
-        part.coalesce(1).write.mode("overwrite").parquet(stage)
-        (pf,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        dest = os.path.join(out_path, f"b{k:03d}.parquet")
-        os.replace(pf, dest)
-        shutil.rmtree(stage)
-        os.utime(dest, (base + k, base + k))
+    write_scripted_batches(batches, out_path)
 
 
 def dedup_bounded_stream(spark, sf_dir: str) -> DataFrame:
@@ -267,37 +229,22 @@ def dedup_bounded_stream(spark, sf_dir: str) -> DataFrame:
 
 
 def _run_bounded_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.maintenance import build_once, source_marker
-    from .trending import register_sink
 
     src = timed_doc_replay_path(sf_dir)
     build_once(
         src,
-        source_marker(sf_dir, "documents", "docdedupwm_v2"),
+        source_marker(sf_dir, "documents", "docdedupwm_v3"),
         lambda: write_doc_timed_replay(spark, sf_dir, src),
     )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*.parquet")
-    )
-    out = streaming_dedup_exact(
-        stream, watermark=("ts", DEDUP_WM_DELAY)
-    ).select("text_md5")
-    qname = register_sink("dedupwm_stream", sf_dir)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="hs_dedupwm_ck_")
-        )
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).sortWithinPartitions("text_md5")
+    return run_replay(
+        spark, sf_dir, "dedupwm_stream", src + "/part-*.parquet",
+        "doc_id long, text string, ts timestamp",
+        lambda stream: streaming_dedup_exact(
+            stream, watermark=("ts", DEDUP_WM_DELAY)
+        ).select("text_md5"),
+        "append",
+    ).sortWithinPartitions("text_md5")
 
 
 QUERIES = {

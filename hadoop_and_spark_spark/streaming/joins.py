@@ -22,11 +22,11 @@ Two shapes a production event pipeline needs that windowed aggregation
   watermark passes `ts + 24 h` — without the bound the click state
   grows forever. Inner join ⇒ append-mode output per match.
 
-Both are REGISTERED driver queries (round 6): the weekly replay makes
-each deterministic and finite, so `tier_counts_stream` (T8) and
+Both are REGISTERED driver queries: the weekly replay makes each
+deterministic and finite, so `tier_counts_stream` (T8) and
 `purchase_click_pairs` (T9) run real incremental execution under the
 driver's hash gate with full DuckDB oracles; the batch↔stream duality
-tests (`tests/test_stream_joins.py`) remain as the unit-level pins.
+tests (`tests/test_stream_joins.py`) are the unit-level pins.
 """
 
 from __future__ import annotations
@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.temporal import ASOF_LEFT_TYPE, ASOF_RIGHT_TYPE
+from .runtime import run_replay
+from .trending import weekly_replay_source
 
 TIER_SPLIT = 50.7  # per-user mean value splitting low/high profile tiers
 PAIR_WINDOW = "24 hours"
@@ -137,13 +139,8 @@ def purchase_click_pairs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ registered driver queries
 #
-# The weekly replay (streaming/trending.py) makes both join shapes
-# deterministic and finite, so T8/T9 are now driver-registrable after
-# all — each runs REAL incremental execution under the hash gate with
-# a full DuckDB oracle, not just the batch-duality unit test.
-
-from .runtime import start_and_await  # noqa: E402
-from .trending import register_sink  # noqa: E402 — after module docs
+# Each runs its join shape over the weekly replay (streaming/
+# trending.py) through runtime.run_replay.
 
 
 def tier_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,34 +163,15 @@ def tier_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_tier_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .trending import weekly_replay_path, write_weekly_replay
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-        .withWatermark("ts", "1 hour")
-    )
-    agg = enriched_tier_counts(stream, user_profiles(spark, sf_dir))
-    qname = register_sink("tier_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_tier_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("tier", "window_start")
+    profiles = user_profiles(spark, sf_dir)
+    return run_replay(
+        spark, sf_dir, "tier_stream", weekly_replay_source(spark, sf_dir),
+        "ts timestamp, user_id bigint",
+        lambda stream: enriched_tier_counts(
+            stream.withWatermark("ts", "1 hour"), profiles
+        ),
+        "update",
+    ).orderBy("tier", "window_start")
 
 
 def purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,31 +197,12 @@ def purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_pair_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .trending import weekly_replay_path, write_weekly_replay
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = spark.readStream.schema(
-        "event_id bigint, event_type string, ts timestamp, user_id bigint"
-    ).option("maxFilesPerTrigger", 1).parquet(src + "/wk*.parquet")
-    pairs = purchase_click_pairs_stream(stream)
-    qname = register_sink("pair_stream", sf_dir)
-    writer = (
-        pairs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_pair_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).sortWithinPartitions("purchase_id", "click_id")
+    return run_replay(
+        spark, sf_dir, "pair_stream", weekly_replay_source(spark, sf_dir),
+        "event_id bigint, event_type string, ts timestamp, user_id bigint",
+        purchase_click_pairs_stream,
+        "append",
+    ).sortWithinPartitions("purchase_id", "click_id")
 
 
 QUERIES = {

@@ -1,20 +1,28 @@
-"""Replay-stream runtime: state partitioning sized to the micro-batch
-volume.
+"""Replay-stream runtime: the one place a registered stream runs.
 
-Every stateful streaming operator (windowed aggregation, streaming
-dedup, stream-stream join, session windows) commits one state-store
-delta file per shuffle partition per micro-batch — for a stream-stream
-join, four stores per partition. The weekly-replay harness delivers a
-few thousand rows per micro-batch, so running its stateful plans at
-the session-wide ``spark.sql.shuffle.partitions`` (sized for batch
+``run_replay`` owns the harness every registered replay query shares:
+a one-file-per-trigger file source over a scripted replay directory,
+a memory sink with a unique per-corpus name, a fresh checkpoint, an
+``availableNow`` trigger that drains the replay, and the sink read
+back as a DataFrame. A query supplies only its plan (stream -> frame),
+its sink tag and its output mode. (cdc_upsert_stream, whose sink is a
+``foreachBatch`` merge, builds its own writer and shares the source
+and ``start_and_await``.)
+
+State partitioning is sized to the micro-batch volume. Every stateful
+streaming operator (windowed aggregation, streaming dedup,
+stream-stream join, session windows) commits one state-store delta
+file per shuffle partition per micro-batch — for a stream-stream
+join, four stores per partition. The replays deliver a few thousand
+rows per micro-batch, so running their stateful plans at the
+session-wide ``spark.sql.shuffle.partitions`` (sized for batch
 analytics over the corpus) pays 32x state-commit and checkpoint-fsync
 overhead for no parallelism gain: measured on the stream-stream
 interval join replay, cold wall time drops 49.7 s -> 13.7 s when state
 partitions go 32 -> 4, with byte-identical sink contents.
 
 ``start_and_await`` therefore pins ``spark.sql.shuffle.partitions`` to
-a replay-appropriate value (default 4, override with
-``$SPARK_GRAFT_STREAM_SHUFFLE``) around the stream start and restores
+``REPLAY_SHUFFLE_PARTITIONS`` (4) around the stream start and restores
 the session value afterwards. This is safe, not a semantics knob:
 
 - The partition count is captured into the checkpoint's offset-log
@@ -26,34 +34,34 @@ the session value afterwards. This is safe, not a semantics knob:
 - Row-level results are partitioning-independent — the driver's hash
   gate and every straddle/eviction witness run against the same sinks.
 
-At production scale this knob is the real tuning surface, in the other
-direction: state partitions are sized to state VOLUME and commit
-throughput (e.g. hundreds for a 100 TB/day stream so each store's
-delta stays small), never inherited incidentally from a batch-oriented
-session default. The env override models that decision.
+At production scale state partitions are sized to state VOLUME and
+commit throughput (e.g. hundreds for a 100 TB/day stream so each
+store's delta stays small), never inherited incidentally from a
+batch-oriented session default.
 """
 
 from __future__ import annotations
 
-import os
+import tempfile
 import threading
+from collections.abc import Callable
 
-REPLAY_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
+from pyspark.sql import DataFrame
+
+from ..sources.mock_stream import read_replay_stream
+
+REPLAY_SHUFFLE_PARTITIONS = "4"
 _KEY = "spark.sql.shuffle.partitions"
 
-# Refcounted pin: replay streams may now run on CONCURRENT sweep
-# threads (the per-module sweep groups), and a naive save/set/restore
-# pair interleaved across two streams can capture the OTHER stream's
-# pinned value as "prev" and leave the session pinned forever. The
-# first stream in saves the session value and sets the pin; the last
-# one out restores it; everyone in between just counts.
+# Refcounted pin: replay streams run on concurrent threads (the
+# registry-wide sweeps submit queries from a thread pool), and a naive
+# save/set/restore pair interleaved across two streams can capture the
+# OTHER stream's pinned value as "prev" and leave the session pinned
+# forever. The first stream in saves the session value and sets the
+# pin; the last one out restores it; everyone in between just counts.
 _PIN_LOCK = threading.Lock()
 _PIN_DEPTH = 0
 _PIN_PREV: str | None = None
-
-
-def replay_shuffle_partitions() -> str:
-    return os.environ.get(REPLAY_SHUFFLE_ENV, "4")
 
 
 def start_and_await(spark, writer) -> None:
@@ -68,7 +76,7 @@ def start_and_await(spark, writer) -> None:
     with _PIN_LOCK:
         if _PIN_DEPTH == 0:
             _PIN_PREV = spark.conf.get(_KEY)
-            spark.conf.set(_KEY, replay_shuffle_partitions())
+            spark.conf.set(_KEY, REPLAY_SHUFFLE_PARTITIONS)
         _PIN_DEPTH += 1
     try:
         query = writer.start()
@@ -78,3 +86,74 @@ def start_and_await(spark, writer) -> None:
             _PIN_DEPTH -= 1
             if _PIN_DEPTH == 0:
                 spark.conf.set(_KEY, _PIN_PREV)
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh per-run directory (checkpoint, foreachBatch table)."""
+    return tempfile.mkdtemp(prefix=f"hs_{tag}_")
+
+
+_STREAM_SEQ = [0]  # unique memory-sink names across repeat invocations
+_SEQ_LOCK = threading.Lock()  # guards seq + _SINKS registration
+
+# Newest memory-sink name per (tag, corpus). A replay runs once per
+# (session, corpus), but the totality sweeps run every registered
+# query against OTHER corpora too (e.g. an empty dir), each starting
+# its own stream with a fresh seq — so "the raw sink for MY corpus"
+# resolves by (tag, corpus), never by newest seq. Latest registration
+# wins per key, which is the session_memo invariant (one live replay
+# per session+corpus).
+_SINKS: dict[tuple[str, str], str] = {}
+
+
+def _corpus_digest(sf_dir: str) -> str:
+    from ..sources.maintenance import corpus_digest
+
+    return corpus_digest(sf_dir, width=8)
+
+
+def register_sink(tag: str, sf_dir: str) -> str:
+    """Allocate a unique memory-sink name for a replay stream over
+    ``sf_dir`` and record it as the newest sink for (tag, corpus).
+    The name embeds the corpus digest so sinks from different corpora
+    can never shadow each other. Locked: replay queries may run on
+    concurrent sweep threads, and a duplicated seq would alias two
+    streams onto one memory-sink table."""
+    with _SEQ_LOCK:
+        _STREAM_SEQ[0] += 1
+        qname = f"{tag}_{_corpus_digest(sf_dir)}_{_STREAM_SEQ[0]}"
+        _SINKS[(tag, _corpus_digest(sf_dir))] = qname
+    return qname
+
+
+def sink_table(spark, sf_dir: str, tag: str) -> DataFrame:
+    """The raw (pre-consolidation) memory sink of the newest ``tag``
+    stream run over ``sf_dir`` in this session. Raises KeyError if no
+    such stream has run — callers invoke the query first."""
+    return spark.table(_SINKS[(tag, _corpus_digest(sf_dir))])
+
+
+def run_replay(
+    spark,
+    sf_dir: str,
+    tag: str,
+    source_glob: str,
+    schema: str,
+    plan: Callable[[DataFrame], DataFrame],
+    mode: str,
+) -> DataFrame:
+    """Replay ``source_glob`` (one file per micro-batch) through
+    ``plan`` into a fresh memory sink in output ``mode``, drain it
+    with ``availableNow``, and return the sink table. Read-back order
+    and any consolidation are the caller's."""
+    qname = register_sink(tag, sf_dir)
+    writer = (
+        plan(read_replay_stream(spark, source_glob, schema))
+        .writeStream.format("memory")
+        .queryName(qname)
+        .outputMode(mode)
+        .option("checkpointLocation", scratch_dir(f"{tag}_ck"))
+        .trigger(availableNow=True)
+    )
+    start_and_await(spark, writer)
+    return spark.table(qname)

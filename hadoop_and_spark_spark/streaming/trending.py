@@ -14,23 +14,23 @@ streaming/windows.py::trending_arrivals_batch; tests replay the same
 events through both and cross-check the alert semantics on scripted
 burst sequences.
 
-The module also hosts the WEEKLY REPLAY harness — the events table
+The module also hosts the WEEKLY REPLAY source — the events table
 split into one parquet file per calendar week, mtime/name-ordered so
 a maxFilesPerTrigger=1 file source replays the weeks as deterministic
 micro-batches (the Structured-Streaming stand-in for the reference's
-manual-clock DStream batches) — and the three registered queries that
-run REAL streaming execution under the driver's hash gate on top of
-it: trending_arrivals_stream (T5, applyInPandasWithState),
-event_count_hourly_stream (T2) and region_event_count_stream (T3,
-both watermarked windowed aggregations whose update-mode sinks equal
-their batch twins because windows never straddle week boundaries).
-Each runs once per (session, corpus) via the session memo — a
-production stream executes continuously; re-invoking reads its sink.
+manual-clock DStream batches) — and registers the seven queries that
+run REAL streaming execution over it under the driver's hash gate:
+trending_arrivals_stream (T5, applyInPandasWithState), the hourly
+(T2), late, late-tolerated, keyed (T3) and hopping windowed counts,
+and user_sessions_stream (session windows). Each is a plan handed to
+``runtime.run_replay`` and runs once per (session, corpus) via the
+session memo — a production stream executes continuously; re-invoking
+reads its sink. Their oracles live in streaming/windows.py beside the
+batch twins they share.
 """
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
 from typing import Any
 
@@ -39,8 +39,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .runtime import start_and_await
-from .windows import TREND_FACTOR, TREND_MIN
+from .runtime import run_replay
+from .windows import (
+    _WINDOW_FMT,
+    SLIDE_HOP,
+    SLIDE_LEN,
+    TREND_FACTOR,
+    TREND_MIN,
+    _classify,
+)
 
 OUTPUT_SCHEMA = (
     "key string, cnt long, prev long, trending boolean"
@@ -98,48 +105,6 @@ def _trend_fn_week(
             "trending": [trending],
         }
     )
-
-
-_STREAM_SEQ = [0]  # unique memory-sink names across repeat invocations
-_SEQ_LOCK = threading.Lock()  # guards seq + _SINKS registration
-
-# Newest memory-sink name per (tag, corpus): replay streams run once
-# per (session, corpus), but the TOTALITY sweeps run every registered
-# query against OTHER corpora (e.g. an empty dir), each starting its
-# own stream with a fresh seq. A test that wants "the raw sink for MY
-# corpus" must therefore resolve by (tag, corpus), not by newest seq —
-# scanning seqs downward finds whichever corpus ran last (the round-6
-# full-suite ordering failure). Latest registration wins per key,
-# which is exactly the session_memo invariant (one live replay per
-# session+corpus).
-_SINKS: dict[tuple[str, str], str] = {}
-
-
-def _corpus_digest(sf_dir: str) -> str:
-    from ..sources.maintenance import corpus_digest
-
-    return corpus_digest(sf_dir, width=8)
-
-
-def register_sink(tag: str, sf_dir: str) -> str:
-    """Allocate a unique memory-sink name for a replay stream over
-    ``sf_dir`` and record it as the newest sink for (tag, corpus).
-    The name embeds the corpus digest so sinks from different corpora
-    can never shadow each other. Locked: replay queries may run on
-    concurrent sweep threads, and a duplicated seq would alias two
-    streams onto one memory-sink table."""
-    with _SEQ_LOCK:
-        _STREAM_SEQ[0] += 1
-        qname = f"{tag}_{_corpus_digest(sf_dir)}_{_STREAM_SEQ[0]}"
-        _SINKS[(tag, _corpus_digest(sf_dir))] = qname
-    return qname
-
-
-def sink_table(spark, sf_dir: str, tag: str) -> DataFrame:
-    """The raw (pre-consolidation) memory sink of the newest ``tag``
-    stream run over ``sf_dir`` in this session. Raises KeyError if no
-    such stream has run — callers invoke the query first."""
-    return spark.table(_SINKS[(tag, _corpus_digest(sf_dir))])
 
 
 def weekly_replay_path(sf_dir: str, tag: str = "") -> str:
@@ -279,6 +244,30 @@ def write_weekly_replay(
             os.utime(dest, (base + seq, base + seq))
 
 
+# Weekly replay variants: path tag -> (build_once marker version,
+# write_weekly_replay options).
+_WEEKLY_VARIANTS = {
+    "": ("trendwk_v3", {}),
+    "late_": ("trendwk_late_v2", {"displace_idx": LATE_WEEK_IDX}),
+    "sess_": ("sesswk_v2", {"include_value": True, "flush_days": 30}),
+}
+
+
+def weekly_replay_source(spark, sf_dir: str, variant: str = "") -> str:
+    """Build the ``variant`` weekly replay once per corpus (build_once
+    marker) and return the file glob its stream reads."""
+    from ..sources.maintenance import build_once, source_marker
+
+    version, opts = _WEEKLY_VARIANTS[variant]
+    src = weekly_replay_path(sf_dir, tag=variant)
+    build_once(
+        src,
+        source_marker(sf_dir, "events", version),
+        lambda: write_weekly_replay(spark, sf_dir, src, **opts),
+    )
+    return src + "/wk*.parquet"
+
+
 def trending_arrivals_stream(spark, sf_dir: str) -> DataFrame:
     """T5 through the REAL stateful path, driver-checkable: replay the
     events table week-by-week through ``applyInPandasWithState`` (one
@@ -329,46 +318,8 @@ def event_count_hourly_stream(spark, sf_dir: str) -> DataFrame:
 
     return session_memo(
         spark, sf_dir, "events", "hourlystream_run_v1",
-        lambda: _run_hourly_stream(spark, sf_dir),
+        lambda: _run_hourly(spark, sf_dir, "hourly_stream", ""),
     )
-
-
-def _run_hourly_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
-        )
-    )
-    qname = register_sink("hourly_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_hourly_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("window_start")
 
 
 def event_count_hourly_late(spark, sf_dir: str) -> DataFrame:
@@ -392,7 +343,7 @@ def event_count_hourly_late(spark, sf_dir: str) -> DataFrame:
 
     return session_memo(
         spark, sf_dir, "events", "hourlylate_run_v1",
-        lambda: _run_hourly_late(spark, sf_dir),
+        lambda: _run_hourly(spark, sf_dir, "hourly_late", "late_"),
     )
 
 
@@ -413,48 +364,33 @@ def event_count_hourly_late_tolerated(spark, sf_dir: str) -> DataFrame:
 
     return session_memo(
         spark, sf_dir, "events", "hourlylatetol_run_v1",
-        lambda: _run_hourly_late(spark, sf_dir, delay="60 days"),
-    )
-
-
-def _run_hourly_late(spark, sf_dir: str, delay: str = "1 hour") -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT
-
-    src = weekly_replay_path(sf_dir, tag="late_")
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_late_v2"),
-        lambda: write_weekly_replay(
-            spark, sf_dir, src, displace_idx=LATE_WEEK_IDX
+        lambda: _run_hourly(
+            spark, sf_dir, "hourly_late", "late_", delay="60 days"
         ),
     )
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", delay)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
+
+
+def _run_hourly(
+    spark, sf_dir: str, tag: str, variant: str, delay: str = "1 hour"
+) -> DataFrame:
+    """The hourly tumbling count over the ``variant`` weekly replay,
+    watermarked ``delay`` behind the newest event."""
+
+    def plan(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", delay)
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count("*").alias("cnt"))
+            .select(
+                F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
+                "cnt",
+            )
         )
-    )
-    qname = register_sink("hourly_late", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_late_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("window_start")
+
+    src = weekly_replay_source(spark, sf_dir, variant)
+    return run_replay(
+        spark, sf_dir, tag, src, "ts timestamp", plan, "update"
+    ).orderBy("window_start")
 
 
 def region_event_count_stream(spark, sf_dir: str) -> DataFrame:
@@ -477,43 +413,24 @@ def region_event_count_stream(spark, sf_dir: str) -> DataFrame:
 
 
 def _run_region_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT, _classify
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .select(_classify(F.col("event_type")).alias("region"), "ts")
-        .groupBy("region", F.window("ts", "10 minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "region",
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
+    def plan(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .select(_classify(F.col("event_type")).alias("region"), "ts")
+            .groupBy("region", F.window("ts", "10 minutes").alias("w"))
+            .agg(F.count("*").alias("cnt"))
+            .select(
+                "region",
+                F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
+                "cnt",
+            )
         )
-    )
-    qname = register_sink("region_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_region_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("region", "window_start")
+
+    src = weekly_replay_source(spark, sf_dir)
+    return run_replay(
+        spark, sf_dir, "region_stream", src,
+        "event_type string, ts timestamp", plan, "update",
+    ).orderBy("region", "window_start")
 
 
 def event_count_sliding_stream(spark, sf_dir: str) -> DataFrame:
@@ -544,44 +461,23 @@ def event_count_sliding_stream(spark, sf_dir: str) -> DataFrame:
 
 
 def _run_sliding_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-    from .windows import _WINDOW_FMT, SLIDE_HOP, SLIDE_LEN
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", SLIDE_LEN, SLIDE_HOP).alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-            "cnt",
+    def plan(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", SLIDE_LEN, SLIDE_HOP).alias("w"))
+            .agg(F.count("*").alias("cnt"))
+            .select(
+                F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
+                "cnt",
+            )
         )
-    )
-    qname = register_sink("sliding_stream", sf_dir)
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="hs_sliding_ck_")
-        )
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
+
+    src = weekly_replay_source(spark, sf_dir)
     return (
-        spark.table(qname)
+        run_replay(
+            spark, sf_dir, "sliding_stream", src, "ts timestamp", plan,
+            "update",
+        )
         .groupBy("window_start")
         .agg(F.max("cnt").alias("cnt"))
         .orderBy("window_start")
@@ -625,24 +521,8 @@ def user_sessions_stream(spark, sf_dir: str) -> DataFrame:
 
 
 def _run_sessions_stream(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.temporal import streaming_user_sessions
-    from ..sources.maintenance import build_once, source_marker
 
-    src = weekly_replay_path(sf_dir, tag="sess_")
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "sesswk_v2"),
-        lambda: write_weekly_replay(
-            spark, sf_dir, src, include_value=True, flush_days=30
-        ),
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
     # NO user_id >= 0 filter on the STREAM side: Catalyst pushes such
     # a filter through the aggregate to the scan (user_id is a
     # grouping key), which drops the sentinel rows BEFORE they can
@@ -650,62 +530,39 @@ def _run_sessions_stream(spark, sf_dir: str) -> DataFrame:
     # exists to flush. The sentinels are filtered on the batch-side
     # sink read below instead (sentinel 2's watermark closes sentinel
     # 1's session, so exactly one sentinel row does reach the sink).
-    sess = streaming_user_sessions(stream, watermark="1 hour")
-    qname = register_sink("sessions_stream", sf_dir)
-    writer = (
-        sess.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_sess_ck_"))
-        .trigger(availableNow=True)
+    src = weekly_replay_source(spark, sf_dir, "sess_")
+    sink = run_replay(
+        spark, sf_dir, "sessions_stream", src,
+        "ts timestamp, user_id bigint, value double",
+        lambda stream: streaming_user_sessions(stream, watermark="1 hour"),
+        "append",
     )
-    start_and_await(spark, writer)
     # within-partition order only: output is corpus-proportional
     # (sessions per user), same presentation policy as the batch twin
-    return (
-        spark.table(qname)
-        .where(F.col("user_id") >= 0)
-        .sortWithinPartitions("user_id", "session_start_us")
+    return sink.where(F.col("user_id") >= 0).sortWithinPartitions(
+        "user_id", "session_start_us"
     )
 
 
 def _run_weekly_replay(spark, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from ..sources.maintenance import build_once, source_marker
-
-    src = weekly_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "events", "trendwk_v3"),
-        lambda: write_weekly_replay(spark, sf_dir, src),
-    )
-    stream = (
-        spark.readStream.schema("event_type string, wk string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/wk*.parquet")
-    )
-    out = (
-        stream.select(F.col("event_type").alias("key"), "wk")
-        .groupBy("key")
-        .applyInPandasWithState(
-            _trend_fn_week,
-            outputStructType=WEEK_OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    def plan(stream: DataFrame) -> DataFrame:
+        return (
+            stream.select(F.col("event_type").alias("key"), "wk")
+            .groupBy("key")
+            .applyInPandasWithState(
+                _trend_fn_week,
+                outputStructType=WEEK_OUTPUT_SCHEMA,
+                stateStructType=STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
         )
-    )
-    qname = register_sink("trend_weekly", sf_dir)
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_trend_ck_"))
-        .trigger(availableNow=True)
-    )
-    start_and_await(spark, writer)
-    return spark.table(qname).orderBy("key", "week")
+
+    src = weekly_replay_source(spark, sf_dir)
+    return run_replay(
+        spark, sf_dir, "trend_weekly", src, "event_type string, wk string",
+        plan, "update",
+    ).orderBy("key", "week")
 
 
 def trending_stream(events_stream: DataFrame, key_col: str = "event_type") -> DataFrame:
@@ -726,3 +583,14 @@ def trending_stream(events_stream: DataFrame, key_col: str = "event_type") -> Da
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+QUERIES = {
+    "user_sessions_stream": user_sessions_stream,
+    "trending_arrivals_stream": trending_arrivals_stream,
+    "event_count_hourly_stream": event_count_hourly_stream,
+    "event_count_hourly_late": event_count_hourly_late,
+    "event_count_hourly_late_tolerated": event_count_hourly_late_tolerated,
+    "region_event_count_stream": region_event_count_stream,
+    "event_count_sliding_stream": event_count_sliding_stream,
+}

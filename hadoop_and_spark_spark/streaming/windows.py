@@ -637,35 +637,11 @@ ORACLE_SQL["pseudonymize_events"] = f"""
     FROM events ORDER BY event_id
 """
 
-def _trending_arrivals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import trending_arrivals_stream
-
-    return trending_arrivals_stream(spark, sf_dir)
-
-
-def _event_count_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_hourly_stream
-
-    return event_count_hourly_stream(spark, sf_dir)
-
-
 # The streaming twin produces exactly the batch query's result (each
 # hourly window updates in exactly one week-batch), so it shares its
 # oracle.
 ORACLE_SQL["event_count_hourly_stream"] = ORACLE_SQL["event_count_hourly"]
 ORACLE_SQL["region_event_count_stream"] = ORACLE_SQL["region_event_count"]
-
-
-def _event_count_hourly_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_hourly_late
-
-    return event_count_hourly_late(spark, sf_dir)
-
-
-def _event_count_hourly_late_tolerated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_hourly_late_tolerated
-
-    return event_count_hourly_late_tolerated(spark, sf_dir)
 
 
 # Late-data replay: the SECOND chronological week arrives after every
@@ -699,18 +675,6 @@ ORACLE_SQL["event_count_hourly_late"] = """
 """
 
 
-def _region_event_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import region_event_count_stream
-
-    return region_event_count_stream(spark, sf_dir)
-
-
-def _event_count_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import event_count_sliding_stream
-
-    return event_count_sliding_stream(spark, sf_dir)
-
-
 # Hopping windows: every event covers the windows starting at
 # trunc_hour(ts) and trunc_hour(ts) − 1 h (len 2 h, hop 1 h, both
 # engines epoch-aligned). The streaming twin consolidates its
@@ -726,12 +690,6 @@ ORACLE_SQL["event_count_sliding"] = """
     FROM starts GROUP BY 1 ORDER BY 1
 """
 ORACLE_SQL["event_count_sliding_stream"] = ORACLE_SQL["event_count_sliding"]
-
-
-def _user_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .trending import user_sessions_stream
-
-    return user_sessions_stream(spark, sf_dir)
 
 
 # Session-window state under the gate: append mode emits each session
@@ -750,16 +708,9 @@ _register_session_stream_oracle()
 
 QUERIES = {
     "event_count_hourly": event_count_hourly,
-    "user_sessions_stream": _user_sessions_stream,
     "region_event_count": region_event_count,
     "trending_arrivals_batch": trending_arrivals_batch,
-    "trending_arrivals_stream": _trending_arrivals_stream,
-    "event_count_hourly_stream": _event_count_hourly_stream,
-    "event_count_hourly_late": _event_count_hourly_late,
-    "event_count_hourly_late_tolerated": _event_count_hourly_late_tolerated,
-    "region_event_count_stream": _region_event_count_stream,
     "event_count_sliding": event_count_sliding,
-    "event_count_sliding_stream": _event_count_sliding_stream,
     "events_json_stats": events_json_stats,
     "user_reach_approx": user_reach_approx,
     "heavy_users_topk": heavy_users_topk,

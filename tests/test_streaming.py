@@ -14,18 +14,22 @@ from hadoop_and_spark_spark.sources.mock_stream import (
     read_replay_stream,
     write_replay_files,
 )
+from hadoop_and_spark_spark.streaming import trending as T
 from hadoop_and_spark_spark.streaming import windows as W
 
+# windows.ORACLE_SQL holds the oracles of trending's replay queries too
+WINDOW_QUERIES = {**W.QUERIES, **T.QUERIES}
 
-@pytest.mark.parametrize("name", sorted(W.QUERIES))
+
+@pytest.mark.parametrize("name", sorted(WINDOW_QUERIES))
 def test_windows_vs_oracle(spark, sf_dir, name):
     if name not in W.ORACLE_SQL:
         # rows-only at the driver (user_reach_approx: HLL registers
         # aren't cross-engine reproducible); pinned by
         # test_hll_reach_tracks_exact instead
-        assert W.QUERIES[name](spark, sf_dir).count() >= 1
+        assert WINDOW_QUERIES[name](spark, sf_dir).count() >= 1
         return
-    ok, msg = compare(spark, sf_dir, W.QUERIES[name], W.ORACLE_SQL[name])
+    ok, msg = compare(spark, sf_dir, WINDOW_QUERIES[name], W.ORACLE_SQL[name])
     assert ok, f"{name}: {msg}"
 
 
@@ -649,9 +653,9 @@ def test_sliding_stream_equals_batch_and_straddles_batches(spark, sf_dir):
     2-hour span straddles a weekly batch edge). Without the second
     batch's update, max-consolidation would under-count and the
     equality half would fail too."""
+    from hadoop_and_spark_spark.streaming.runtime import sink_table
     from hadoop_and_spark_spark.streaming.trending import (
         event_count_sliding_stream,
-        sink_table,
     )
 
     got = sorted(
@@ -714,17 +718,17 @@ def test_bounded_dedup_suppresses_within_and_readmits_beyond(spark, sf_dir):
 
 
 def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
-    """The round-6 failure class, pinned directly: after a sliding
-    stream runs against a SECOND corpus (here: an empty one, the
-    totality-sweep shape), sink_table for the FIRST corpus must still
-    return the first corpus's sink — newest-seq scanning would find
-    the second corpus's zero-row sink."""
+    """Sinks resolve per (tag, corpus): after a sliding stream runs
+    against a SECOND corpus (here: an empty one, the totality-sweep
+    shape), sink_table for the FIRST corpus must still return the
+    first corpus's sink — newest-seq scanning would find the second
+    corpus's zero-row sink."""
     import os
 
     from hadoop_and_spark_spark.catalog import TABLES
+    from hadoop_and_spark_spark.streaming.runtime import sink_table
     from hadoop_and_spark_spark.streaming.trending import (
         event_count_sliding_stream,
-        sink_table,
     )
 
     n_real = event_count_sliding_stream(spark, sf_dir).count()
@@ -741,6 +745,108 @@ def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
     raw = sink_table(spark, sf_dir, "sliding_stream")
     assert raw.count() > 0, "empty-corpus sink shadowed the real one"
     assert sink_table(spark, ed, "sliding_stream").count() == 0
+
+
+def test_replay_pin_is_refcounted_and_restored(spark):
+    """start_and_await pins the state partitioning to 4 while ANY
+    replay is inside it. Two replays overlap out of order: A starts,
+    B starts, A finishes while B is still inside, then B fails at
+    start(). B must still see the pin after A has left, and the
+    session value must come back when B — the last one out, on the
+    failure path — exits."""
+    import threading
+
+    from hadoop_and_spark_spark.streaming import runtime
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen: dict[str, str] = {}
+    failed = []
+
+    class QueryA:
+        def awaitTermination(self):
+            assert b_in.wait(60)
+
+    class WriterA:
+        def start(self):
+            seen["a"] = spark.conf.get(key)
+            a_in.set()
+            return QueryA()
+
+    class WriterB:
+        def start(self):
+            b_in.set()
+            assert a_out.wait(60)
+            seen["b_after_a"] = spark.conf.get(key)
+            raise RuntimeError("stream failed to start")
+
+    def run_a():
+        runtime.start_and_await(spark, WriterA())
+        a_out.set()
+
+    def run_b():
+        assert a_in.wait(60)
+        try:
+            runtime.start_and_await(spark, WriterB())
+        except RuntimeError:
+            failed.append("b")
+
+    try:
+        spark.conf.set(key, "11")
+        threads = [threading.Thread(target=f) for f in (run_a, run_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+        assert seen == {"a": "4", "b_after_a": "4"}
+        assert failed == ["b"]
+        assert spark.conf.get(key) == "11"
+        assert runtime._PIN_DEPTH == 0
+    finally:
+        spark.conf.set(key, prev)
+
+
+# Every registered replay query -> its session_memo version.
+REPLAY_QUERIES = {
+    "trending_arrivals_stream": "trendwk_run_v1",
+    "event_count_hourly_stream": "hourlystream_run_v1",
+    "event_count_hourly_late": "hourlylate_run_v1",
+    "event_count_hourly_late_tolerated": "hourlylatetol_run_v1",
+    "region_event_count_stream": "regionstream_run_v1",
+    "event_count_sliding_stream": "slidingstream_run_v1",
+    "user_sessions_stream": "sessstream_run_v1",
+    "tier_counts_stream": "tierstream_run_v1",
+    "purchase_click_pairs": "pairstream_run_v1",
+    "dedup_exact_stream": "docdedup_run_v1",
+    "dedup_bounded_stream": "docdedupwm_run_v2",
+    "cdc_upsert_stream": "cdcupsert_run_v1",
+}
+
+
+@pytest.mark.parametrize("name", sorted(REPLAY_QUERIES))
+def test_replay_runs_once_per_session_and_corpus(spark, sf_dir, name, monkeypatch):
+    """A cold call starts exactly one stream; a second call returns
+    the memoized frame itself and starts none."""
+    from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.sources.maintenance import evict_version
+    from hadoop_and_spark_spark.streaming import runtime
+
+    starts = []
+    real_start = runtime.start_and_await
+
+    def counting_start(spark_, writer):
+        starts.append(writer)
+        real_start(spark_, writer)
+
+    monkeypatch.setattr(runtime, "start_and_await", counting_start)
+    fn = collect()[0][name]
+    evict_version(REPLAY_QUERIES[name])
+    first = fn(spark, sf_dir)
+    assert len(starts) == 1
+    assert fn(spark, sf_dir) is first
+    assert len(starts) == 1
 
 
 def test_session_stream_equals_batch_and_merges_across_batches(spark, sf_dir):
@@ -916,15 +1022,17 @@ def test_replay_writer_refuses_split_partition_files(spark, sf_dir, tmp_path):
     into each scripted batch; if a conf like
     spark.sql.files.maxRecordsPerFile splits a task's output, picking
     file [0] would silently drop rows from the batch. Pin the loud
-    failure instead: under a splitting conf the writer raises, naming
-    the assumption (round-9 advice: the old tuple-unpack crashed with
-    an opaque ValueError in one site and SILENTLY dropped rows in
-    another)."""
+    failure instead: under a splitting conf every replay writer
+    raises, naming the assumption, rather than unpacking an opaque
+    tuple or dropping rows."""
     import pytest
 
     from hadoop_and_spark_spark.catalog import _scoped_conf
+    from hadoop_and_spark_spark.streaming.dedup import write_doc_replay
 
     ev = load_table(spark, sf_dir, "events").limit(40)
     with _scoped_conf(spark, "spark.sql.files.maxRecordsPerFile", "3"):
         with pytest.raises(AssertionError, match="maxRecordsPerFile"):
             write_replay_files(ev, "ts", str(tmp_path / "rp_split"), n_files=2)
+        with pytest.raises(AssertionError, match="maxRecordsPerFile"):
+            write_doc_replay(spark, sf_dir, str(tmp_path / "doc_split"))

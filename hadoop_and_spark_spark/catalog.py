@@ -111,10 +111,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(ppath)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events table as a file-source stream (ts normalized the same
     way as the batch load).

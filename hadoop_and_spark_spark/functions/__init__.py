@@ -35,15 +35,3 @@ def tokenize_sql(expr: str) -> str:
         + expr
         + "), '[^a-z0-9]+', ' ', 'g'), ' '), x -> x <> '')"
     )
-
-
-def log_sum_exp(a: Column, b: Column) -> Column:
-    """Numerically-stable log(exp(a)+exp(b)).
-
-    Reference: `sumLogProbs`, a4/RunPersonalizedPageRankBasic.java:595-607.
-    Kept for parity/tests; the PageRank implementation itself works in
-    normal space (the reference's log-space arithmetic produced NaNs
-    per its own marks feedback).
-    """
-    hi, lo = F.greatest(a, b), F.least(a, b)
-    return hi + F.log1p(F.exp(lo - hi))

@@ -167,14 +167,6 @@ def poly_hash_sql(expr: str) -> str:
     )
 
 
-def affine_apply(h: Column, a: int, b: int) -> Column:
-    return (F.lit(a) * h + F.lit(b)) % HASH_P
-
-
-def affine_apply_sql(h_expr: str, a: int, b: int) -> str:
-    return f"(({a}::BIGINT * {h_expr} + {b}::BIGINT) % {HASH_P})"
-
-
 def dot_fold(xs: Column, ys: Column) -> Column:
     """Deterministic left-fold dot product in double precision (Spark).
 

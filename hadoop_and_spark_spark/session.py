@@ -89,21 +89,15 @@ def _mem_bytes(spec: str) -> int:
     return int(m.group(1)) * mult[m.group(2)]
 
 
-def get_spark(
-    app_name: str = "hadoop-and-spark-spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "hadoop-and-spark-spark") -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (fallback 32);
-    ``shuffle_partitions`` defaults to $SPARK_GRAFT_SHUFFLE
-    (fallback = cpus, so one wave of reduce tasks locally).
+    Local cores come from $SPARK_GRAFT_CPUS (fallback 32); shuffle
+    partitions from $SPARK_GRAFT_SHUFFLE (fallback = cores, so one
+    wave of reduce tasks locally).
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     # Broadcast threshold sized to the heap, never a flat constant: a
     # broadcast relation costs ~5-10x its shuffle bytes as an in-heap

@@ -8,6 +8,12 @@ Reference (S7/T1): sorted per-minute part files → queue of RDDs →
 N time-ordered parquet files and replay them with the file source +
 `maxFilesPerTrigger=1` — each file becomes one micro-batch, giving
 the same deterministic batch boundaries without any clock hackery.
+
+``write_replay_batches`` is the one writer of that layout (file
+names, one file per batch, mtime order); the ntile split, the
+scripted per-frame replay and the weekly event replay
+(streaming/trending.py) only compute each row's batch number.
+Readers pass the replay directory to ``read_replay_stream``.
 """
 
 from __future__ import annotations
@@ -15,6 +21,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -24,15 +32,15 @@ def single_parquet_file(dir_path: str, required: bool = True) -> str | None:
     """The ONE parquet data file under ``dir_path``, or None when the
     directory is absent/empty and ``required`` is False.
 
-    The replay writers rename per-partition write outputs into
-    scripted per-batch files. That rename is only sound while Spark
-    emits exactly one data file per partition directory — true here
-    because each partition is written by a single task and
+    ``write_replay_batches`` renames per-partition write outputs into
+    per-batch files. That rename is only sound while Spark emits
+    exactly one data file per partition directory — true because
+    each partition is written by a single task and
     ``spark.sql.files.maxRecordsPerFile`` is unset (0). If that conf
-    (or a future writer change) ever splits a task's output, renaming
-    file [0] would silently DROP the rest of the batch — so a
-    multi-file directory fails loudly, naming the assumption, instead
-    of corrupting the replay."""
+    (or a writer change) ever splits a task's output, renaming file
+    [0] would silently DROP the rest of the batch — so a multi-file
+    directory fails loudly, naming the assumption, instead of
+    corrupting the replay."""
     found = sorted(glob.glob(os.path.join(dir_path, "*.parquet")))
     if len(found) > 1:
         raise AssertionError(
@@ -49,44 +57,58 @@ def single_parquet_file(dir_path: str, required: bool = True) -> str | None:
     return found[0]
 
 
+def write_replay_batches(
+    df: DataFrame, batch_col: str, n_batches: int, out_dir: str
+) -> int:
+    """THE replay-source writer. Empties ``out_dir`` (build_once
+    reuses it, and readers read the whole directory), then writes one
+    file ``part-{b:04d}.parquet`` per batch ``b`` in
+    ``0..n_batches-1``. Batch ``b`` holds the rows whose int
+    ``batch_col`` is ``b``; the column itself is not written, and an
+    empty batch is a schema-only file. mtimes strictly increase in
+    batch order: FileStreamSource admits files oldest-first by mtime,
+    one per micro-batch under ``maxFilesPerTrigger=1``. One write:
+    ``repartition(n, batch_col)`` puts each batch in a single task,
+    so ``partitionBy`` emits one file per batch directory."""
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    stage = os.path.join(out_dir, "_stage")
+    if n_batches:  # an empty replay writes no file at all
+        df.repartition(n_batches, batch_col).write.partitionBy(
+            batch_col
+        ).parquet(stage)
+    base = time.time()
+    for b in range(n_batches):
+        dest = os.path.join(out_dir, f"part-{b:04d}.parquet")
+        part = single_parquet_file(
+            os.path.join(stage, f"{batch_col}={b}"), required=False
+        )
+        if part is None:
+            part = os.path.join(stage, f"_empty{b}")
+            schema = df.drop(batch_col).schema
+            df.sparkSession.createDataFrame([], schema).write.parquet(part)
+            part = single_parquet_file(part)
+        os.replace(part, dest)
+        os.utime(dest, (base + b, base + b))
+    shutil.rmtree(stage, ignore_errors=True)
+    return n_batches
+
+
 def write_replay_files(df: DataFrame, ts_col: str, out_dir: str, n_files: int) -> int:
-    """Split `df` into `n_files` contiguous equal-count time ranges
-    (ntile semantics: the remainder rows go to the EARLIEST buckets),
-    one parquet file each, named AND mtime-stamped in time order
-    (part-0001…). Returns file count.
+    """Split ``df`` into ``n_files`` contiguous equal-count time ranges
+    with ntile semantics (remainder rows go to the EARLIEST files;
+    past the row count, files are empty) via ``write_replay_batches``.
+    Returns the file count.
 
-    Scale-safe form: the original computed ``ntile(n).over(
-    Window.orderBy(ts))`` — a GLOBAL single-partition window — and
-    re-ran it once per output file (N passes through one task, the
-    last corpus-sized single-task window in the repo). Here:
-
-    1. range-partition on ``ts_col`` (the fan_out_sorted pattern —
-       RangePartitioner emits partitions in range order, so partition
-       id order IS global time order), checkpointed so the passes
-       below reuse the shuffle instead of re-running it;
-    2. one tiny job counts rows per partition → exact global offsets;
-    3. global row index = offset[pid] + per-PARTITION row_number
-       (a parallel window), bucket = the closed-form ntile inverse
-       (base = n div k rows per bucket, first n mod k buckets get one
-       extra — identical assignment to the builtin on a total-order
-       ``ts_col``; tie rows at a bucket boundary were execution-order
-       arbitrary under the old window too);
-    4. ONE write of all buckets via ``partitionBy`` (each bucket
-       hash-co-located into a single task → a single file), renamed
-       into place. Buckets past the row count (n_files > rows) become
-       genuinely empty files, as before.
-
-    mtimes are stamped strictly increasing in bucket order: the old
-    per-bucket loop got that by accident of sequential writes, and
-    FileStreamSource admits files by modification time, so a
-    single-pass writer must stamp it explicitly."""
-    spark = df.sparkSession
-    tmp = os.path.join(out_dir, "_tmp")
-    os.makedirs(out_dir, exist_ok=True)
-
+    No global single-partition window: ``ts_col`` is range-partitioned
+    (partition id order IS time order), one small job counts rows per
+    partition, and a row's global index is its partition's offset plus
+    a per-partition row_number. The bucket is the closed-form ntile
+    inverse of that index; rows tied on ``ts_col`` at a bucket
+    boundary may fall on either side."""
     from .maintenance import artifact_checkpoint
 
-    parts = spark.sparkContext.defaultParallelism
+    parts = df.sparkSession.sparkContext.defaultParallelism
     # _pid is materialized as a COLUMN on the checkpointed partitions
     # (not referenced inline downstream, where it would be re-evaluated
     # AFTER the window's own exchange and yield the wrong id).
@@ -97,86 +119,43 @@ def write_replay_files(df: DataFrame, ts_col: str, out_dir: str, n_files: int) -
         r["_pid"]: r["n"]
         for r in staged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
     }
-    total = sum(sizes.values())
     offs, acc = [0] * (max(sizes, default=-1) + 2), 0
     for pid in sorted(sizes):
         offs[pid] = acc
         acc += sizes[pid]
-    base, rem = divmod(total, n_files)
+    # `base` rows per bucket, one more for each of the first `rem`;
+    # when base == 0 every row index is below `cut`
+    base, rem = divmod(acc, n_files)
     cut = rem * (base + 1)
 
     off = F.element_at(F.lit(offs), F.col("_pid") + 1)
     w = Window.partitionBy("_pid").orderBy(ts_col)
     idx = (off + F.row_number().over(w) - 1).cast("long")
-    if base == 0:  # fewer rows than files: one row per leading bucket
-        bucket = idx + 1
-    else:
-        bucket = F.when(
-            idx < cut, F.floor(idx / (base + 1)) + 1
-        ).otherwise(rem + F.floor((idx - cut) / base) + 1)
-    (
-        staged.withColumn("_bucket", bucket.cast("int"))
-        .drop("_pid")
-        .repartition(n_files, "_bucket")
-        .sortWithinPartitions("_bucket", ts_col)
-        .write.partitionBy("_bucket")
-        .mode("overwrite")
-        .parquet(tmp)
+    bucket = F.when(idx < cut, F.floor(idx / (base + 1))).otherwise(
+        rem + F.floor((idx - cut) / max(base, 1))
     )
-    import time
-
-    mtime = time.time()
-    empty = None
-    for b in range(1, n_files + 1):
-        dest = os.path.join(out_dir, f"part-{b:04d}.parquet")
-        part = single_parquet_file(os.path.join(tmp, f"_bucket={b}"), required=False)
-        if part is not None:
-            os.replace(part, dest)
-        else:
-            if empty is None:
-                empty = spark.createDataFrame([], df.schema)
-                empty.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(tmp, "_empty")
-                )
-            shutil.copyfile(
-                single_parquet_file(os.path.join(tmp, "_empty")), dest
-            )
-        os.utime(dest, (mtime + 10 * b, mtime + 10 * b))
-    shutil.rmtree(tmp)
-    return n_files
+    return write_replay_batches(
+        staged.withColumn("_batch", bucket.cast("int")).drop("_pid"),
+        "_batch", n_files, out_dir,
+    )
 
 
 def write_scripted_batches(dfs: list[DataFrame], out_dir: str) -> int:
-    """Write each DataFrame as exactly one parquet file, named in
-    sequence — a scripted replay where batch N contains exactly the
-    rows of dfs[N] (for stateful-operator tests with exact per-batch
-    counts).
-
-    FileStreamSource orders files by MODIFICATION TIME, not name;
-    back-to-back writes can tie on mtime and collapse two scripted
-    batches into one trigger. Stamp strictly increasing mtimes so the
-    replay order (and therefore per-batch watermark advancement) is
-    deterministic."""
-    import time
-
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, "_tmp")
-    base = time.time()
-    for b, df in enumerate(dfs):
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = single_parquet_file(tmp)
-        dst = os.path.join(out_dir, f"part-{b:04d}.parquet")
-        os.replace(src, dst)
-        os.utime(dst, (base + 10 * b, base + 10 * b))
-    shutil.rmtree(tmp)
-    return len(dfs)
+    """A scripted replay: batch N holds exactly the rows of ``dfs[N]``
+    (for stateful-operator tests with exact per-batch counts). The
+    frames are tagged with their index and written in one
+    ``write_replay_batches`` pass."""
+    tagged = [df.withColumn("_batch", F.lit(b)) for b, df in enumerate(dfs)]
+    return write_replay_batches(
+        reduce(DataFrame.unionByName, tagged), "_batch", len(dfs), out_dir
+    )
 
 
 def read_replay_stream(
     spark: SparkSession, dir_path: str, schema, fmt: str = "parquet"
 ) -> DataFrame:
-    """File-source stream over the replay dir (or file glob), one file
-    per trigger."""
+    """File-source stream over the replay directory, one file per
+    trigger."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -71,13 +71,18 @@ def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(table)
         os.replace(staged, table)
 
+    ckpt = os.path.join(work, "ckpt")
     writer = (
         read_replay_stream(spark, src, _CDC_COLS)
         .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
     )
-    start_and_await(spark, writer)
+    try:
+        start_and_await(spark, writer)
+    finally:
+        # the memo serves the final table; the checkpoint is dead
+        shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(table)
         .select(

@@ -127,7 +127,7 @@ def _run_dedup_stream(spark, sf_dir: str) -> DataFrame:
         lambda: write_doc_replay(spark, sf_dir, src),
     )
     return run_replay(
-        spark, sf_dir, "dedup_stream", src + "/part-*.parquet",
+        spark, sf_dir, "dedup_stream", src,
         "doc_id long, text string",
         lambda stream: streaming_dedup_exact(stream).select("text_md5"),
         "append",
@@ -238,7 +238,7 @@ def _run_bounded_stream(spark, sf_dir: str) -> DataFrame:
         lambda: write_doc_timed_replay(spark, sf_dir, src),
     )
     return run_replay(
-        spark, sf_dir, "dedupwm_stream", src + "/part-*.parquet",
+        spark, sf_dir, "dedupwm_stream", src,
         "doc_id long, text string, ts timestamp",
         lambda stream: streaming_dedup_exact(
             stream, watermark=("ts", DEDUP_WM_DELAY)

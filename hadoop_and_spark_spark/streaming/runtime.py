@@ -2,12 +2,12 @@
 
 ``run_replay`` owns the harness every registered replay query shares:
 a one-file-per-trigger file source over a scripted replay directory,
-a memory sink with a unique per-corpus name, a fresh checkpoint, an
-``availableNow`` trigger that drains the replay, and the sink read
-back as a DataFrame. A query supplies only its plan (stream -> frame),
-its sink tag and its output mode. (cdc_upsert_stream, whose sink is a
-``foreachBatch`` merge, builds its own writer and shares the source
-and ``start_and_await``.)
+a memory sink with a unique per-corpus name, a fresh checkpoint
+(deleted after the run), an ``availableNow`` trigger that drains the
+replay, and the sink read back as a DataFrame. A query supplies only
+its plan (stream -> frame), its sink tag and its output mode.
+(cdc_upsert_stream, whose sink is a ``foreachBatch`` merge, builds
+its own writer and shares the source and ``start_and_await``.)
 
 State partitioning is sized to the micro-batch volume. Every stateful
 streaming operator (windowed aggregation, streaming dedup,
@@ -42,6 +42,7 @@ batch-oriented session default.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import threading
 from collections.abc import Callable
@@ -137,23 +138,29 @@ def run_replay(
     spark,
     sf_dir: str,
     tag: str,
-    source_glob: str,
+    source_dir: str,
     schema: str,
     plan: Callable[[DataFrame], DataFrame],
     mode: str,
 ) -> DataFrame:
-    """Replay ``source_glob`` (one file per micro-batch) through
+    """Replay ``source_dir`` (one file per micro-batch) through
     ``plan`` into a fresh memory sink in output ``mode``, drain it
-    with ``availableNow``, and return the sink table. Read-back order
-    and any consolidation are the caller's."""
+    with ``availableNow``, and return the sink table. The checkpoint
+    is deleted once the run ends: the sink table lives in the driver
+    and never reads it. Read-back order and any consolidation are the
+    caller's."""
     qname = register_sink(tag, sf_dir)
+    ckpt = scratch_dir(f"{tag}_ck")
     writer = (
-        plan(read_replay_stream(spark, source_glob, schema))
+        plan(read_replay_stream(spark, source_dir, schema))
         .writeStream.format("memory")
         .queryName(qname)
         .outputMode(mode)
-        .option("checkpointLocation", scratch_dir(f"{tag}_ck"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
     )
-    start_and_await(spark, writer)
+    try:
+        start_and_await(spark, writer)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname)

@@ -15,10 +15,11 @@ events through both and cross-check the alert semantics on scripted
 burst sequences.
 
 The module also hosts the WEEKLY REPLAY source — the events table
-split into one parquet file per calendar week, mtime/name-ordered so
-a maxFilesPerTrigger=1 file source replays the weeks as deterministic
-micro-batches (the Structured-Streaming stand-in for the reference's
-manual-clock DStream batches) — and registers the seven queries that
+split into one parquet file per calendar week by
+``mock_stream.write_replay_batches``, so a maxFilesPerTrigger=1 file
+source replays the weeks as deterministic micro-batches (the
+Structured-Streaming stand-in for the reference's manual-clock
+DStream batches) — and registers the seven queries that
 run REAL streaming execution over it under the driver's hash gate:
 trending_arrivals_stream (T5, applyInPandasWithState), the hourly
 (T2), late, late-tolerated, keyed (T3) and hopping windowed counts,
@@ -131,39 +132,33 @@ def write_weekly_replay(
     include_value: bool = False,
     flush_days: int | None = None,
 ) -> None:
-    """Split the events table into ONE parquet file per calendar week,
-    named and mtime-ordered so the file stream source replays the
-    weeks in order — each file becomes exactly one micro-batch under
-    maxFilesPerTrigger=1 (the deterministic stand-in for the
-    reference's manual-clock DStream batches,
-    a7/TrendingArrivalsTest.scala's scripted batch sequence).
+    """Write the events table as ONE replay file per calendar week, in
+    delivery order (``mock_stream.write_replay_batches``): under
+    maxFilesPerTrigger=1 each week is one micro-batch, the stand-in
+    for the scripted batch sequence of the reference's manual-clock
+    DStream tests (a7/TrendingArrivalsTest.scala). Every row of a
+    file shares one ``wk``; row order within a file is unspecified.
 
     ``displace_idx`` scripts OUT-OF-ORDER delivery: that week (by
-    chronological index) is moved to the END of the delivery sequence
-    — its file gets the latest name and mtime — so by the time its
-    micro-batch runs, every watermarked consumer's watermark sits at
-    (global max event time − delay), far past the displaced week's
-    windows. Requires ≥3 weeks so a displaced week-1 is genuinely
-    beyond the watermark when it arrives.
+    chronological index) is delivered LAST, so when its micro-batch
+    runs every watermarked consumer's watermark sits at (global max
+    event time − delay), far past its windows. Requires ≥3 weeks so
+    a displaced week-1 is genuinely beyond the watermark.
 
     ``include_value`` carries the value column (session aggregation
-    needs it). ``flush_days`` appends a FINAL one-row sentinel file
-    (user_id = −1) ``flush_days`` past the corpus max event time: the
-    event-time flush marker that pushes every consumer's watermark
-    beyond all real windows/sessions so append-mode sinks emit the
-    tail — availableNow replays otherwise end with the watermark
-    one delay short of the last real rows, leaving final sessions
-    unflushed. The sentinel's OWN session stays open (never emitted),
-    so it is invisible in any append sink by construction."""
+    needs it). ``flush_days`` appends TWO one-row sentinel batches
+    (user_id −1, −2) ``flush_days`` and ``flush_days + 1`` days past
+    the corpus max event time. They push every watermark beyond all
+    real windows/sessions so append-mode sinks emit the tail; two,
+    because the watermark a batch computes only takes effect in the
+    NEXT batch. The last sentinel's own session stays open (never
+    emitted)."""
     import datetime as dt
-    import os
-    import shutil
-    import time
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from ..catalog import load_table
-    from ..sources.mock_stream import single_parquet_file
+    from ..sources.mock_stream import write_replay_batches
 
     cols = [
         F.col("event_id"),  # for the stream-stream pair join (T9)
@@ -189,73 +184,39 @@ def write_weekly_replay(
             )
         delivery = [w for i, w in enumerate(weeks) if i != displace_idx]
         delivery.append(weeks[displace_idx])
-    os.makedirs(out_path, exist_ok=True)
-    base = time.time()
-    # ONE pass writes every week's file: hash-partition by week (each
-    # week's rows land in a single task → a single file per partition
-    # directory) instead of re-scanning events once per week — this
-    # builder sits on the cold path of every registered streaming
-    # query, across three replay variants. The week is duplicated into
-    # a partition column because partitionBy moves its column into the
-    # directory NAME, and the replay schema (and the trend state fn)
-    # still needs `wk` inside the file. Per-file row sets are
-    # identical to the old per-week filter loop; intra-file row order
-    # is load-order either way, and no consumer depends on it (state
-    # ops and windowed aggs shuffle by key before any order matters).
-    if delivery:
-        stage = os.path.join(out_path, "_stage")
-        (
-            ev.withColumn("_wkpart", F.col("wk"))
-            .repartition(len(delivery), "_wkpart")
-            .write.partitionBy("_wkpart")
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        for i, wk in enumerate(delivery):
-            part = single_parquet_file(os.path.join(stage, f"_wkpart={wk}"))
-            dest = os.path.join(out_path, f"wk{i:03d}.parquet")
-            os.replace(part, dest)
-            # mtime strictly increasing in DELIVERY order (path order
-            # agrees), so the file source's oldest-first admission
-            # replays the scripted sequence.
-            os.utime(dest, (base + i, base + i))
-        shutil.rmtree(stage)
+    # batch = the week's 0-based position in the delivery list
+    pos = F.array_position(F.array(*map(F.lit, delivery)), F.col("wk"))
+    batches = ev.withColumn("_batch", (pos - 1).cast("int"))
+    n = len(delivery)
     if flush_days is not None and weeks:
-        # TWO sentinel files, each its own micro-batch: the watermark
-        # computed at the END of sentinel batch 1 only takes effect
-        # DURING the next batch, so a single trailing sentinel would
-        # advance the watermark with no batch left to emit the closed
-        # sessions (observed: the whole final week stays unflushed).
         max_ts = ev.agg(F.max("ts")).first()[0]
-        for j in range(2):
-            sentinel = spark.createDataFrame(
-                [(-1 - j, "flush", "9999-01-01",
-                  max_ts + dt.timedelta(days=flush_days + j), -1 - j)
-                 + ((0.0,) if include_value else ())],
-                ev.schema,
-            )
-            stage = os.path.join(out_path, "_stage")
-            sentinel.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = single_parquet_file(stage)
-            seq = len(delivery) + j
-            dest = os.path.join(out_path, f"wk{seq:03d}.parquet")
-            os.replace(part, dest)
-            shutil.rmtree(stage)
-            os.utime(dest, (base + seq, base + seq))
+        sentinels = spark.createDataFrame(
+            [
+                (-1 - j, "flush", "9999-01-01",
+                 max_ts + dt.timedelta(days=flush_days + j), -1 - j)
+                + ((0.0,) if include_value else ())
+                + (n + j,)
+                for j in range(2)
+            ],
+            T.StructType([*ev.schema, T.StructField("_batch", T.IntegerType())]),
+        )
+        batches = batches.unionByName(sentinels)
+        n += 2
+    write_replay_batches(batches, "_batch", n, out_path)
 
 
 # Weekly replay variants: path tag -> (build_once marker version,
 # write_weekly_replay options).
 _WEEKLY_VARIANTS = {
-    "": ("trendwk_v3", {}),
-    "late_": ("trendwk_late_v2", {"displace_idx": LATE_WEEK_IDX}),
-    "sess_": ("sesswk_v2", {"include_value": True, "flush_days": 30}),
+    "": ("trendwk_v4", {}),
+    "late_": ("trendwk_late_v3", {"displace_idx": LATE_WEEK_IDX}),
+    "sess_": ("sesswk_v3", {"include_value": True, "flush_days": 30}),
 }
 
 
 def weekly_replay_source(spark, sf_dir: str, variant: str = "") -> str:
     """Build the ``variant`` weekly replay once per corpus (build_once
-    marker) and return the file glob its stream reads."""
+    marker) and return the directory its stream reads."""
     from ..sources.maintenance import build_once, source_marker
 
     version, opts = _WEEKLY_VARIANTS[variant]
@@ -265,7 +226,7 @@ def weekly_replay_source(spark, sf_dir: str, variant: str = "") -> str:
         source_marker(sf_dir, "events", version),
         lambda: write_weekly_replay(spark, sf_dir, src, **opts),
     )
-    return src + "/wk*.parquet"
+    return src
 
 
 def trending_arrivals_stream(spark, sf_dir: str) -> DataFrame:

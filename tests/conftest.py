@@ -10,8 +10,20 @@ os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+@pytest.fixture(scope="session", autouse=True)
+def scratch_tmpdir(tmp_path_factory):
+    """Point this process's temp dir (and, through $TMPDIR, its Python
+    workers') under pytest's basetemp before the first query, so the
+    per-corpus artifacts and replay scratch of every test corpus land
+    where pytest prunes them instead of in the system temp dir."""
+    import tempfile
+
+    os.environ["TMPDIR"] = str(tmp_path_factory.mktemp("scratch"))
+    tempfile.tempdir = None
+
+
 @pytest.fixture(scope="session")
-def spark():
+def spark(scratch_tmpdir):
     from hadoop_and_spark_spark.session import get_spark
 
     spark = get_spark("tests")

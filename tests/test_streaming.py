@@ -5,6 +5,10 @@ re-expressed, SURVEY §5.2 item 4)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +16,9 @@ from hadoop_and_spark_spark.catalog import load_table
 from hadoop_and_spark_spark.oracle import compare
 from hadoop_and_spark_spark.sources.mock_stream import (
     read_replay_stream,
+    write_replay_batches,
     write_replay_files,
+    write_scripted_batches,
 )
 from hadoop_and_spark_spark.streaming import trending as T
 from hadoop_and_spark_spark.streaming import windows as W
@@ -124,8 +130,6 @@ def test_trending_stateful_multi_batch(spark, tmp_path):
         )
         for b in range(len(counts))
     ]
-    from hadoop_and_spark_spark.sources.mock_stream import write_scripted_batches
-
     write_scripted_batches(batches, replay_dir)
 
     stream = read_replay_stream(spark, replay_dir, df.schema)
@@ -144,25 +148,6 @@ def test_trending_stateful_multi_batch(spark, tmp_path):
         for r in spark.sql("select * from trends order by prev").collect()
     ]
     assert got == [(4, 0, False), (20, 4, True), (21, 20, False)]
-
-
-def test_replay_files_time_ordered(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").limit(100)
-    out = str(tmp_path / "rp")
-    n = write_replay_files(ev, "ts", out, n_files=4)
-    assert n == 4
-    import glob
-
-    files = sorted(glob.glob(out + "/part-*.parquet"))
-    assert len(files) == 4
-    prev_max = None
-    for f in files:
-        pdf = spark.read.parquet(f).agg(
-            F.min("ts").alias("lo"), F.max("ts").alias("hi")
-        ).collect()[0]
-        if prev_max is not None:
-            assert pdf.lo >= prev_max
-        prev_max = pdf.hi
 
 
 def test_streaming_observed_batch_counter(spark, sf_dir, tmp_path):
@@ -216,12 +201,6 @@ def test_batch_stream_trend_trajectories(spark, sf_dir, tmp_path):
         (F.col("ts") >= F.lit(t0))
         & (F.col("ts") < F.lit(t0) + F.expr(f"INTERVAL {n_hours} HOURS"))
     )
-
-    from hadoop_and_spark_spark.sources.mock_stream import (
-        read_replay_stream,
-        write_scripted_batches,
-    )
-
     replay_dir = str(tmp_path / "replay_hours")
     write_scripted_batches(hours, replay_dir)
     out = trending_stream(read_replay_stream(spark, replay_dir, subset.schema))
@@ -344,10 +323,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     two advancing batches separate W0 from the late replay; the late
     event must then be dropped — W0's count stays at its batch-0
     value with no re-emission."""
-    from hadoop_and_spark_spark.sources.mock_stream import (
-        read_replay_stream,
-        write_scripted_batches,
-    )
 
     t0 = 1_700_000_000
     mk = lambda epochs: spark.createDataFrame(  # noqa: E731
@@ -392,10 +367,6 @@ def test_streaming_dedup_first_arrival_wins(spark, sf_dir, tmp_path):
     text duplicated under a new doc_id in a LATER batch; the stream
     must keep exactly one row per distinct text, and it must be the
     first (lowest-batch) arrival."""
-    from hadoop_and_spark_spark.sources.mock_stream import (
-        read_replay_stream,
-        write_scripted_batches,
-    )
     from hadoop_and_spark_spark.streaming.dedup import streaming_dedup_exact
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(60)
@@ -472,15 +443,9 @@ def test_streaming_upsert_sink_converges_to_batch_merge(spark, sf_dir, tmp_path)
     table, and the final table equals one batch keep-latest merge of
     the full update stream — the CDC-style sink the streaming surface
     (K3) plus the table lifecycle (X34) compose into."""
-    import os
-
     from pyspark.sql import functions as F
 
     from hadoop_and_spark_spark.sources.maintenance import merge_upsert
-    from hadoop_and_spark_spark.sources.mock_stream import (
-        read_replay_stream,
-        write_scripted_batches,
-    )
 
     schema = "k long, v string, ver long"
     batches = [
@@ -560,6 +525,13 @@ def test_streaming_hll_reach_matches_batch_sketch(spark, sf_dir, tmp_path):
         assert abs(got[t] - e) / e <= 5 * W.HLL_RSD, (t, got[t], e)
 
 
+def _weeks(spark, sf_dir):
+    """The corpus's calendar weeks, in chronological order."""
+    wk = F.date_format(F.date_trunc("week", "ts"), "yyyy-MM-dd").alias("w")
+    events = load_table(spark, sf_dir, "events")
+    return sorted(r.w for r in events.select(wk).distinct().collect())
+
+
 def test_late_replay_evicts_exactly_the_displaced_week(spark, sf_dir):
     """event_count_hourly_late delivers chronological week #2 LAST;
     by then the 1-hour watermark sits at (global max ts − 1 h), so
@@ -580,13 +552,7 @@ def test_late_replay_evicts_exactly_the_displaced_week(spark, sf_dir):
         r.window_start: r.cnt
         for r in event_count_hourly_late(spark, sf_dir).collect()
     }
-    weeks = sorted(
-        r.w
-        for r in load_table(spark, sf_dir, "events")
-        .select(F.date_format(F.date_trunc("week", "ts"), "yyyy-MM-dd").alias("w"))
-        .distinct()
-        .collect()
-    )
+    weeks = _weeks(spark, sf_dir)
     displaced = weeks[LATE_WEEK_IDX]
     nxt = weeks[LATE_WEEK_IDX + 1]
     dropped = {
@@ -723,8 +689,6 @@ def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
     shape), sink_table for the FIRST corpus must still return the
     first corpus's sink — newest-seq scanning would find the second
     corpus's zero-row sink."""
-    import os
-
     from hadoop_and_spark_spark.catalog import TABLES
     from hadoop_and_spark_spark.streaming.runtime import sink_table
     from hadoop_and_spark_spark.streaming.trending import (
@@ -962,8 +926,6 @@ def test_stream_restart_recovers_state_from_checkpoint(spark, tmp_path):
     finally:
         spark.conf.set(key, prev)
 
-    import os
-
     state_parts = [
         d for d in os.listdir(os.path.join(ck, "state", "0")) if d.isdigit()
     ]
@@ -974,13 +936,10 @@ def test_stream_restart_recovers_state_from_checkpoint(spark, tmp_path):
 
 
 def test_replay_files_match_ntile_reference(spark, sf_dir, tmp_path):
-    """The range-partitioned single-pass writer must reproduce exactly
-    the buckets the retired global-window ntile produced: equal-count
-    contiguous time ranges, remainder rows to the EARLIEST buckets —
-    pinned against the ntile formula computed independently here."""
-    import glob
-    import os
-
+    """The range-partitioned writer reproduces ntile buckets exactly:
+    equal-count contiguous time ranges, remainder rows to the
+    EARLIEST buckets — pinned against the ntile formula computed
+    independently here."""
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 103)
     out = str(tmp_path / "rp_eq")
     write_replay_files(ev, "ts", out, n_files=4)
@@ -995,18 +954,14 @@ def test_replay_files_match_ntile_reference(spark, sf_dir, tmp_path):
     got = [{tuple(r) for r in spark.read.parquet(f).collect()} for f in files]
     assert got == expect
     # mtimes strictly increasing in bucket order: FileStreamSource
-    # admits files by modification time, and the one-pass writer must
-    # stamp what the old sequential loop got by accident
+    # admits files by modification time
     mt = [os.path.getmtime(f) for f in files]
     assert mt == sorted(mt) and len(set(mt)) == len(files)
 
 
 def test_replay_files_more_files_than_rows(spark, sf_dir, tmp_path):
     """n_files > rows: the leading buckets get one row each, the rest
-    are genuinely EMPTY parquet files (schema intact), as the
-    per-bucket filter loop produced."""
-    import glob
-
+    are genuinely EMPTY parquet files (schema intact)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 3)
     out = str(tmp_path / "rp_small")
     assert write_replay_files(ev, "ts", out, n_files=5) == 5
@@ -1025,8 +980,6 @@ def test_replay_writer_refuses_split_partition_files(spark, sf_dir, tmp_path):
     failure instead: under a splitting conf every replay writer
     raises, naming the assumption, rather than unpacking an opaque
     tuple or dropping rows."""
-    import pytest
-
     from hadoop_and_spark_spark.catalog import _scoped_conf
     from hadoop_and_spark_spark.streaming.dedup import write_doc_replay
 
@@ -1036,3 +989,71 @@ def test_replay_writer_refuses_split_partition_files(spark, sf_dir, tmp_path):
             write_replay_files(ev, "ts", str(tmp_path / "rp_split"), n_files=2)
         with pytest.raises(AssertionError, match="maxRecordsPerFile"):
             write_doc_replay(spark, sf_dir, str(tmp_path / "doc_split"))
+        with pytest.raises(AssertionError, match="maxRecordsPerFile"):
+            write_scripted_batches([ev, ev], str(tmp_path / "scr_split"))
+        with pytest.raises(AssertionError, match="maxRecordsPerFile"):
+            T.write_weekly_replay(spark, sf_dir, str(tmp_path / "wk_split"))
+
+
+def test_replay_batches_layout(spark, tmp_path):
+    """write_replay_batches owns the replay directory: a stale file
+    from an older layout is gone, every batch is one part file (an
+    empty batch a schema-only file), and mtimes strictly increase in
+    batch order."""
+    out = tmp_path / "rb"
+    out.mkdir()
+    (out / "wk000.parquet").write_bytes(b"stale")
+    df = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 0), (3, "c", 2)], "k long, v string, b int"
+    )
+    assert write_replay_batches(df, "b", 3, str(out)) == 3
+    assert sorted(os.listdir(out)) == [f"part-{b:04d}.parquet" for b in range(3)]
+    files = sorted(glob.glob(str(out / "part-*.parquet")))
+    got = [sorted(tuple(r) for r in spark.read.parquet(f).collect()) for f in files]
+    assert got == [[(1, "a"), (2, "b")], [], [(3, "c")]]
+    assert spark.read.parquet(files[1]).schema == df.drop("b").schema
+    mt = [os.path.getmtime(f) for f in files]
+    assert all(a < b for a, b in zip(mt, mt[1:]))
+
+
+def test_weekly_replay_delivery_scripts(spark, sf_dir, tmp_path):
+    """The late variant delivers chronological week LATE_WEEK_IDX last;
+    the session variant ends with the two flush sentinels (user_id −1
+    then −2), each its own file."""
+    def file_rows(path, col):
+        return [
+            sorted({r[0] for r in spark.read.parquet(f).select(col).collect()})
+            for f in sorted(glob.glob(path + "/part-*.parquet"))
+        ]
+
+    weeks = _weeks(spark, sf_dir)
+    late = str(tmp_path / "late")
+    T.write_weekly_replay(spark, sf_dir, late, displace_idx=T.LATE_WEEK_IDX)
+    order = [w for i, w in enumerate(weeks) if i != T.LATE_WEEK_IDX]
+    assert file_rows(late, "wk") == [[w] for w in order + [weeks[T.LATE_WEEK_IDX]]]
+
+    sess = str(tmp_path / "sess")
+    T.write_weekly_replay(spark, sf_dir, sess, include_value=True, flush_days=30)
+    users = file_rows(sess, "user_id")
+    assert len(users) == len(weeks) + 2
+    assert users[-2:] == [[-1], [-2]]
+    assert all(u >= 0 for batch in users[:-2] for u in batch)
+
+
+def test_replay_runs_remove_their_checkpoints(spark, sf_dir):
+    """A replay's checkpoint is dead once its availableNow run ends:
+    a forced rebuild of a memory-sink replay and of the cdc upsert
+    leaves no new checkpoint directory behind."""
+    from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.sources.maintenance import evict_version
+
+    def leftovers():
+        tmp = tempfile.gettempdir()
+        return sorted(glob.glob(f"{tmp}/hs_*_ck_*") + glob.glob(f"{tmp}/hs_cdc_*/ckpt"))
+
+    before = leftovers()
+    queries = collect()[0]
+    for name in ("event_count_hourly_stream", "cdc_upsert_stream"):
+        evict_version(REPLAY_QUERIES[name])
+        assert queries[name](spark, sf_dir).count() > 0
+    assert leftovers() == before

@@ -935,6 +935,22 @@ def test_stream_restart_recovers_state_from_checkpoint(spark, tmp_path):
     )
 
 
+def test_replay_files_time_ordered(spark, sf_dir, tmp_path):
+    ev = load_table(spark, sf_dir, "events").limit(100)
+    out = str(tmp_path / "rp")
+    assert write_replay_files(ev, "ts", out, n_files=4) == 4
+    files = sorted(glob.glob(out + "/part-*.parquet"))
+    assert len(files) == 4
+    prev_max = None
+    for f in files:
+        pdf = spark.read.parquet(f).agg(
+            F.min("ts").alias("lo"), F.max("ts").alias("hi")
+        ).collect()[0]
+        if prev_max is not None:
+            assert pdf.lo >= prev_max
+        prev_max = pdf.hi
+
+
 def test_replay_files_match_ntile_reference(spark, sf_dir, tmp_path):
     """The range-partitioned writer reproduces ntile buckets exactly:
     equal-count contiguous time ranges, remainder rows to the

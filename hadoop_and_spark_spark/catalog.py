@@ -4,19 +4,25 @@ Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table
 under a scale-factor directory.
 
-Everything reads through ``spark.read.parquet`` so Catalyst gets
-column pruning + predicate pushdown for free (the reference defeated
-this by dropping to ``.rdd`` immediately, a5/Q1.scala:59-62 — we
-never do).
+Every batch parquet read in the package goes through
+``read_parquet``, so Catalyst gets column pruning + predicate pushdown
+for free (the reference defeated this by dropping to ``.rdd``
+immediately, a5/Q1.scala:59-62 — we never do), and Spark infers each
+file's schema once per file identity: a read without a schema costs
+a schema-inference Spark job on the driver, and the tables do not
+change between queries.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 import threading
 from contextlib import contextmanager
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Serializes scoped session-conf mutation against itself: runtime SQL
 # confs are SESSION-wide, so two threads interleaving set/restore on
@@ -73,6 +79,71 @@ TINY_DIMS = ("region", "nation")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# paths -> (identity, inferred schema); one entry per paths tuple.
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+
+
+def _identity(path: str):
+    """(size, mtime_ns) of a file; the sorted recursive (relpath, size,
+    mtime_ns) listing of a directory, so any rewrite under it (a Spark
+    overwrite, a build_once rebuild) changes it."""
+    if path.startswith("file:"):
+        path = unquote(urlparse(path).path)
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    listing = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            listing.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(listing))
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: StructType | str | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)``, inferring the schema once per
+    file identity: the package's one batch parquet read.
+
+    The schema Spark inferred is kept per ``paths`` together with the
+    paths' identity (``_identity`` of each, plus the session confs that
+    change inference); while both match, the read passes that schema
+    and launches no inference job. A miss is the plain inferred read,
+    so it costs no more than one without the memo. A caller-supplied
+    ``schema`` is passed straight through. A path that cannot be
+    stat'ed (missing, a glob) is read uncached, so Spark reports it.
+
+    The memo holds file metadata checked on every call, not a derived
+    artifact, so ``maintenance.clear_session_caches`` leaves it alone
+    (like the ``build_once`` markers). It takes no lock: two threads
+    missing together both infer, and either entry is right."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    try:
+        ident = (
+            tuple(_identity(p) for p in paths),
+            tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+        )
+    except OSError:
+        return spark.read.parquet(*paths)
+    hit = _SCHEMAS.get(paths)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _SCHEMAS[paths] = (ident, df.schema)
+    return df
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -101,14 +172,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import types as T
 
         with _scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-            df = spark.read.parquet(ppath)
+            df = read_parquet(spark, ppath)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # ns → µs with integer division: double division loses
             # ULP-level precision at ~1.7e18 and can flip a window
             # boundary by ±1µs.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(ppath)
+    return read_parquet(spark, ppath)
 
 
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,7 +201,7 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the conf must outlive the call. Permanent session mutation is
     # the documented contract here.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = read_parquet(spark, src).schema
     stage = tempfile.mkdtemp(prefix="events_stream_")
     os.symlink(src, os.path.join(stage, "events.parquet"))
     stream = spark.readStream.schema(raw_schema).parquet(stage)

@@ -58,7 +58,7 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions import tokenize, tokenize_sql
 from ..session import fan_out
 from ..sources.maintenance import artifact_checkpoint
@@ -1272,7 +1272,7 @@ def dedup_embedding_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     5 mid-similarity (≈0.65) distractors that must be filtered by the
     verify stage. Same pipeline as dedup_embedding, same oracle
     arithmetic — only the banding geometry and threshold differ."""
-    emb = spark.read.parquet(EMB_FIXTURE)
+    emb = read_parquet(spark, EMB_FIXTURE)
     return _embedding_pairs(
         emb, EMB_STRICT_T, EMB_STRICT_BANDS, EMB_STRICT_ROWS, cap=None
     )

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions import tokenize, tokenize_sql
 from ..functions.portable import array_runs, let_col
 from ..session import fan_out
@@ -68,13 +68,10 @@ def _term_tf_pairs() -> F.Column:
 def term_doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(term, doc) term frequency.
 
-    r11 computed this as explode → groupBy(term, doc_id).count(),
-    paying a full shuffle of one row per DISTINCT (term, doc) pair
-    before any consumer's own aggregation (two Exchanges to build the
-    index). The per-document histogram is a purely document-local
-    computation, so it now runs array-side via ``_term_tf_pairs`` —
-    the only shuffle left in any consumer is that consumer's own
-    term-keyed aggregate (guide §2.4: remove shuffles outright)."""
+    The per-document histogram is document-local, so it runs
+    array-side via ``_term_tf_pairs`` with no shuffle: the only
+    Exchange in any consumer is that consumer's own term-keyed
+    aggregate (guide §2.4: remove shuffles outright)."""
     # fan_out: the tokenize+sort map side must not run on one
     # input split (small local scans arrive as a single partition).
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -161,9 +158,9 @@ def open_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, 
         lambda: write_index(spark, sf_dir, out),
     )
     return (
-        spark.read.parquet(os.path.join(out, "postings")),
-        spark.read.parquet(os.path.join(out, "doclen")),
-        spark.read.parquet(os.path.join(out, "stats")),
+        read_parquet(spark, os.path.join(out, "postings")),
+        read_parquet(spark, os.path.join(out, "doclen")),
+        read_parquet(spark, os.path.join(out, "stats")),
     )
 
 
@@ -225,11 +222,9 @@ def boolean_retrieval(
     # persisted index's hash(term) layout — one build-time exchange
     # (paid once per session, exactly where write_index pays its
     # groupBy(term) exchange), and the served artifact is
-    # term-clustered AND AQE-size-coalesced. Checkpointing the raw
-    # scan-shaped RLE output instead (r12 first cut) left a
-    # 32-partition scatter that every operand re-scanned: the serving
-    # plan is 4 subplans over this frame, and the per-pass task fan-out
-    # measured 0.60 → 1.46 s at sf0.1 before this was restored.
+    # term-clustered AND AQE-size-coalesced. The serving plan is 4
+    # subplans over this frame, so a scan-shaped (unclustered)
+    # checkpoint would make every operand re-scan every partition.
     postings = session_memo(
         spark,
         sf_dir,
@@ -290,10 +285,8 @@ def tfidf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_{t ∈ query} tf(t,d) · log10(N/df(t)), top-TFIDF_K docs.
 
     The classic step past the reference's set-algebra retrieval (a3).
-    r11 rebuilt the postings from the corpus text on every invocation
-    (a full tokenize+explode scan per query); the query now runs off
-    the PERSISTED index like bm25_retrieval — the index seek its own
-    docstring always promised (S5): the term predicate pushes to the
+    The query runs off the PERSISTED index like bm25_retrieval (the
+    index seek, S5): the term predicate pushes to the
     hash(term)-partitioned parquet postings, per-term df comes
     straight from the index's df column (identical by construction to
     counting the filtered postings), and N reads the exact-int

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.portable import round6, round6_sql
 
 # --------------------------------------------------------------- bloom
@@ -322,7 +322,7 @@ def write_zordered_events(spark: SparkSession, sf_dir: str,
         # the manifest absent — zordered_scan's degenerate path reads
         # the source table with a false predicate instead.
         return
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     (
         back.withColumn("f", F.input_file_name())
         .groupBy("f")
@@ -343,7 +343,7 @@ def zscan_candidate_files(spark: SparkSession, path: str,
     has one row per FILE (≤ tens of thousands at 100 TB, vs 10^9+
     data rows), the same metadata-scale read every table format's
     planner performs."""
-    mf = spark.read.parquet(path + "_mf").collect()
+    mf = read_parquet(spark, path + "_mf").collect()
     keep = [r.f for r in mf
             if r.max_x >= lo and r.min_x < hi]
     return keep, len(mf)
@@ -398,11 +398,11 @@ def zordered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, ZSCAN_X_LO, ZSCAN_X_HI
         )
         if files:
-            part = spark.read.parquet(*files).select(
+            part = read_parquet(spark, *files).select(
                 "x", "event_type", "value"
             )
         else:  # no file intersects the slice ⇒ provably empty result
-            part = spark.read.parquet(path).select(
+            part = read_parquet(spark, path).select(
                 "x", "event_type", "value"
             ).where(F.lit(False))
     return (
@@ -479,7 +479,7 @@ def partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_date", F.to_date("ts")
         )
     else:
-        part = spark.read.parquet(path)
+        part = read_parquet(spark, path)
     return (
         part.where(
             (F.col("event_date") >= start)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.portable import dot_fold, dot_fold_sql, let_col, round6, round6_sql
 from ..session import fan_out
 from ..sources.maintenance import artifact_checkpoint
@@ -711,9 +711,9 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit schema: an EMPTY corpus writes a partition-less dir
     # that cannot schema-infer, and it also pins the partition-column
     # type (directory keys would otherwise infer per-run).
-    idx = spark.read.schema(
-        "vec_id bigint, emb array<double>, nrm double, cid int"
-    ).parquet(out)
+    idx = read_parquet(
+        spark, out, schema="vec_id bigint, emb array<double>, nrm double, cid int"
+    )
     # Centroid model read back from the INDEX itself (centroid id =
     # vec_id < NCENTROIDS by contract) — a 16-row pushed-filter read,
     # so serving depends only on the persisted artifact, never on a

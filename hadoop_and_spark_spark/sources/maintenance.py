@@ -23,6 +23,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+
 
 def corpus_digest(sf_dir: str, width: int = 16) -> str:
     """Stable per-corpus digest (md5 of the absolute scale-dir path).
@@ -134,21 +136,36 @@ MEMO_TOUCHES = 0
 
 
 def clear_session_caches() -> None:
-    """Clear the in-session derived-artifact memo. Used by bench.py
-    and tools/scaling_probe.py to price COLD runs honestly; persisted
-    on-disk artifacts (build_once markers) are deliberately left —
-    those are built once across sessions by contract."""
+    """Clear the in-session derived-artifact memo, releasing every
+    value. Used by bench.py and tools/scaling_probe.py to price COLD
+    runs honestly; persisted on-disk artifacts (build_once markers)
+    and catalog.read_parquet's schema memo are deliberately left —
+    those are keyed on file identity, checked on every use."""
     with _CACHE_LOCK:
+        victims = list(_SESSION_MEMO.values())
         _SESSION_MEMO.clear()
+    for v in victims:
+        _release(v)
 
 
-def _try_unpersist(obj) -> None:
-    """Best-effort release of a superseded memo value's cached blocks:
-    DataFrames (incl. localCheckpoint results) unpersist; tuples are
-    walked; driver-side lists have nothing to free."""
+class ScratchDir(str):
+    """A scratch directory owned by the session-memo entry whose value
+    holds it: releasing the entry deletes the directory."""
+
+
+def _release(obj) -> None:
+    """Best-effort release of an evicted memo value: tuples are
+    walked; a ScratchDir is deleted; DataFrames (incl. localCheckpoint
+    results) unpersist their cached blocks; driver-side lists have
+    nothing to free."""
     if isinstance(obj, tuple):
         for part in obj:
-            _try_unpersist(part)
+            _release(part)
+        return
+    if isinstance(obj, ScratchDir):
+        import shutil
+
+        shutil.rmtree(obj, ignore_errors=True)
         return
     unp = getattr(obj, "unpersist", None)
     if callable(unp):
@@ -182,7 +199,7 @@ def _memo_insert(key: tuple[str, str], value) -> None:
                 victims.append(_SESSION_MEMO.pop(k))
         _SESSION_MEMO[key] = value
     for v in victims:
-        _try_unpersist(v)
+        _release(v)
 
 
 def artifact_checkpoint(df, eager: bool = True):
@@ -263,7 +280,7 @@ def evict_version(version: str) -> None:
             if len(parts) == 4 and parts[3] == version:
                 victims.append(_SESSION_MEMO.pop(k))
     for v in victims:
-        _try_unpersist(v)
+        _release(v)
 
 
 def parquet_data_size(path: str) -> int:
@@ -294,7 +311,7 @@ def compact_parquet(
     file COUNT, which is what compaction fixes. Returns the file count
     written."""
     n_files = max(1, math.ceil(parquet_data_size(in_path) / target_file_bytes))
-    df = spark.read.parquet(in_path)
+    df = read_parquet(spark, in_path)
     df.repartition(n_files).write.mode("overwrite").parquet(out_path)
     return n_files
 
@@ -318,7 +335,7 @@ def merge_upsert(
     single-shuffle trick as the as-of union (temporal.py). At scale
     the aggregation is partial map-side for the (common) case where a
     key's rows co-locate in input splits."""
-    base = spark.read.parquet(base_path)
+    base = read_parquet(spark, base_path)
     if set(base.columns) != set(updates.columns):
         raise ValueError(
             f"schema mismatch: base={sorted(base.columns)} "

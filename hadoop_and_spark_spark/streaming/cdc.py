@@ -34,26 +34,30 @@ def cdc_upsert_stream(spark, sf_dir: str) -> DataFrame:
     the tombstone filter (a keep-latest merge never deletes).
 
     Runs once per (session, corpus) like every registered stream —
-    re-invoking reads the sink, it does not restart the stream."""
+    re-invoking reads the sink, it does not restart the stream. The
+    memo entry owns the run's work directory, which the read-back
+    frame reads lazily: evicting the entry deletes it."""
     from ..sources.maintenance import session_memo
 
     return session_memo(
         spark, sf_dir, "events", "cdcupsert_run_v1",
         lambda: _run_cdc_upsert(spark, sf_dir),
-    )
+    )[0]
 
 
-def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
+def _run_cdc_upsert(spark, sf_dir: str) -> tuple:
+    """(final table frame, the ScratchDir it reads) of one run."""
     import os
     import shutil
 
-    from ..sources.maintenance import merge_upsert
+    from ..catalog import read_parquet
+    from ..sources.maintenance import ScratchDir, merge_upsert
     from ..sources.mock_stream import read_replay_stream
     from .runtime import scratch_dir, start_and_await
     from .trending import weekly_replay_source
 
     src = weekly_replay_source(spark, sf_dir)
-    work = scratch_dir("cdc")
+    work = ScratchDir(scratch_dir("cdc"))
     table = os.path.join(work, "table")
     # versioned changelog row: (ts, event_id) is a unique per-key total
     # order, so max_by on it IS "latest"
@@ -83,15 +87,12 @@ def _run_cdc_upsert(spark, sf_dir: str) -> DataFrame:
     finally:
         # the memo serves the final table; the checkpoint is dead
         shutil.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(table)
-        .select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_type"),
-        )
-        .sortWithinPartitions("user_id")
+    final = read_parquet(spark, table).select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_type"),
     )
+    return final.sortWithinPartitions("user_id"), work
 
 
 QUERIES = {"cdc_upsert_stream": cdc_upsert_stream}

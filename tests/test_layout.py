@@ -316,15 +316,18 @@ def test_grouping_sets_single_expand_single_aggregate(spark, sf_dir):
 
 def test_partitioned_scan_prunes_directories(spark, sf_dir):
     """The date predicate must become PartitionFilters (plan-time
-    directory pruning), and the pruned scan must touch ~7/30 of the
-    partitions."""
-    df = L.partitioned_scan(spark, sf_dir)
-    p = plan(df)
-    assert "PartitionFilters: [" in p
-    # the filter is ON the partition column, not pushed as a data filter
-    assert "event_date" in p.split("PartitionFilters", 1)[1].split("]", 1)[0]
+    directory pruning), also on the second read, whose schema comes
+    from read_parquet's memo; and the pruned scan must touch ~7/30 of
+    the partitions."""
+    from hadoop_and_spark_spark import catalog
 
     path = L.partitioned_events_path(sf_dir)
+    for _ in range(2):
+        p = plan(L.partitioned_scan(spark, sf_dir))
+        assert "PartitionFilters: [" in p
+        # the filter is ON the partition column, not pushed as a data filter
+        assert "event_date" in p.split("PartitionFilters", 1)[1].split("]", 1)[0]
+    assert (path,) in catalog._SCHEMAS
     week = spark.read.parquet(path).where(
         (F.col("event_date") >= F.lit(L.PARTITION_WEEK).cast("date"))
         & (

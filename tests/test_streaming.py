@@ -1073,3 +1073,23 @@ def test_replay_runs_remove_their_checkpoints(spark, sf_dir):
         evict_version(REPLAY_QUERIES[name])
         assert queries[name](spark, sf_dir).count() > 0
     assert leftovers() == before
+
+
+def test_cdc_work_dir_lives_as_long_as_its_memo_entry(spark, sf_dir):
+    """The cdc upsert's memo entry owns its work directory: evicting
+    the entry or clearing the session caches deletes it."""
+    from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.sources.maintenance import (
+        clear_session_caches,
+        evict_version,
+    )
+
+    def work_dirs():
+        return glob.glob(f"{tempfile.gettempdir()}/hs_cdc_*")
+
+    evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+    assert work_dirs() == []
+    assert collect()[0]["cdc_upsert_stream"](spark, sf_dir).count() > 0
+    assert len(work_dirs()) == 1
+    clear_session_caches()
+    assert work_dirs() == []

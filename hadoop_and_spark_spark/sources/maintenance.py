@@ -16,14 +16,16 @@ shapes below are what those execute under the hood.
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
+import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import read_parquet
+from ..catalog import forget_schemas_under, read_parquet
 
 
 def corpus_digest(sf_dir: str, width: int = 16) -> str:
@@ -150,7 +152,8 @@ def clear_session_caches() -> None:
 
 class ScratchDir(str):
     """A scratch directory owned by the session-memo entry whose value
-    holds it: releasing the entry deletes the directory."""
+    holds it: releasing the entry deletes the directory (and forgets
+    the schemas read under it), and so does process exit."""
 
 
 def _release(obj) -> None:
@@ -163,9 +166,8 @@ def _release(obj) -> None:
             _release(part)
         return
     if isinstance(obj, ScratchDir):
-        import shutil
-
         shutil.rmtree(obj, ignore_errors=True)
+        forget_schemas_under(obj)
         return
     unp = getattr(obj, "unpersist", None)
     if callable(unp):
@@ -173,6 +175,22 @@ def _release(obj) -> None:
             unp()
         except Exception:  # noqa: BLE001 — release is advisory
             pass
+
+
+@atexit.register
+def _remove_scratch_at_exit() -> None:
+    """Delete the ScratchDirs of the memo entries still alive when the
+    process exits (the last cdc run's work directory). Filesystem
+    calls only: the JVM may already be gone, so nothing is
+    unpersisted."""
+    with _CACHE_LOCK:
+        values = list(_SESSION_MEMO.values())
+    while values:
+        v = values.pop()
+        if isinstance(v, tuple):
+            values.extend(v)
+        elif isinstance(v, ScratchDir):
+            shutil.rmtree(v, ignore_errors=True)
 
 
 def _memo_insert(key: tuple[str, str], value) -> None:

@@ -87,7 +87,7 @@ def _run_cdc_upsert(spark, sf_dir: str) -> tuple:
     finally:
         # the memo serves the final table; the checkpoint is dead
         shutil.rmtree(ckpt, ignore_errors=True)
-    final = read_parquet(spark, table).select(
+    final = read_parquet(spark, table, schema=empty.schema).select(
         "user_id",
         F.col("ts").alias("last_ts"),
         F.col("event_type").alias("last_type"),

@@ -9,20 +9,21 @@ its plan (stream -> frame), its sink tag and its output mode.
 (cdc_upsert_stream, whose sink is a ``foreachBatch`` merge, builds
 its own writer and shares the source and ``start_and_await``.)
 
-State partitioning is sized to the micro-batch volume. Every stateful
+State partitions equal the replay's scan parallelism. Every stateful
 streaming operator (windowed aggregation, streaming dedup,
 stream-stream join, session windows) commits one state-store delta
-file per shuffle partition per micro-batch — for a stream-stream
-join, four stores per partition. The replays deliver a few thousand
-rows per micro-batch, so running their stateful plans at the
-session-wide ``spark.sql.shuffle.partitions`` (sized for batch
-analytics over the corpus) pays 32x state-commit and checkpoint-fsync
-overhead for no parallelism gain: measured on the stream-stream
-interval join replay, cold wall time drops 49.7 s -> 13.7 s when state
-partitions go 32 -> 4, with byte-identical sink contents.
+file, with its .crc and checksum siblings, per shuffle partition per
+micro-batch (a stream-stream join keeps four stores per partition),
+and ``applyInPandasWithState`` starts Python workers per partition.
+``read_replay_stream`` admits one file per trigger, and a replay file
+(tens of KB) is smaller than one file split, which never drops below
+``spark.sql.files.openCostInBytes`` (4 MB), so every micro-batch
+scans in ONE task: more state partitions add commit files and
+workers, never parallelism. Hence 1, not the session-wide
+``spark.sql.shuffle.partitions`` sized for batch analytics.
 
 ``start_and_await`` therefore pins ``spark.sql.shuffle.partitions`` to
-``REPLAY_SHUFFLE_PARTITIONS`` (4) around the stream start and restores
+``REPLAY_SHUFFLE_PARTITIONS`` (1) around the stream start and restores
 the session value afterwards. This is safe, not a semantics knob:
 
 - The partition count is captured into the checkpoint's offset-log
@@ -51,7 +52,7 @@ from pyspark.sql import DataFrame
 
 from ..sources.mock_stream import read_replay_stream
 
-REPLAY_SHUFFLE_PARTITIONS = "4"
+REPLAY_SHUFFLE_PARTITIONS = "1"
 _KEY = "spark.sql.shuffle.partitions"
 
 # Refcounted pin: replay streams run on concurrent threads (the

@@ -244,6 +244,34 @@ class TestCodegenCache:
         assert compiles_in_one_pass() == 0
 
 
+class TestReapedChildCpu:
+    """qtime.reaped_child_cpu_s reads the CPU a process's waited-for
+    children used, which is how qtime prices the JVM's shell-outs."""
+
+    def test_counts_a_reaped_child_under_an_odd_command_name(self, tmp_path):
+        import subprocess
+
+        # the command name holds ") (", which a naive split of
+        # /proc/<pid>/stat on spaces or the first ")" misreads
+        odd = tmp_path / "py) (x"
+        odd.symlink_to(sys.executable)
+        burn = "import time\nt = time.process_time()\nwhile time.process_time() - t < 0.5: pass"
+        probe = (
+            "import os, subprocess, sys\n"
+            f"sys.path.insert(0, {os.path.join(ROOT, 'tools')!r})\n"
+            "from qtime import reaped_child_cpu_s\n"
+            "before = reaped_child_cpu_s(os.getpid())\n"
+            f"subprocess.run([sys.executable, '-c', {burn!r}], check=True)\n"
+            "print(open('/proc/self/comm').read().strip())\n"
+            "print(reaped_child_cpu_s(os.getpid()) - before)\n"
+        )
+        out = subprocess.run(
+            [str(odd), "-c", probe], capture_output=True, text=True, check=True
+        ).stdout.split("\n")
+        assert out[0] == "py) (x"
+        assert 0.4 <= float(out[1]) < 5.0
+
+
 class TestMemoDetection:
     """bench.py tags a query as memo-served when its call advances
     maintenance.MEMO_TOUCHES, and re-times it cold after

@@ -712,12 +712,12 @@ def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
 
 
 def test_replay_pin_is_refcounted_and_restored(spark):
-    """start_and_await pins the state partitioning to 4 while ANY
-    replay is inside it. Two replays overlap out of order: A starts,
-    B starts, A finishes while B is still inside, then B fails at
-    start(). B must still see the pin after A has left, and the
-    session value must come back when B — the last one out, on the
-    failure path — exits."""
+    """start_and_await pins the state partitioning to
+    REPLAY_SHUFFLE_PARTITIONS while ANY replay is inside it. Two
+    replays overlap out of order: A starts, B starts, A finishes while
+    B is still inside, then B fails at start(). B must still see the
+    pin after A has left, and the session value must come back when
+    B — the last one out, on the failure path — exits."""
     import threading
 
     from hadoop_and_spark_spark.streaming import runtime
@@ -764,12 +764,59 @@ def test_replay_pin_is_refcounted_and_restored(spark):
         for t in threads:
             t.join(120)
         assert not any(t.is_alive() for t in threads)
-        assert seen == {"a": "4", "b_after_a": "4"}
+        pinned = runtime.REPLAY_SHUFFLE_PARTITIONS
+        assert pinned != "11"
+        assert seen == {"a": pinned, "b_after_a": pinned}
         assert failed == ["b"]
         assert spark.conf.get(key) == "11"
         assert runtime._PIN_DEPTH == 0
     finally:
         spark.conf.set(key, prev)
+
+
+def test_replay_state_has_replay_shuffle_partitions(spark, tmp_path):
+    """A stateful replay through start_and_await keeps exactly
+    REPLAY_SHUFFLE_PARTITIONS state partitions, whatever the session's
+    spark.sql.shuffle.partitions."""
+    from hadoop_and_spark_spark.streaming import runtime
+
+    src = str(tmp_path / "src")
+    ck = str(tmp_path / "ck")
+    frames = [
+        spark.sql(f"SELECT timestamp'2024-01-01 0{i}:00:00' AS ts, {i} AS v")
+        for i in range(3)
+    ]
+    write_scripted_batches(frames, src)
+    agg = (
+        read_replay_stream(spark, src, "ts timestamp, v int")
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"))
+        .count()
+    )
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName("replay_state_parts")
+        .outputMode("append")
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") != (
+        runtime.REPLAY_SHUFFLE_PARTITIONS
+    )
+    runtime.start_and_await(spark, writer)
+    parts = [d for d in os.listdir(os.path.join(ck, "state", "0")) if d.isdigit()]
+    assert len(parts) == int(runtime.REPLAY_SHUFFLE_PARTITIONS)
+
+
+def test_checkpoints_use_the_filesystem_manager(spark):
+    """The default FileContext-based checkpoint manager forks a
+    `readlink` per rename on the local filesystem; the session must
+    name the FileSystem-based one, so a session rebuild cannot bring
+    the forks back."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
 
 
 # Every registered replay query -> its session_memo version.
@@ -1077,19 +1124,42 @@ def test_replay_runs_remove_their_checkpoints(spark, sf_dir):
 
 def test_cdc_work_dir_lives_as_long_as_its_memo_entry(spark, sf_dir):
     """The cdc upsert's memo entry owns its work directory: evicting
-    the entry or clearing the session caches deletes it."""
+    the entry, clearing the session caches or the process-exit hook
+    (for the entry still alive when the process ends) deletes it."""
     from hadoop_and_spark_spark.registry import collect
-    from hadoop_and_spark_spark.sources.maintenance import (
-        clear_session_caches,
-        evict_version,
-    )
+    from hadoop_and_spark_spark.sources import maintenance
 
     def work_dirs():
         return glob.glob(f"{tempfile.gettempdir()}/hs_cdc_*")
 
-    evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+    fn = collect()[0]["cdc_upsert_stream"]
+    maintenance.evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
     assert work_dirs() == []
-    assert collect()[0]["cdc_upsert_stream"](spark, sf_dir).count() > 0
+    assert fn(spark, sf_dir).count() > 0
     assert len(work_dirs()) == 1
-    clear_session_caches()
+    maintenance.clear_session_caches()
     assert work_dirs() == []
+    try:
+        assert fn(spark, sf_dir).count() > 0
+        assert len(work_dirs()) == 1
+        maintenance._remove_scratch_at_exit()
+        assert work_dirs() == []
+    finally:
+        # the entry's frame reads the deleted table; drop it
+        maintenance.evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+
+
+def test_cdc_rerun_adds_no_schema_entry(spark, sf_dir):
+    """A cold cdc run reads its scratch table with the schema it wrote
+    and forgets the merges' entries when its work directory goes, so
+    evicting and rerunning it leaves the schema memo's size alone."""
+    from hadoop_and_spark_spark import catalog
+    from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.sources.maintenance import evict_version
+
+    fn = collect()[0]["cdc_upsert_stream"]
+    assert fn(spark, sf_dir).count() > 0
+    size = len(catalog._SCHEMAS)
+    evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+    assert fn(spark, sf_dir).count() > 0
+    assert len(catalog._SCHEMAS) == size

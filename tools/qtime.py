@@ -21,8 +21,10 @@ instead (computes every column, excludes driver row transfer).
 Prints {label: min seconds}, a variant's label being module:function.
 After the timed passes one stderr line prices the codegen layer over
 them (see codegen_counters): Janino compiles and generated classes
-(both 0 when the generated-code cache holds every shape), JIT ms and
-Metaspace MB — all read outside the timed calls.
+(both 0 when the generated-code cache holds every shape), JIT ms, the
+CPU seconds of the JVM's reaped child processes (the shell-outs of
+Hadoop's local filesystem) and Metaspace MB — all read outside the
+timed calls.
 """
 
 from __future__ import annotations
@@ -67,11 +69,26 @@ def mismatch(ref_df, got_df) -> list[str]:
     )
 
 
+def reaped_child_cpu_s(pid: int) -> float:
+    """``cutime + cstime`` of ``pid`` in seconds: the CPU its waited-for
+    child processes used, cumulative since it started (proc(5)
+    fields 16 and 17 of /proc/<pid>/stat). The command name in field
+    2 may hold spaces and parentheses, so fields count from its
+    closing parenthesis."""
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rpartition(")")[2].split()
+    # fields[0] is field 3 (state), so field N is fields[N - 3]
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def codegen_counters(spark) -> dict[str, float]:
     """JVM-wide codegen readings. Janino compiles and generated-class
-    count (Spark's CodegenMetrics histograms) and HotSpot JIT compile ms
-    are cumulative since JVM start, so difference two reads to price a
-    span; Metaspace used MB (where generated classes live) is a level."""
+    count (Spark's CodegenMetrics histograms), HotSpot JIT compile ms
+    and the CPU of the JVM's reaped children (``reaped_child_cpu_s``:
+    every process the JVM forks, e.g. Hadoop's local-filesystem
+    ``chmod``/``readlink`` shell-outs) are cumulative since JVM start,
+    so difference two reads to price a span; Metaspace used MB (where
+    generated classes live) is a level."""
     jvm = spark.sparkContext._jvm
     codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
     mgmt = jvm.java.lang.management.ManagementFactory
@@ -84,6 +101,9 @@ def codegen_counters(spark) -> dict[str, float]:
             codegen.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount()
         ),
         "jit_ms": mgmt.getCompilationMXBean().getTotalCompilationTime(),
+        "jvm_child_cpu_s": reaped_child_cpu_s(
+            jvm.java.lang.ProcessHandle.current().pid()
+        ),
         "metaspace_mb": round(metaspace.getUsage().getUsed() / (1 << 20), 1),
     }
 
@@ -144,8 +164,8 @@ def main() -> int:
     out = {label: round(min(p[label] for p in passes), 3) for label in fns}
     print(json.dumps(out, indent=1))
     spent = " ".join(
-        f"{k}={after[k] - before[k]}"
-        for k in ("janino_compiles", "generated_classes", "jit_ms")
+        f"{k}={round(after[k] - before[k], 2)}"
+        for k in ("janino_compiles", "generated_classes", "jit_ms", "jvm_child_cpu_s")
     )
     print(
         f"# qtime codegen over {n_passes} timed passes: {spent} "

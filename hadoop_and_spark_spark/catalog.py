@@ -109,16 +109,6 @@ def _identity(path: str):
     return tuple(sorted(listing))
 
 
-def forget_schemas_under(root: str) -> None:
-    """Drop the schema entries of paths under ``root``: a deleted
-    scratch directory's paths are never read again, so their entries
-    would only grow the memo."""
-    prefix = os.path.join(root, "")
-    for paths in list(_SCHEMAS):
-        if any(p.startswith(prefix) for p in paths):
-            _SCHEMAS.pop(paths, None)
-
-
 def read_parquet(
     spark: SparkSession, *paths: str, schema: StructType | str | None = None
 ) -> DataFrame:

@@ -34,9 +34,21 @@ is explicitly "banded candidates ∩ exact-verified" (standard verified-
 LSH semantics); ``dedup_ngram_jaccard`` is the exhaustive ground truth
 to diff against.
 
+Every near-dup family is a cheap candidate step followed by exact
+verification. ``_band_pairs`` is the one candidate step: the distinct
+id pairs that share a bucket key (the n-gram prefix shingle, or an
+LSH band key). Its ``allow_broadcast`` argument is each family's join
+policy:
+- n-gram prefix join and MinHash: ``_corpus_fits_broadcast``, the
+  corpus-size gate (merge-hinted over the bound);
+- SimHash and embedding sign-LSH: broadcast allowed (no gate yet).
+
 Scale notes (100 TB corpus):
-- Signature/sketch computation is a pure projection — no shuffle, no
-  Python, whole-stage codegen over array expressions.
+- Shingle hashing and the MinHash, SimHash and embedding band keys run
+  as vectorized Arrow kernels (``mapInPandas``) — narrow per-row
+  maps, no shuffle — each an integer- or IEEE-exact replica of an
+  expression form (``_minhash_sig``, ``_simhash_bits``, ``_emb_bits``)
+  kept for the differential tests.
 - The only shuffles are groupBy/join on (band_key) and (pair) — both
   narrow keys; payloads (text, shingle arrays) are joined back only
   for the tiny candidate set.
@@ -347,8 +359,37 @@ def _corpus_fits_broadcast(spark: SparkSession, sf_dir: str) -> bool:
     return est < threshold
 
 
+def _band_pairs(
+    banded: DataFrame,
+    id_col: str,
+    names: tuple[str, str],
+    allow_broadcast: bool,
+    key: str = "bk",
+    cond: Column | None = None,
+    keep: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The candidate step of every banded near-dup family: the distinct
+    ``(names[0], names[1], *keep)`` of row pairs that share ``key``
+    with ``x.id_col < y.id_col`` and ``cond`` (written over the
+    ``x``/``y`` aliases).
+
+    ``allow_broadcast`` has no default, so every caller states its
+    join policy. False merge-hints the ``y`` side: a corpus-sized
+    banded table then shuffles on ``key`` instead of riding Catalyst's
+    size estimate into a broadcast build."""
+    xid, yid = F.col(f"x.{id_col}"), F.col(f"y.{id_col}")
+    on = (F.col(f"x.{key}") == F.col(f"y.{key}")) & (xid < yid)
+    right = banded if allow_broadcast else banded.hint("merge")
+    return (
+        banded.alias("x")
+        .join(right.alias("y"), on if cond is None else on & cond)
+        .select(xid.alias(names[0]), yid.alias(names[1]), *keep)
+        .distinct()
+    )
+
+
 def _verified_pairs(
-    cand: DataFrame, sh: DataFrame, allow_broadcast: bool = False
+    cand: DataFrame, sh: DataFrame, allow_broadcast: bool
 ) -> DataFrame:
     """Join shingle sets onto candidate (doc_a, doc_b) pairs and keep
     those with exact Jaccard ≥ JACCARD_T.
@@ -487,17 +528,15 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the honest footer-count bound instead and declares merge when
     # over it.
     allow_bcast = _corpus_fits_broadcast(spark, sf_dir)
-
-    def sized(df: DataFrame) -> DataFrame:
-        return df if allow_bcast else df.hint("merge")
-
     ex = sh.select("doc_id", F.explode("sh").alias("s"))
     dfreq = ex.groupBy("s").agg(F.count("*").alias("df"))
+    if not allow_bcast:
+        dfreq = dfreq.hint("merge")
     # ONE aggregate buffer (the sorted (df, s) list); prefix length
     # and projection happen post-agg — the inlined form instantiated
     # three collect_list states per group.
     prefix = (
-        ex.join(sized(dfreq), "s")
+        ex.join(dfreq, "s")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "s"))).alias("arr"))
         .select(
@@ -551,26 +590,13 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(1.0 + JACCARD_T_PRUNE)
     )
     # Both sides of the prefix self-join are corpus-proportional (one
-    # row per prefix entry per doc) — over the broadcast bound the
-    # join must shuffle on s rather than trust the small
-    # post-aggregate size estimate into a broadcast build.
-    cand = (
-        prefix.alias("x")
-        .join(
-            sized(prefix).alias("y"),
-            (F.col("x.s") == F.col("y.s"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (
-                F.least(F.col("x.sz"), F.col("y.sz"))
-                >= F.lit(JACCARD_T_PRUNE) * F.greatest(F.col("x.sz"), F.col("y.sz"))
-            )
-            & (overlap_ub.cast("double") >= overlap_needed),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    # row per prefix entry per doc), so it takes the gate too.
+    length_ok = F.least(F.col("x.sz"), F.col("y.sz")) >= F.lit(
+        JACCARD_T_PRUNE
+    ) * F.greatest(F.col("x.sz"), F.col("y.sz"))
+    cand = _band_pairs(
+        prefix, "doc_id", ("doc_a", "doc_b"), allow_bcast, key="s",
+        cond=length_ok & (overlap_ub.cast("double") >= overlap_needed),
     )
     return _verified_pairs(cand, sh, allow_broadcast=allow_bcast)
 
@@ -713,21 +739,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             _minhash_banded_kernel, "doc_id bigint, bk string"
         ).transform(artifact_checkpoint)
         # banded is corpus-sized (16 rows/doc) — same strategy gate as
-        # the ngram pipeline: over the broadcast bound the band
-        # self-join must shuffle on bk, never trust the checkpointed
-        # frame's carried-over size estimate into a broadcast build.
+        # the ngram pipeline.
         allow_bcast = _corpus_fits_broadcast(spark, sf_dir)
-        right = banded if allow_bcast else banded.hint("merge")
-        cand = (
-            banded.alias("x")
-            .join(right.alias("y"), "bk")
-            .where(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
+        cand = _band_pairs(banded, "doc_id", ("doc_a", "doc_b"), allow_bcast)
         return _verified_pairs(
             cand, sh, allow_broadcast=allow_bcast
         ).transform(artifact_checkpoint)
@@ -758,25 +772,20 @@ def connected_components(
     near-dup clusters are shallow (a planted-dup family is a clique —
     diameter 1), so the loop exits after 1–2 rounds.
 
-    Round-13 driver-side job economy (guide §2.4/§2.6 — the loop is
-    many SMALL jobs of fixed overhead, so fewer actions per round is
-    the win at every scale):
+    Each round runs exactly one Spark action (the loop is many small
+    jobs of fixed overhead, so actions per round set its cost):
 
-    - Neighbor-min initialization: labels start one propagation step
-      ahead (label(u) = min over {u} ∪ N(u)), computed by the same
-      groupBy that used to merely enumerate nodes — a CLIQUE (the
-      shape near-dup families take) is then already at its fixed
-      point, and the loop's first confirmation round is its last:
-      one full round saved on every invocation, identical fixed point
-      (min-label propagation converges to the component min from any
-      per-node start inside {u} ∪ N(u)).
+    - Labels start one propagation step ahead, label(u) = min over
+      {u} ∪ N(u), from the groupBy that enumerates the nodes. A CLIQUE
+      (the shape near-dup families take) is then already at its fixed
+      point and converges in one round. The fixed point is the same:
+      min-label propagation reaches the component min from any
+      per-node start inside {u} ∪ N(u).
     - The convergence signal is a per-row ``changed`` flag carried in
-      the round's own frame, not a join of new labels against old —
-      that join cost two extra pair-graph-sized shuffles per round
-      whose only output was a scalar.
-    - The round's localCheckpoint is LAZY and the changed-count is the
-      action that materializes it: one action per round where the
-      eager-checkpoint + count-join structure paid two.
+      the round's own frame, so no join of new labels against old
+      runs.
+    - The round's localCheckpoint is lazy, and the changed-count is
+      the action that materializes it.
 
     Raises if the loop exhausts ``max_iter`` without converging:
     partially-propagated labels are silently WRONG (they disagree with
@@ -905,10 +914,12 @@ def _minhash_sig_sql() -> str:
     )
 
 
-def _band_keys_sql(bands: int, rows: int) -> str:
+def _band_keys_sql(bands: int, rows: int, col: str = "sig") -> str:
+    """DuckDB list of the 'j-v1-v2-…' band keys of list column ``col``
+    (the ``_band_keys`` / banded-kernel key format)."""
     keys = ", ".join(
         "'" + str(j) + "-' || "
-        + " || '-' || ".join(f"sig[{j * rows + r + 1}]" for r in range(rows))
+        + " || '-' || ".join(f"{col}[{j * rows + r + 1}]" for r in range(rows))
         for j in range(bands)
     )
     return f"[{keys}]"
@@ -1027,19 +1038,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming = F.bit_count(
         F.col("x.sig").bitwiseXOR(F.col("y.sig"))
     ).cast("int")
-    return (
-        banded.alias("x")
-        .join(banded.alias("y"), "bk")
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .where(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
-        .sortWithinPartitions("doc_a", "doc_b")
-    )
+    return _band_pairs(
+        banded, "doc_id", ("doc_a", "doc_b"), True,
+        cond=hamming <= HAMMING_MAX, keep=(hamming.alias("hamming"),),
+    ).sortWithinPartitions("doc_a", "doc_b")
 
 
 def _simhash_bits_sql() -> str:
@@ -1153,20 +1155,20 @@ def dedup_embedding(
     """
     from ..sources.maintenance import session_memo
 
-    def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        return _embedding_pairs(
-            emb, cosine_t, EMB_BANDS, EMB_ROWS, cap=EMB_BUCKET_CAP
-        ).transform(artifact_checkpoint)
-
-    if cosine_t != COSINE_T:  # non-default thresholds: no memo key
+    def pairs() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         return _embedding_pairs(
             emb, cosine_t, EMB_BANDS, EMB_ROWS, cap=EMB_BUCKET_CAP
         )
+
+    if cosine_t != COSINE_T:  # non-default thresholds: no memo key
+        return pairs()
     # The verified pair table is the pipeline's artifact (the MinHash
     # memo rationale); cold mining cost published by the scaling probe.
-    return session_memo(spark, sf_dir, "embeddings", "emb_pairs_v1", build)
+    return session_memo(
+        spark, sf_dir, "embeddings", "emb_pairs_v1",
+        lambda: pairs().transform(artifact_checkpoint),
+    )
 
 
 def _embedding_pairs(
@@ -1204,16 +1206,7 @@ def _embedding_pairs(
         )
     # Distinct BEFORE the verify joins: pairs colliding in several
     # bands would otherwise probe the vector table once per band.
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), "bk")
-        .where(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(
-            F.col("x.vec_id").alias("vec_a"),
-            F.col("y.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
+    cand = _band_pairs(banded, "vec_id", ("vec_a", "vec_b"), True)
     a = base.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("emb_a"),
@@ -1287,13 +1280,46 @@ def _emb_bits_sql(vec_expr: str) -> str:
     return f"[{bit_exprs}]"
 
 
-def _emb_band_keys_sql(bands: int, rows: int) -> str:
-    keys = ", ".join(
-        "'" + str(j) + "-' || "
-        + " || '-' || ".join(f"bits[{j * rows + r + 1}]" for r in range(rows))
-        for j in range(bands)
+def _emb_oracle_sql(
+    source: str, bands: int, rows: int, cap: int | None, t: float
+) -> str:
+    """DuckDB replica of ``_embedding_pairs`` over the table expression
+    ``source``: sign bits, band keys, the optional per-bucket cap of
+    the ``cap`` lowest vec_ids, and the exact-cosine verify at ``t``,
+    in the Spark pipeline's arithmetic."""
+    qualify = "" if cap is None else (
+        f"QUALIFY row_number() OVER (PARTITION BY bk ORDER BY vec_id) <= {cap}"
     )
-    return f"[{keys}]"
+    cosine = (
+        f"(floor(({dot_fold_sql('a.embedding', 'b.embedding', EMB_DIM)} "
+        f"/ (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000)"
+    )
+    return f"""
+    WITH base AS MATERIALIZED (
+        SELECT vec_id, embedding,
+               sqrt({dot_fold_sql('embedding', 'embedding', EMB_DIM)}) AS nrm,
+               {_emb_bits_sql('embedding')} AS bits
+        FROM {source}
+    ),
+    banded AS MATERIALIZED (
+        SELECT vec_id, bk FROM (
+            SELECT vec_id, unnest({_band_keys_sql(bands, rows, "bits")}) AS bk
+            FROM base
+        )
+        {qualify}
+    ),
+    cand AS (
+        SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
+        FROM banded x JOIN banded y USING (bk)
+        WHERE x.vec_id < y.vec_id
+    )
+    SELECT c.vec_a, c.vec_b, {cosine} AS cosine
+    FROM cand c
+    JOIN base a ON a.vec_id = c.vec_a
+    JOIN base b ON b.vec_id = c.vec_b
+    WHERE {cosine} >= {t}
+    ORDER BY vec_a, vec_b
+"""
 
 
 ORACLE_SQL: dict[str, str] = {
@@ -1345,75 +1371,23 @@ ORACLE_SQL: dict[str, str] = {
                   (acc, x) -> acc + x) <= {HAMMING_MAX}
         ORDER BY doc_a, doc_b
     """,
-    "dedup_embedding": f"""
-        WITH base AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   sqrt({dot_fold_sql('embedding', 'embedding', EMB_DIM)}) AS nrm,
-                   {_emb_bits_sql('embedding')} AS bits
-            FROM embeddings
-        ),
-        banded AS (
-            SELECT vec_id, unnest({_emb_band_keys_sql(EMB_BANDS, EMB_ROWS)}) AS bk
-            FROM base
-        ),
-        capped AS MATERIALIZED (
-            SELECT vec_id, bk FROM banded
-            QUALIFY row_number() OVER (PARTITION BY bk ORDER BY vec_id)
-                    <= {EMB_BUCKET_CAP}
-        ),
-        cand AS (
-            SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-            FROM capped x JOIN capped y USING (bk)
-            WHERE x.vec_id < y.vec_id
-        )
-        SELECT c.vec_a, c.vec_b,
-               (floor(({dot_fold_sql('a.embedding', 'b.embedding', EMB_DIM)}
-                     / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000) AS cosine
-        FROM cand c
-        JOIN base a ON a.vec_id = c.vec_a
-        JOIN base b ON b.vec_id = c.vec_b
-        WHERE (floor(({dot_fold_sql('a.embedding', 'b.embedding', EMB_DIM)}
-                    / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000) >= {COSINE_T}
-        ORDER BY vec_a, vec_b
-    """,
+    "dedup_embedding": _emb_oracle_sql(
+        "embeddings", EMB_BANDS, EMB_ROWS, EMB_BUCKET_CAP, COSINE_T
+    ),
 }
 
-# Strict variant: identical arithmetic over the committed fixture
-# file (read by absolute path, like the taxi geo oracle), strict band
-# geometry, no cap CTE.
-ORACLE_SQL["dedup_embedding_strict"] = f"""
-    WITH base AS MATERIALIZED (
-        SELECT vec_id, embedding,
-               sqrt({dot_fold_sql('embedding', 'embedding', EMB_DIM)}) AS nrm,
-               {_emb_bits_sql('embedding')} AS bits
-        FROM read_parquet('{EMB_FIXTURE}')
-    ),
-    banded AS MATERIALIZED (
-        SELECT vec_id,
-               unnest({_emb_band_keys_sql(EMB_STRICT_BANDS, EMB_STRICT_ROWS)}) AS bk
-        FROM base
-    ),
-    cand AS (
-        SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-        FROM banded x JOIN banded y USING (bk)
-        WHERE x.vec_id < y.vec_id
-    )
-    SELECT c.vec_a, c.vec_b,
-           (floor(({dot_fold_sql('a.embedding', 'b.embedding', EMB_DIM)}
-                 / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000) AS cosine
-    FROM cand c
-    JOIN base a ON a.vec_id = c.vec_a
-    JOIN base b ON b.vec_id = c.vec_b
-    WHERE (floor(({dot_fold_sql('a.embedding', 'b.embedding', EMB_DIM)}
-                / (a.nrm * b.nrm)) * 1000000 + 0.5) / 1000000) >= {EMB_STRICT_T}
-    ORDER BY vec_a, vec_b
-"""
+# Strict variant over the committed fixture file (read by absolute
+# path, like the taxi geo oracle): strict band geometry, no cap.
+ORACLE_SQL["dedup_embedding_strict"] = _emb_oracle_sql(
+    f"read_parquet('{EMB_FIXTURE}')",
+    EMB_STRICT_BANDS, EMB_STRICT_ROWS, None, EMB_STRICT_T,
+)
 
 # Transitive closure of the verified-pair graph: reach(u, r) = node r
 # is reachable from node u over undirected pair edges; component id =
 # min reachable node. UNION (not UNION ALL) dedups the frontier so the
-# recursion terminates.
-ORACLE_SQL["dedup_clusters"] = f"""
+# recursion terminates. Shared by dedup_clusters and dedup_survivors.
+_CLUSTERS_CTE = f"""
     WITH RECURSIVE pairs AS MATERIALIZED (
         SELECT doc_a, doc_b FROM ({ORACLE_SQL["dedup_minhash_lsh"]})
     ),
@@ -1429,29 +1403,15 @@ ORACLE_SQL["dedup_clusters"] = f"""
     ),
     comp AS (
         SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u
-    )
+    )"""
+
+ORACLE_SQL["dedup_clusters"] = _CLUSTERS_CTE + """
     SELECT doc_id, cluster_id,
            count(*) OVER (PARTITION BY cluster_id) AS cluster_size
     FROM comp ORDER BY doc_id
 """
 
-ORACLE_SQL["dedup_survivors"] = f"""
-    WITH RECURSIVE pairs AS MATERIALIZED (
-        SELECT doc_a, doc_b FROM ({ORACLE_SQL["dedup_minhash_lsh"]})
-    ),
-    edges AS MATERIALIZED (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, r) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM edges)
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.v
-    ),
-    comp AS (
-        SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u
-    ),
+ORACLE_SQL["dedup_survivors"] = _CLUSTERS_CTE + """,
     sized AS (
         SELECT doc_id, cluster_id,
                count(*) OVER (PARTITION BY cluster_id) AS cluster_size

@@ -25,7 +25,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import forget_schemas_under, read_parquet
+from ..catalog import read_parquet
 
 
 def corpus_digest(sf_dir: str, width: int = 16) -> str:
@@ -152,8 +152,8 @@ def clear_session_caches() -> None:
 
 class ScratchDir(str):
     """A scratch directory owned by the session-memo entry whose value
-    holds it: releasing the entry deletes the directory (and forgets
-    the schemas read under it), and so does process exit."""
+    holds it: releasing the entry deletes the directory, and so does
+    process exit."""
 
 
 def _release(obj) -> None:
@@ -167,7 +167,6 @@ def _release(obj) -> None:
         return
     if isinstance(obj, ScratchDir):
         shutil.rmtree(obj, ignore_errors=True)
-        forget_schemas_under(obj)
         return
     unp = getattr(obj, "unpersist", None)
     if callable(unp):
@@ -335,8 +334,7 @@ def compact_parquet(
 
 
 def merge_upsert(
-    spark: SparkSession,
-    base_path: str,
+    base: DataFrame,
     updates: DataFrame,
     key: str,
     version_col: str,
@@ -352,8 +350,8 @@ def merge_upsert(
     key, no join node, no driver materialization: the same
     single-shuffle trick as the as-of union (temporal.py). At scale
     the aggregation is partial map-side for the (common) case where a
-    key's rows co-locate in input splits."""
-    base = read_parquet(spark, base_path)
+    key's rows co-locate in input splits. A caller that rewrites the
+    table every batch passes ``base`` read with its known schema."""
     if set(base.columns) != set(updates.columns):
         raise ValueError(
             f"schema mismatch: base={sorted(base.columns)} "

@@ -69,9 +69,8 @@ def _run_cdc_upsert(spark, sf_dir: str) -> tuple:
     def apply_batch(bdf: DataFrame, _bid: int) -> None:
         staged = os.path.join(work, "staged")
         updates = bdf.withColumn("ver", F.struct("ts", "event_id"))
-        merge_upsert(
-            bdf.sparkSession, table, updates, "user_id", "ver", staged
-        )
+        base = read_parquet(bdf.sparkSession, table, schema=empty.schema)
+        merge_upsert(base, updates, "user_id", "ver", staged)
         shutil.rmtree(table)
         os.replace(staged, table)
 

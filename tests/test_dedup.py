@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from hadoop_and_spark_spark.operators import dedup
@@ -368,3 +370,87 @@ def test_broadcast_gate_measures_long_docs(spark, tmp_path):
     # the retired row-count-only bound would NOT have flipped: same
     # rows, and 2000 * 576 B is far under the 64 MB session threshold
     assert 2000 * 576 < 64 << 20
+
+
+def _plan_nodes(plan):
+    """Every physical node of an executed plan, descending into the
+    final adaptive plan and through query stages."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+        return
+    yield plan
+    it = plan.children().iterator()
+    while it.hasNext():
+        yield from _plan_nodes(it.next())
+
+
+@pytest.mark.parametrize(
+    "allow_broadcast, join", [(False, "SortMergeJoinExec"), (True, "BroadcastHashJoinExec")]
+)
+def test_band_pairs_broadcast_policy_reaches_the_plan(spark, allow_broadcast, join):
+    """The candidate step's join policy survives to the final adaptive
+    plan: a tiny banded frame, far under the session's broadcast
+    threshold, still sort-merge joins when broadcast is not allowed."""
+    from pyspark.sql import functions as F
+
+    assert int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold")) > 1 << 20
+    banded = spark.range(40).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).alias("bk")
+    )
+    pairs = dedup._band_pairs(banded, "doc_id", ("doc_a", "doc_b"), allow_broadcast)
+    assert len(pairs.collect()) == 4 * (10 * 9 // 2)
+    joins = [
+        n.getClass().getSimpleName()
+        for n in _plan_nodes(pairs._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName().endswith("JoinExec")
+    ]
+    assert joins == [join]
+
+
+def _inline_band_self_joins(tree: ast.AST) -> list[int]:
+    """Lines of every ``<…>.alias("x")….join(<…>.alias("y") …)`` call
+    in ``tree`` outside ``_band_pairs``."""
+
+    def aliases(node, name):
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "alias"
+            and [getattr(a, "value", None) for a in n.args] == [name]
+            for n in ast.walk(node)
+        )
+
+    skip: set[int] = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef) and fn.name == "_band_pairs":
+            skip |= {id(n) for n in ast.walk(fn)}
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "join"
+        and id(node) not in skip
+        and aliases(node.func.value, "x")
+        and any(aliases(a, "y") for a in node.args)
+    ]
+
+
+def test_inline_self_join_detector_flags_band_joins_only():
+    src = (
+        "def _band_pairs(b):\n"
+        "    return b.alias('x').join(b.alias('y'), 'bk')\n"
+        "c = b.alias('x').join(b.hint('merge').alias('y'), 'bk').distinct()\n"
+        "d = a.alias('x').join(b, 'k')\n"
+        "e = a.alias('l').join(b.alias('r'), 'k')\n"
+    )
+    assert _inline_band_self_joins(ast.parse(src)) == [3]
+
+
+def test_band_pairs_is_the_only_band_self_join():
+    with open(dedup.__file__) as fh:
+        assert _inline_band_self_joins(ast.parse(fh.read())) == []

@@ -392,8 +392,6 @@ def test_merge_upsert_keep_latest(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a", 1), (2, "b", 1), (3, "c", 2)], "k long, v string, ver long"
     )
-    base_path = str(tmp_path / "base")
-    base.write.parquet(base_path)
     updates = spark.createDataFrame(
         [
             (2, "b2", 2),   # newer version → replaces
@@ -404,7 +402,7 @@ def test_merge_upsert_keep_latest(spark, tmp_path):
         "k long, v string, ver long",
     )
     out = str(tmp_path / "merged")
-    merge_upsert(spark, base_path, updates, key="k", version_col="ver", out_path=out)
+    merge_upsert(base, updates, key="k", version_col="ver", out_path=out)
     got = {r.k: (r.v, r.ver) for r in spark.read.parquet(out).collect()}
     assert got == {1: ("a", 1), 2: ("b2", 2), 3: ("c", 2), 4: ("d2", 3)}
 
@@ -413,11 +411,9 @@ def test_merge_upsert_tie_prefers_update(spark, tmp_path):
     from hadoop_and_spark_spark.sources.maintenance import merge_upsert
 
     base = spark.createDataFrame([(1, "old", 5)], "k long, v string, ver long")
-    base_path = str(tmp_path / "base2")
-    base.write.parquet(base_path)
     updates = spark.createDataFrame([(1, "new", 5)], "k long, v string, ver long")
     out = str(tmp_path / "merged2")
-    merge_upsert(spark, base_path, updates, key="k", version_col="ver", out_path=out)
+    merge_upsert(base, updates, key="k", version_col="ver", out_path=out)
     got = [(r.k, r.v, r.ver) for r in spark.read.parquet(out).collect()]
     assert got == [(1, "new", 5)]
 

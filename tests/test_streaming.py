@@ -445,6 +445,7 @@ def test_streaming_upsert_sink_converges_to_batch_merge(spark, sf_dir, tmp_path)
     (K3) plus the table lifecycle (X34) compose into."""
     from pyspark.sql import functions as F
 
+    from hadoop_and_spark_spark.catalog import read_parquet
     from hadoop_and_spark_spark.sources.maintenance import merge_upsert
 
     schema = "k long, v string, ver long"
@@ -461,7 +462,8 @@ def test_streaming_upsert_sink_converges_to_batch_merge(spark, sf_dir, tmp_path)
 
     def apply_batch(bdf, _bid):
         staged = str(tmp_path / "staged")
-        merge_upsert(bdf.sparkSession, table, bdf, "k", "ver", staged)
+        base = read_parquet(bdf.sparkSession, table, schema=schema)
+        merge_upsert(base, bdf, "k", "ver", staged)
         # swap: write-to-new-directory + replace (the documented
         # atomicity contract of the plain-parquet implementation)
         import shutil
@@ -1150,16 +1152,18 @@ def test_cdc_work_dir_lives_as_long_as_its_memo_entry(spark, sf_dir):
 
 
 def test_cdc_rerun_adds_no_schema_entry(spark, sf_dir):
-    """A cold cdc run reads its scratch table with the schema it wrote
-    and forgets the merges' entries when its work directory goes, so
-    evicting and rerunning it leaves the schema memo's size alone."""
+    """Every read of a cdc run's scratch table (each micro-batch's merge
+    base and the final read-back) passes the schema the run wrote, so
+    a cold run adds no schema-memo entry while its work directory is
+    still alive."""
     from hadoop_and_spark_spark import catalog
     from hadoop_and_spark_spark.registry import collect
     from hadoop_and_spark_spark.sources.maintenance import evict_version
 
     fn = collect()[0]["cdc_upsert_stream"]
+    # one run first: its source reads (the events table) may add entries
     assert fn(spark, sf_dir).count() > 0
-    size = len(catalog._SCHEMAS)
     evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+    size = len(catalog._SCHEMAS)
     assert fn(spark, sf_dir).count() > 0
     assert len(catalog._SCHEMAS) == size

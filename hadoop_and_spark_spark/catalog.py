@@ -180,43 +180,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return read_parquet(spark, ppath)
-
-
-def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table as a file-source stream (ts normalized the same
-    way as the batch load).
-
-    The file stream source requires a directory; the testdata ships
-    a single parquet file, so it is staged via symlink into a temp
-    dir (testdata itself is read-only).
-    """
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    src = table_path(sf_dir, "events")
-    # Deliberately NOT scoped like load_table's read: the streaming
-    # scan executes when the query STARTS, long after this returns, so
-    # the conf must outlive the call. Permanent session mutation is
-    # the documented contract here.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, src).schema
-    stage = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        # Watermarks require TIMESTAMP (with local tz); session tz is
-        # UTC so the cast preserves the stored wall clock.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

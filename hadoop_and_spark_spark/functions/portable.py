@@ -213,10 +213,6 @@ def dot_const_sql(xs_expr: str, consts: list[float]) -> str:
     return f"(0.0::DOUBLE + {terms})"
 
 
-def float_list_sql(vals: list[float]) -> str:
-    return "[" + ", ".join(repr(v) + "::DOUBLE" for v in vals) + "]"
-
-
 def round6(c: Column) -> Column:
     """Half-away-from-zero rounding to 6 decimals via floor arithmetic.
 

@@ -46,9 +46,11 @@ policy:
 Scale notes (100 TB corpus):
 - Shingle hashing and the MinHash, SimHash and embedding band keys run
   as vectorized Arrow kernels (``mapInPandas``) — narrow per-row
-  maps, no shuffle — each an integer- or IEEE-exact replica of an
-  expression form (``_minhash_sig``, ``_simhash_bits``, ``_emb_bits``)
-  kept for the differential tests.
+  maps, no shuffle — each an integer- or IEEE-exact replica of a
+  reference form the differential tests diff it against: the
+  expression forms ``_minhash_sig``, ``_simhash_bits`` and
+  ``_band_keys``, and for the embedding signs the oracle's
+  ``_emb_bits_sql``.
 - The only shuffles are groupBy/join on (band_key) and (pair) — both
   narrow keys; payloads (text, shingle arrays) are joined back only
   for the tiny candidate set.
@@ -84,7 +86,6 @@ from ..functions.portable import (
     let_col,
     poly_hash,
     round6,
-    round6_sql,
     poly_hash_sql,
 )
 
@@ -172,6 +173,9 @@ _SH_CTE = f"""
 
 
 def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh) through the expression form ``_shingles``: the
+    reference form the shingle Arrow kernel is diffed against in the
+    tests."""
     # fan_out BEFORE the shingle projection: the HOF shingle build is
     # the expensive stage and must not run on one input split.
     # NULL text carries no content: the expression form would emit
@@ -612,6 +616,9 @@ def _minhash_sig(hs: Column) -> Column:
     no explode, no shuffle. The permutation constants ride along as
     two literal array columns (2 Literal nodes total) instead of 64
     unrolled expressions — keeps the codegen'd method small.
+
+    Reference form: the MinHash Arrow kernel must equal it, and the
+    tests diff the two.
     """
     a_lit = F.lit([a for a, _ in _PERMS])
     b_lit = F.lit([b for _, b in _PERMS])
@@ -627,7 +634,8 @@ def _minhash_sig(hs: Column) -> Column:
 def _band_keys(sig: Column, bands: int, rows: int) -> Column:
     """Band keys 'j-v1-v2-…' — the key format is internal (keys only
     ever meet keys from the same engine), only the band *partition* of
-    the signature must match the oracle's."""
+    the signature must match the oracle's. Reference form the banding
+    kernels are diffed against in the tests."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda j: F.concat(
@@ -758,12 +766,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- duplicate clustering
 
-def connected_components(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b", max_iter: int = 30
-) -> DataFrame:
-    """Connected components over an undirected pair list by min-label
-    propagation: every node's label converges to the smallest node id
-    in its component. Returns (node, component).
+def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+    """Connected components over an undirected (doc_a, doc_b) pair list
+    by min-label propagation: every node's label converges to the
+    smallest node id in its component. Returns (node, component).
 
     Scale shape: the iteration state is one (node, label) table keyed
     by node — NODES OF THE PAIR GRAPH ONLY, a tiny fraction of the
@@ -793,7 +799,7 @@ def connected_components(
     diameter exceeds the bound must fail loudly — raise ``max_iter``
     for general deep graphs.
     """
-    edges = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
+    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = (
         edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -931,7 +937,8 @@ def _simhash_bits(ht: Column) -> Column:
     """64 sign bits from a materialized token-hash array column:
     bit_i = sign of Σ_tokens (±1 by parity of the i-th affine
     permutation of the token hash). Token multiplicity counts
-    (frequency-weighted SimHash)."""
+    (frequency-weighted SimHash). Reference form the SimHash Arrow
+    kernel is diffed against in the tests."""
     a_lit = F.lit([a for a, _ in _SIM_PERMS])
     b_lit = F.lit([b for _, b in _SIM_PERMS])
     return F.zip_with(
@@ -1066,33 +1073,14 @@ def _simhash_bits_sql() -> str:
 
 # ------------------------------------------------------------- embeddings
 
-def _emb_bits(vec: Column) -> Column:
-    """Sign bits of deterministic hyperplane projections (double-
-    precision left-fold dot products — bit-identical to the oracle).
-    The 64×64 plane matrix is ONE nested-array literal; bits come from
-    a transform over it, not 64 unrolled dot products."""
-    return F.transform(
-        F.lit(_PLANES),
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(vec, p, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            > 0,
-            1,
-        ).otherwise(0),
-    )
-
-
 def _emb_banded_kernel_fn(bands: int = EMB_BANDS, rows: int = EMB_ROWS):
     """Arrow kernel factory: (vec_id, embedding) → exploded
     (vec_id, bk) LSH band keys for a given banding geometry.
-    Bit-identical to _emb_bits + _band_keys: the plane dot
-    products run as an explicit left-fold over dimensions (one
-    vectorized multiply-add per dim, same IEEE op sequence as
-    F.aggregate), NOT a matrix multiply, whose pairwise summation
-    order would flip sign bits of near-zero projections.
+    Bit-identical to the oracle's _emb_bits_sql + _band_keys_sql: the
+    plane dot products run as an explicit left-fold over dimensions
+    (one vectorized multiply-add per dim, the same IEEE op sequence
+    as ``dot_const_sql``), NOT a matrix multiply, whose pairwise
+    summation order would flip sign bits of near-zero projections.
     """
 
     def kernel(batches):
@@ -1141,8 +1129,7 @@ def dedup_embedding(
     identical arithmetic. The banding
     stage runs as the Arrow kernel above — 64 interpreted
     zip_with/aggregate folds per row cost 4 s at sf0.1 vs ~0.1 s
-    vectorized (the expression form survives as _emb_bits for the
-    differential test).
+    vectorized; its reference form is the oracle's _emb_bits_sql.
 
     Verification is fully JVM-side: distinct candidate (vec_a, vec_b)
     id pairs join the vector table back twice (the same shape as

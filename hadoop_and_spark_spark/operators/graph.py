@@ -48,13 +48,15 @@ ALPHA = 0.15  # jump factor, a4/RunPersonalizedPageRankBasic.java:364
 PR_SOURCES = (0, 1)
 PR_ITERATIONS = 10
 PR_NUM_NODES = 100  # driver-entry graph derived from lineitem keys
+TOP_NODES_K = 10  # nodes per source in pagerank_top_nodes
 
 
 def parse_adjacency(lines: DataFrame) -> DataFrame:
     """Parse the reference's text graph format `nodeid n1 n2 ...`
     (a4/BuildPersonalizedPageRankRecords.java:86-102) into
     (nid INT, adj ARRAY<INT>). Nodes with no out-edges are bare
-    `nodeid` lines → empty adj."""
+    `nodeid` lines → empty adj. SURVEY row G1: the registered queries
+    build their graph from lineitem keys; tests pin the parser."""
     toks = F.split(F.trim(F.col("value")), r"\s+")
     return lines.where(F.trim("value") != "").select(
         F.element_at(toks, 1).cast("int").alias("nid"),
@@ -192,7 +194,7 @@ def personalized_pagerank(
     return out
 
 
-def top_nodes_per_source(ranks: DataFrame, k: int = 10) -> DataFrame:
+def top_nodes_per_source(ranks: DataFrame, k: int) -> DataFrame:
     """Top-k nodes per source (reference G8/O4: bounded priority
     queues in mapper cleanup + single reducer → one window).
 
@@ -310,7 +312,7 @@ def pagerank_top_nodes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration CTEs as personalized_pagerank, topped by the identical
     row_number window (rank DESC, nid ASC)."""
     ranks = converged_lineitem_ranks(spark, sf_dir)
-    return top_nodes_per_source(ranks, k=10)
+    return top_nodes_per_source(ranks, k=TOP_NODES_K)
 
 
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -485,7 +487,7 @@ def _ppr_ranks_oracle() -> str:
     )
 
 
-def _ppr_top_nodes_oracle(k: int = 10) -> str:
+def _ppr_top_nodes_oracle() -> str:
     from ..functions.portable import round6_sql
 
     arms = " UNION ALL ".join(
@@ -506,7 +508,7 @@ def _ppr_top_nodes_oracle(k: int = 10) -> str:
             FROM rounded
         )
         SELECT source_idx, nid, rank
-        FROM ranked WHERE rn <= {k}
+        FROM ranked WHERE rn <= {TOP_NODES_K}
         ORDER BY source_idx, rn"""
 
 

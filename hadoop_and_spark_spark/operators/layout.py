@@ -44,32 +44,32 @@ from ..functions.portable import round6, round6_sql
 # false-positive rate of the k=1 filter is ~keys/M ≈ 0.4% — false
 # positives only cost work (they are removed by the exact join), never
 # correctness. At a real 100 TB build-side, size M at ~10 bits/key and
-# raise K_HASHES; the construction below is parameterized on both.
+# raise K_HASHES. Build and probe both read these two constants, so
+# the two sides cannot disagree on the hash layout.
 M_BITS = 1 << 18
 K_HASHES = 2
 
 URGENT_CUTOFF = "1995-04-01"
 
 
-def bloom_bitmap(keys: DataFrame, key: str, m_bits: int = M_BITS,
-                 k_hashes: int = K_HASHES) -> DataFrame:
+def bloom_bitmap(keys: DataFrame, key: str) -> DataFrame:
     """Build a Bloom filter over ``keys[key]`` as a DataFrame of
     occupied 64-bit words: ``(word_idx BIGINT, bits BIGINT)``.
 
-    Hash i is ``pmod(xxhash64(key, seed=i), m_bits)``; each key sets
-    k bits via ``bit_or`` partial aggregation, so the build is one
-    map-side-combined shuffle of at most ``m_bits/64`` rows — tiny and
+    Hash i is ``pmod(xxhash64(key, seed=i), M_BITS)``; each key sets
+    K_HASHES bits via ``bit_or`` partial aggregation, so the build is one
+    map-side-combined shuffle of at most ``M_BITS/64`` rows — tiny and
     always broadcastable even when the key SET itself is not. Only
     occupied words are materialized (absent word ⇒ all-zero bits)."""
     per_hash = []
-    for seed in range(k_hashes):
-        h = F.pmod(F.xxhash64(F.col(key), F.lit(seed)), F.lit(m_bits))
+    for seed in range(K_HASHES):
+        h = F.pmod(F.xxhash64(F.col(key), F.lit(seed)), F.lit(M_BITS))
         per_hash.append(
             keys.select(
                 (h / 64).cast("long").alias("word_idx"),
                 F.expr(
                     f"shiftleft(1L, cast(pmod(xxhash64({key}, {seed}),"
-                    f" {m_bits}) % 64 as int))"
+                    f" {M_BITS}) % 64 as int))"
                 ).alias("bit"),
             )
         )
@@ -79,17 +79,16 @@ def bloom_bitmap(keys: DataFrame, key: str, m_bits: int = M_BITS,
     return stacked.groupBy("word_idx").agg(F.bit_or("bit").alias("bits"))
 
 
-def bloom_might_contain(probe: DataFrame, key: str, bitmap: DataFrame,
-                        m_bits: int = M_BITS,
-                        k_hashes: int = K_HASHES) -> DataFrame:
+def bloom_might_contain(probe: DataFrame, key: str, bitmap: DataFrame) -> DataFrame:
     """Keep only ``probe`` rows whose ``key`` passes the Bloom filter
-    (every one of the k bits set). Broadcast-joins the occupied-words
-    table k times on ``word_idx`` — each a map-side hash lookup, no
-    shuffle of the probe side — and filters ``bits & bit != 0``. A
-    LEFT join treats missing words as definite-absent."""
+    (every one of the K_HASHES bits set). Broadcast-joins the
+    occupied-words table K_HASHES times on ``word_idx`` — each a
+    map-side hash lookup, no shuffle of the probe side — and filters
+    ``bits & bit != 0``. A LEFT join treats missing words as
+    definite-absent."""
     out = probe
-    for seed in range(k_hashes):
-        h = F.pmod(F.xxhash64(F.col(key), F.lit(seed)), F.lit(m_bits))
+    for seed in range(K_HASHES):
+        h = F.pmod(F.xxhash64(F.col(key), F.lit(seed)), F.lit(M_BITS))
         bm = bitmap.withColumnRenamed("bits", f"__bits{seed}")
         out = (
             out.withColumn("__w", (h / 64).cast("long"))
@@ -97,7 +96,7 @@ def bloom_might_contain(probe: DataFrame, key: str, bitmap: DataFrame,
                 "__b",
                 F.expr(
                     f"shiftleft(1L, cast(pmod(xxhash64({key}, {seed}),"
-                    f" {m_bits}) % 64 as int))"
+                    f" {M_BITS}) % 64 as int))"
                 ),
             )
             .join(F.broadcast(bm), F.col("__w") == bm.word_idx, "left")
@@ -117,7 +116,7 @@ def bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Build side: o_orderkey of orders with priority 1-URGENT placed
     before 1995-04-01 (~1% of orders). The KEY SET may be large at
-    100 TB, but its Bloom bitmap is ≤ m_bits/64 rows by construction
+    100 TB, but its Bloom bitmap is ≤ M_BITS/64 rows by construction
     — always broadcastable. Probe side: every lineitem checks the
     bitmap via broadcast word lookups (no shuffle), so only the ~1%
     true matches plus ~0.4% false positives ever reach the exact
@@ -162,12 +161,12 @@ Z_BITS = 8          # bits per dimension
 Z_BUCKETS_SHIFT = 11  # 16-bit z-key >> 11 = 32 buckets
 
 
-def zorder_key(x: Column, y: Column, bits: int = Z_BITS) -> Column:
-    """Morton-interleave two ``bits``-bit non-negative ints: x's bit i
+def zorder_key(x: Column, y: Column) -> Column:
+    """Morton-interleave two Z_BITS-bit non-negative ints: x's bit i
     lands at position 2i+1, y's at 2i. Pure integer arithmetic —
     whole-stage-codegen'd, no UDF."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(Z_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         ).bitwiseOR(
@@ -176,17 +175,17 @@ def zorder_key(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return z
 
 
-def zorder_key_sql(x: str, y: str, bits: int = Z_BITS) -> str:
+def zorder_key_sql(x: str, y: str) -> str:
     """DuckDB expression computing the identical Morton key."""
     terms = []
-    for i in range(bits):
+    for i in range(Z_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i + 1})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i})")
     return "(" + " | ".join(terms) + ")"
 
 
 def write_zordered(df: DataFrame, x: str, y: str, path: str,
-                   buckets: int = 32, bits: int = Z_BITS) -> None:
+                   buckets: int = 32) -> None:
     """Materialize ``df`` clustered by z-order over (x, y): bucket by
     the EXPLICIT top log2(buckets) bits of the Morton key, one
     hive-style directory (and exactly one file) per bucket, rows
@@ -209,15 +208,15 @@ def write_zordered(df: DataFrame, x: str, y: str, path: str,
     y-values — and the bucket id doubles as a hive partition key, so
     directory pruning composes with manifest pruning on the read
     side. At scale, grow ``buckets`` (any power of two up to
-    4^bits); each bucket stays one file per write."""
+    4^Z_BITS); each bucket stays one file per write."""
     nbits = buckets.bit_length() - 1
-    if buckets <= 0 or (1 << nbits) != buckets or nbits > 2 * bits:
+    if buckets <= 0 or (1 << nbits) != buckets or nbits > 2 * Z_BITS:
         raise ValueError(
-            f"buckets must be a power of two in [1, 4^bits]; got {buckets}"
+            f"buckets must be a power of two in [1, 4^Z_BITS]; got {buckets}"
         )
-    keyed = df.withColumn("__z", zorder_key(F.col(x), F.col(y), bits))
+    keyed = df.withColumn("__z", zorder_key(F.col(x), F.col(y)))
     keyed = keyed.withColumn(
-        "__zb", F.shiftright("__z", 2 * bits - nbits).cast("int")
+        "__zb", F.shiftright("__z", 2 * Z_BITS - nbits).cast("int")
     )
     (
         # Hash-repartition on the bucket id: collisions only co-locate

@@ -11,8 +11,8 @@ Spark-first re-expression:
   reference surface (SURVEY §2.12): a single-partition Arrow-batched
   ``mapInPandas`` pass that streams batches through a running weight
   dict — the only place Python touches row data, and it touches each
-  row exactly once. Since round 10 the kernel is FIXED-POINT (integer
-  micro-unit weights, shared quantized sigmoid table — see the SGD_*
+  row exactly once. The kernel is FIXED-POINT (integer micro-unit
+  weights, shared quantized sigmoid table — see the SGD_*
   constants), which makes the weight trajectory bit-reproducible and
   lets a DuckDB recursive CTE replay the sequential pass op-for-op:
   spam_train and spam_eval_trained are hash-gated driver rows.
@@ -52,9 +52,9 @@ SPAM_MARKER = "spark"
 N_FEATURES = 1009
 ENSEMBLE_MULTS = (2654435761, 2246822519, 3266489917)
 
-# --- fixed-point SGD (round 10): the k-means integer-quantization
-# recipe applied to the sequential trainer, which upgraded spam_train
-# / spam_eval_trained from rows-only to hash-gated driver rows.
+# --- fixed-point SGD: the k-means integer-quantization recipe applied
+# to the sequential trainer, which makes spam_train /
+# spam_eval_trained hash-gated driver rows.
 #
 # Weights live in integer micro-units (SGD_WQ per 1.0) and every
 # update is an exact-integer add, so the weight trajectory is
@@ -136,7 +136,6 @@ def spam_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def train_spam_classifier(
     instances: DataFrame,
-    delta: float = DELTA,
     shuffle_seed: int | None = None,
     epochs: int = 1,
 ) -> DataFrame:
@@ -156,7 +155,7 @@ def train_spam_classifier(
     """
     import math
 
-    inv = _inv_delta(delta)
+    inv = _inv_delta(DELTA)
     # Materialize BEFORE the global sort: orderBy's range-partition
     # sampling pass executes its child, so an unmaterialized
     # tokenize+feature projection would run twice.
@@ -232,7 +231,9 @@ def _grouped_model_sum(instances: DataFrame, model: DataFrame, weight_col, zero)
 def score_with_model(instances: DataFrame, model: DataFrame) -> DataFrame:
     """Relational scoring (a6/ApplySpamClassifier.scala:48-83):
     explode features, broadcast-join the weight table, sum per doc.
-    Docs whose features all miss the model score 0."""
+    Docs whose features all miss the model score 0. SURVEY row M3:
+    the registered entries score through ``_grouped_model_sum``
+    directly; tests pin this float form."""
     scored = _grouped_model_sum(instances, model, F.col("weight"), F.lit(0.0))
     return scored.select(
         "docid",
@@ -242,15 +243,11 @@ def score_with_model(instances: DataFrame, model: DataFrame) -> DataFrame:
     )
 
 
-def train_sharded(
-    instances: DataFrame, n_shards: int = 3, delta: float = DELTA
-) -> list[DataFrame]:
+def train_sharded(instances: DataFrame, n_shards: int = 3) -> list[DataFrame]:
     """Per-shard models for the ensemble (reference part-00000/1/2,
     a6/ApplyEnsembleSpamClassifier.scala:54-70); shard = docid % n."""
     return [
-        train_spam_classifier(
-            instances.where(F.col("docid") % n_shards == i), delta=delta
-        )
+        train_spam_classifier(instances.where(F.col("docid") % n_shards == i))
         for i in range(n_shards)
     ]
 
@@ -332,8 +329,8 @@ def spam_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_score_auc(scored)
 
 
-def grouped_score_auc(scored: DataFrame, score_col: str = "s") -> DataFrame:
-    """Tie-aware rank-sum AUC over (label, score) rows — the
+def grouped_score_auc(scored: DataFrame) -> DataFrame:
+    """Tie-aware rank-sum AUC over (label, s) rows — the
     relational core shared by spam_eval (arithmetic model) and
     spam_eval_trained (real SGD ensemble). Groups by exact score
     value, so callers with FP scores should round first to keep tie
@@ -343,7 +340,7 @@ def grouped_score_auc(scored: DataFrame, score_col: str = "s") -> DataFrame:
 
     from ..functions.portable import round6
 
-    g = scored.groupBy(F.col(score_col).alias("s")).agg(
+    g = scored.groupBy("s").agg(
         F.sum(F.when(F.col("label") == "spam", 1).otherwise(0)).alias("ns"),
         F.sum(F.when(F.col("label") == "ham", 1).otherwise(0)).alias("nh"),
     )
@@ -364,13 +361,13 @@ def grouped_score_auc(scored: DataFrame, score_col: str = "s") -> DataFrame:
 
 
 def spam_eval_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-ROCA% of the REAL sharded-SGD ensemble. HASH-GATED since
-    round 10 (was rows-only for nine rounds): the fixed-point trainer
-    is bit-reproducible and the ensemble is scored in INTEGER space —
-    summing the shards' integer micro-unit weights per feature and
-    per doc — so the AUC tie groups are exact-arithmetic and the
-    DuckDB oracle replays the whole pipeline (one recursive-CTE
-    trainer per shard feeding the shared relational AUC).
+    """1-ROCA% of the REAL sharded-SGD ensemble, HASH-GATED: the
+    fixed-point trainer is bit-reproducible and the ensemble is scored
+    in INTEGER space — summing the shards' integer micro-unit weights
+    per feature and per doc — so the AUC tie groups are
+    exact-arithmetic and the DuckDB oracle replays the whole pipeline
+    (one recursive-CTE trainer per shard feeding the shared relational
+    AUC).
 
     The a6 pipeline end-to-end (TrainSpamClassifier → part-00000/1/2
     → ApplyEnsembleSpamClassifier --method average → spam_eval.sh):
@@ -412,10 +409,9 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
 
 
 def spam_train_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-model driver entry. HASH-GATED since round 10 (was
-    rows-only for nine rounds — the old float trainer's weight
-    trajectory was libm/exp-dependent): the fixed-point trainer is
-    bit-reproducible, and the DuckDB oracle replays the sequential
+    """Trained-model driver entry, HASH-GATED: the fixed-point trainer
+    is bit-reproducible (a float trainer's weight trajectory would be
+    libm/exp-dependent), and the DuckDB oracle replays the sequential
     pass as a recursive CTE over the docid-ordered instances, sharing
     the module's sigmoid table verbatim. weight = w_q / SGD_WQ is one
     correctly-rounded IEEE division per feature, identical in both
@@ -468,13 +464,12 @@ def _sgd_train_ctes(sfx: str, where: str = "TRUE", epochs: int = 1) -> str:
     table by row number — DuckDB has no CTE indexes, so that probe is
     an O(n·f̄) scan of nb's sparse feature lists per step, then the
     weight update is one 1009-wide list_transform whose per-slot
-    list_contains walks the doc's f̄ features. The round-10 form
-    instead precomputed a docs × 1009 dense MASK grid (the mk CTE)
-    and scanned those masks per step — O(n·1009) per step, O(n²·1009)
-    overall: 27.9 s + 9.2 s for the spam_train/spam_eval_trained pair
-    at sf0.1 (5000 docs). Dropping the masks for the sparse
-    list_contains update cut the pair to 7.9 s + 3.8 s at identical
-    bits (round 11; before/after ledger in SURVEY §5). Still O(n²) in
+    list_contains walks the doc's f̄ features. A dense form that
+    precomputes a docs × 1009 MASK grid and scans those masks per
+    step costs O(n·1009) per step, O(n²·1009) overall: 27.9 s + 9.2 s
+    for the spam_train/spam_eval_trained pair at sf0.1 (5000 docs),
+    against 7.9 s + 3.8 s for the sparse list_contains update at
+    identical bits (before/after ledger in SURVEY §5). Still O(n²) in
     the scan term — fine for driver compares (500 docs) and the sf0.1
     mirrors; a 10⁶-row corpus would bottleneck here, which is why the
     trainer shards per ensemble member at scale (train_sharded) and

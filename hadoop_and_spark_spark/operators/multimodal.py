@@ -5,10 +5,11 @@ opaque ``binary`` columns and run decode / feature-extract /
 frame-sample as Arrow-batched Pandas UDFs (``mapInPandas``).
 
 The container ships no media libraries, so the default pipeline uses
-``_decode_fake`` — a deterministic function of the byte payload
-(documented below) — keeping the full Spark-side machinery (binary
-column through Arrow, batch iteration, output schema, downstream
-relational ops) real and oracle-checked end-to-end.
+the fake-decode kernel ``_decode_batches`` — a deterministic function
+of the byte payload (documented below) — keeping the full Spark-side
+machinery (binary column through Arrow, batch iteration, output
+schema, downstream relational ops) real and oracle-checked
+end-to-end.
 
 Real-decode scope (a deliberate boundary, not a stub):
 $SPARK_GRAFT_REAL_DECODE=1 switches ``multimodal_decode`` to
@@ -342,21 +343,6 @@ def _decode_real(media: bytes, media_type: str) -> dict:
         "pre-processing service's job, not a Spark task's — such rows "
         "must fail loudly, not silently fake-decode."
     )
-
-
-def _decode_fake(n: int, media_type: str) -> tuple[int, int, int, int, float]:
-    """Deterministic stand-in for decode — see module docstring."""
-    width = 64 + (31 * n) % 1024 if media_type in ("image", "video") else 0
-    height = 64 + (17 * n) % 768 if media_type in ("image", "video") else 0
-    duration = 10 * n if media_type in ("audio", "video") else 0
-    if media_type == "video":
-        frames = 1 + n % 30
-    elif media_type == "image":
-        frames = 1
-    else:
-        frames = 0
-    feature = ((FEATURE_MULT * n) % FEATURE_MOD) / float(FEATURE_MOD)
-    return width, height, duration, frames, feature
 
 
 def _decode_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

@@ -312,11 +312,11 @@ Q9_CUM_BUCKET = 64.0
 
 
 def q9_percentiles_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The builtin exact ``percentile`` form of q9 — TEST-ONLY
-    differential baseline (tests/test_relational.py pins the
-    registered histogram plan against it bit-for-bit). NOT registered:
-    exact ``percentile`` buffers every group value inside one
-    aggregation buffer, which OOMs at 100× lineitem."""
+    """The builtin exact ``percentile`` form of q9 — a reference form
+    the tests diff the registered histogram plan against bit-for-bit
+    (tests/test_relational.py). NOT registered: exact ``percentile``
+    buffers every group value inside one aggregation buffer, which
+    OOMs at 100× lineitem."""
     li = load_table(spark, sf_dir, "lineitem")
     pct = lambda p: F.round(  # noqa: E731 — tiny local alias
         F.percentile("l_extendedprice", F.lit(p)), 6
@@ -348,22 +348,26 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of table size), then one conditional-max aggregate
     picks the two bracketing values per percentile and interpolates.
 
-    The cumulative is TWO-LEVEL (round 13, guide §2.5): one window
-    per flag puts each flag's whole price domain in ONE task — a
-    fresh stage profile measured the post-histogram part at ~1.4 s of
-    the 2.0 s total (3 single-task windows over ~583 k rows each with
-    29 cores idle; on a cluster the stage can never parallelize past
-    the flag count). The running sum therefore runs per
+    The cumulative is TWO-LEVEL (guide §2.5): one window per flag
+    would put each flag's whole price domain in ONE task — a stage
+    profile measured that form's post-histogram part at ~1.4 s of the
+    2.0 s total (3 single-task windows over ~583 k rows each with 29
+    cores idle; on a cluster the stage can never parallelize past the
+    flag count). The running sum therefore runs per
     (flag, price-bucket) — parallel sub-windows Q9_CUM_BUCKET price
     units wide — and each bucket's starting offset comes from a
     per-flag prefix-sum window over the bucket TOTALS (≤ domain/width
     rows, broadcast back onto the histogram). cum/lo/n are sums of
     longs grouped identically either way, so results are
-    bit-identical to the single-window form (equality-gated before
-    promotion, mode q9two of `git show 7d0ad39:tools/ab_r13.py`):
-    floor(price/width) is monotone in price, so (b asc, price asc
-    within b) IS global price order, and a NULL price folds into the
-    NULLs-first bucket both levels order first.
+    bit-identical to the single-window form: floor(price/width) is
+    monotone in price, so (b asc, price asc within b) IS global price
+    order.
+
+    NULLs follow the builtin and the oracle: a NULL flag is a group
+    of its own (the offset join is null-safe on both keys), the
+    percentiles range over non-NULL prices only (``n`` and the offsets
+    skip the NULL-price bucket ``b``), and ``cnt`` counts every row
+    (the NULL-price bucket's rows count in ``tot``).
 
     Interpolation mirrors Spark's own Percentile.getPercentile
     arithmetic exactly — pos = p·(n−1), lower/higher bracketing
@@ -386,13 +390,15 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_ball = Window.partitionBy("l_returnflag")
+    priced = F.when(F.col("b").isNotNull(), F.col("bc"))
     boff = btot.select(
-        "l_returnflag",
-        "b",
-        F.coalesce(F.sum("bc").over(w_boff), F.lit(0).cast("long")).alias(
+        F.col("l_returnflag").alias("_flag"),
+        F.col("b").alias("_b"),
+        F.coalesce(F.sum(priced).over(w_boff), F.lit(0).cast("long")).alias(
             "off"
         ),
-        F.sum("bc").over(w_ball).alias("n"),
+        F.sum(priced).over(w_ball).alias("n"),
+        F.sum("bc").over(w_ball).alias("tot"),
     )
     w_cum = (
         Window.partitionBy("l_returnflag", "b")
@@ -400,7 +406,11 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     hist = (
-        hist.join(F.broadcast(boff), ["l_returnflag", "b"])
+        hist.join(
+            F.broadcast(boff),
+            F.col("l_returnflag").eqNullSafe(F.col("_flag"))
+            & F.col("b").eqNullSafe(F.col("_b")),
+        )
         .withColumn("cum", F.col("off") + F.sum("c").over(w_cum))
         .withColumn("lo", F.col("cum") - F.col("c"))  # first 0-based rank held
     )
@@ -408,7 +418,8 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     def bracket(p: float):
         """Conditional-max aggregates picking the values at 0-based
         ranks floor(pos) and ceil(pos); a histogram row holds ranks
-        [lo, cum)."""
+        [lo, cum). NULL-price rows (bucket b = NULL, offset 0) overlap
+        those ranks, but their NULL value drops out of the max."""
         pos = F.lit(p) * (F.col("n") - F.lit(1)).cast("double")
         k_lo = F.floor(pos)
         k_hi = -F.floor(-pos)  # ceil, kept integral as a long
@@ -426,14 +437,14 @@ def q9_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return v_lo, v_hi
 
-    aggs = [F.max("n").alias("cnt")]
+    aggs = [F.max("n").alias("_n"), F.max("tot").alias("cnt")]
     for name, p in Q9_PCTS:
         v_lo, v_hi = bracket(p)
         aggs += [v_lo.alias(f"_lo_{name}"), v_hi.alias(f"_hi_{name}")]
     out = hist.groupBy("l_returnflag").agg(*aggs)
 
     def interp(name: str, p: float):
-        pos = F.lit(p) * (F.col("cnt") - F.lit(1)).cast("double")
+        pos = F.lit(p) * (F.col("_n") - F.lit(1)).cast("double")
         k_lo = F.floor(pos)
         k_hi = -F.floor(-pos)
         v_lo, v_hi = F.col(f"_lo_{name}"), F.col(f"_hi_{name}")

@@ -453,7 +453,7 @@ def _kmeans_iter_stats(
 
 
 def train_spherical_kmeans(
-    qvec: DataFrame, k: int = NCENTROIDS, iters: int = KMEANS_ITERS
+    qvec: DataFrame, iters: int = KMEANS_ITERS
 ) -> tuple[list[tuple[int, list[float]]], list[float]]:
     """Spherical k-means (Lloyd's) under cosine geometry over the
     QUANTIZED corpus: assign each vector to the centroid maximizing
@@ -482,7 +482,7 @@ def train_spherical_kmeans(
     clustering exists in the reference surface itself."""
     import math
 
-    seed = qvec.where(F.col("vec_id") < k).orderBy("vec_id").collect()
+    seed = qvec.where(F.col("vec_id") < NCENTROIDS).orderBy("vec_id").collect()
     cents = [(i, [float(x) for x in r.q]) for i, r in enumerate(seed)]
     history: list[float] = []
     if not cents:  # empty corpus: nothing to train
@@ -1202,8 +1202,9 @@ def _kmeans_train_sql(quant: float = KM_QUANT) -> str:
 def _kmeans_model_sql(quant: float = KM_QUANT) -> str:
     """The trained integer centroids themselves, one (cid, m) row per
     cluster — the model-level parity surface (the _pca_model_sql
-    pattern): the recovery-contract test re-trains at a coarser quant
-    and compares the Python model against THIS, bit-for-bit."""
+    pattern), a reference form: the recovery-contract test re-trains
+    at a coarser quant and compares the Python model against THIS,
+    bit-for-bit."""
     return (
         f"WITH {_kmeans_train_sql(quant)}\n"
         f"    SELECT cid, m FROM cents{KMEANS_ITERS} ORDER BY cid"
@@ -1410,10 +1411,10 @@ def _pca_oracle_sql() -> str:
 
 def _pca_model_sql(quant: float = PCA_QUANT) -> str:
     """The trained components themselves, one row per (k, comp) — the
-    model-level parity surface the cross-engine test compares against
-    _pca_power_train bit-for-bit (stronger than the projection
-    compare: a coordinate error that round6 masks in every projected
-    coord would still fail here). Requires a NON-EMPTY corpus to
+    model-level parity surface (a reference form) the cross-engine
+    test compares _pca_power_train against bit-for-bit (stronger than
+    the projection compare: a coordinate error that round6 masks in
+    every projected coord would still fail here). Requires a NON-EMPTY corpus to
     return rows (st0's n > 0 guard yields zero rows otherwise).
     ``quant`` regenerates the model chain at a coarser micro-unit
     step for the recovery-contract test."""

@@ -47,7 +47,6 @@ def salted_equi_join(
     key: str,
     spread: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join on ``key`` with the skewed side's hot keys spread
     over ``salt`` shuffle sub-keys.
@@ -64,7 +63,7 @@ def salted_equi_join(
     right = other.withColumn(
         SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return left.join(right, [key, SALT_COL], how).drop(SALT_COL)
+    return left.join(right, [key, SALT_COL]).drop(SALT_COL)
 
 
 # ------------------------------------------- registered demonstration

@@ -61,6 +61,9 @@ def _normalize(rows: list[tuple], cols: list[str]) -> list[tuple]:
 def compare(
     spark: SparkSession, sf_dir: str, fn, sql: str
 ) -> tuple[bool, str]:
+    """Run ``fn`` and the oracle ``sql`` over ``sf_dir`` and compare them
+    the way the driver does: (ok, message). The tests' entry into this
+    harness; tools/driver_check.py runs the driver's own typed hash."""
     sdf = fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns

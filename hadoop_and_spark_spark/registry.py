@@ -92,24 +92,6 @@ def last_green_round(has_oracle: set[str] | None = None) -> dict[str, int]:
     return {name: rnd for name, (rnd, green) in latest.items() if green}
 
 
-def query_modules() -> dict[str, str]:
-    """Query name -> owning operator module (short name) — the
-    ATTRIBUTION map (which family owns a query), used by family-scoped
-    sweeps like the hot-user test."""
-    out: dict[str, str] = {}
-    for modname in _OPERATOR_MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ImportError:
-            continue
-        short = modname.rsplit(".", 1)[1]
-        if ".streaming." in modname:
-            short = f"streaming.{short}"
-        for name in getattr(mod, "QUERIES", {}):
-            out[name] = short
-    return out
-
-
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}

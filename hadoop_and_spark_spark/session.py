@@ -28,9 +28,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
-    """Round-robin repartition IFF the plan has fewer partitions than
-    the target. Small local scans (one parquet file) otherwise pin
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to ``defaultParallelism`` partitions IFF
+    the plan has fewer. Small local scans (one parquet file) otherwise pin
     every downstream stage — Arrow kernels especially — to one core;
     a 100 TB scan already has >> defaultParallelism input splits, so
     there this is a no-op (no shuffle inserted).
@@ -40,33 +40,20 @@ def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:
     eagerly EXECUTES — any shuffle stages the plan contains, running
     them again when the real action fires. For a shuffle-rooted frame
     use a plain ``repartition(n)`` instead."""
-    sc = df.sparkSession.sparkContext
-    target = parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
-def fan_out_local_sorted(df: DataFrame, *cols: str, parts: int | None = None) -> DataFrame:
+def fan_out_local_sorted(df: DataFrame, *cols: str) -> DataFrame:
     """Parallel + WITHIN-PARTITION ordered — the scale-safe form for
     corpus-sized outputs whose ordering is presentation-only: the
     round-robin ``fan_out`` (a no-op once the scan has enough input
     splits, i.e. always at 100 TB) followed by a local sort (no
-    exchange, no range-sampling pass). Use ``fan_out_sorted`` only
-    when downstream logic genuinely needs global range order."""
-    return fan_out(df, parts).sortWithinPartitions(*cols)
-
-
-def fan_out_sorted(df: DataFrame, col: str, parts: int | None = None) -> DataFrame:
-    """Globally ordered AND parallel: range-partition on ``col`` into
-    an explicit partition count (exempt from AQE coalescing, which
-    would fold a small sort down to one post-shuffle partition and
-    serialize whatever follows), then sort within partitions. Output
-    ordering equals ``orderBy(col)`` at a fraction of the cost for
-    downstream per-partition work."""
-    sc = df.sparkSession.sparkContext
-    target = parts or sc.defaultParallelism
-    return df.repartitionByRange(target, col).sortWithinPartitions(col)
+    exchange, no range-sampling pass). Where downstream logic needs
+    global order, ``orderBy`` it."""
+    return fan_out(df).sortWithinPartitions(*cols)
 
 
 def _mem_bytes(spec: str) -> int:

@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 def write_jsonl(df: DataFrame, path: str) -> None:
     """Write one JSON object per line (Spark emits one part file per
     partition; compact first if the consumer needs few files —
-    sources/maintenance.py)."""
+    sources/maintenance.py). SURVEY row X39, pinned by the tests."""
     df.write.mode("overwrite").json(path)
 
 
@@ -41,5 +41,5 @@ def read_jsonl(
 ) -> DataFrame:
     """Schema-REQUIRED JSONL scan: single pass, no inference job,
     corrupt lines fail loudly (FAILFAST) rather than becoming NULL
-    rows silently."""
+    rows silently. SURVEY row X39, pinned by the tests."""
     return spark.read.schema(schema).option("mode", "FAILFAST").json(path)

@@ -283,9 +283,10 @@ def session_memo(spark: SparkSession, sf_dir: str, table: str, version: str, bui
 
 def evict_version(version: str) -> None:
     """Drop every session-memo entry whose artifact VERSION tag
-    matches — the supported test-facing way to force a rebuild of one
-    artifact family (the budget-guard and recovery-contract tests
-    need a memo MISS so the build path actually runs). Matches on the
+    matches — a test hook onto the private memo: the supported way to
+    force a rebuild of one artifact family (the budget-guard and
+    recovery-contract tests need a memo MISS so the build path
+    actually runs). Matches on the
     marker's version field proper (rsplit, the _memo_insert
     discipline), not a substring of the whole key, so a path that
     happens to contain the version string can't be swept by accident.
@@ -326,7 +327,8 @@ def compact_parquet(
     ``maxPartitionBytes`` already papers over small files for READS,
     but footer/open overhead and driver file listings still scale with
     file COUNT, which is what compaction fixes. Returns the file count
-    written."""
+    written. SURVEY row X34: no registered query compacts; tests pin
+    it."""
     n_files = max(1, math.ceil(parquet_data_size(in_path) / target_file_bytes))
     df = read_parquet(spark, in_path)
     df.repartition(n_files).write.mode("overwrite").parquet(out_path)

@@ -10,9 +10,9 @@ N time-ordered parquet files and replay them with the file source +
 the same deterministic batch boundaries without any clock hackery.
 
 ``write_replay_batches`` is the one writer of that layout (file
-names, one file per batch, mtime order); the ntile split, the
-scripted per-frame replay and the weekly event replay
-(streaming/trending.py) only compute each row's batch number.
+names, one file per batch, mtime order); the scripted per-frame
+replay and the weekly event replay (streaming/trending.py) only
+compute each row's batch number.
 Readers pass the replay directory to ``read_replay_stream``.
 """
 
@@ -24,7 +24,7 @@ import shutil
 import time
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -92,52 +92,6 @@ def write_replay_batches(
         os.utime(dest, (base + b, base + b))
     shutil.rmtree(stage, ignore_errors=True)
     return n_batches
-
-
-def write_replay_files(df: DataFrame, ts_col: str, out_dir: str, n_files: int) -> int:
-    """Split ``df`` into ``n_files`` contiguous equal-count time ranges
-    with ntile semantics (remainder rows go to the EARLIEST files;
-    past the row count, files are empty) via ``write_replay_batches``.
-    Returns the file count.
-
-    No global single-partition window: ``ts_col`` is range-partitioned
-    (partition id order IS time order), one small job counts rows per
-    partition, and a row's global index is its partition's offset plus
-    a per-partition row_number. The bucket is the closed-form ntile
-    inverse of that index; rows tied on ``ts_col`` at a bucket
-    boundary may fall on either side."""
-    from .maintenance import artifact_checkpoint
-
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    # _pid is materialized as a COLUMN on the checkpointed partitions
-    # (not referenced inline downstream, where it would be re-evaluated
-    # AFTER the window's own exchange and yield the wrong id).
-    staged = artifact_checkpoint(
-        df.repartitionByRange(parts, ts_col)
-    ).withColumn("_pid", F.spark_partition_id())
-    sizes = {
-        r["_pid"]: r["n"]
-        for r in staged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offs, acc = [0] * (max(sizes, default=-1) + 2), 0
-    for pid in sorted(sizes):
-        offs[pid] = acc
-        acc += sizes[pid]
-    # `base` rows per bucket, one more for each of the first `rem`;
-    # when base == 0 every row index is below `cut`
-    base, rem = divmod(acc, n_files)
-    cut = rem * (base + 1)
-
-    off = F.element_at(F.lit(offs), F.col("_pid") + 1)
-    w = Window.partitionBy("_pid").orderBy(ts_col)
-    idx = (off + F.row_number().over(w) - 1).cast("long")
-    bucket = F.when(idx < cut, F.floor(idx / (base + 1))).otherwise(
-        rem + F.floor((idx - cut) / max(base, 1))
-    )
-    return write_replay_batches(
-        staged.withColumn("_batch", bucket.cast("int")).drop("_pid"),
-        "_batch", n_files, out_dir,
-    )
 
 
 def write_scripted_batches(dfs: list[DataFrame], out_dir: str) -> int:

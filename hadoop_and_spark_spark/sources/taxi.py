@@ -58,7 +58,8 @@ def read_taxi_csv(spark: SparkSession, path: str) -> DataFrame:
 def read_taxi_csv_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     """The same positional projection over a file-source STREAM — the
     reference's actual deployment shape (a7 consumed the taxi feed as
-    a DStream; here the CSV directory is the micro-batch source)."""
+    a DStream; here the CSV directory is the micro-batch source). No
+    registered query streams the taxi CSVs; tests pin it."""
     return _taxi_projection(
         read_replay_stream(spark, dir_path, _TAXI_SCHEMA, fmt="csv")
     )

@@ -97,7 +97,8 @@ TBL_SCHEMAS: dict[str, list[tuple[str, T.DataType]]] = {
 def read_tbl(spark: SparkSession, path: str, table: str) -> DataFrame:
     """Read a .tbl file into a typed DataFrame. Trailing '|' in the
     format produces a phantom empty last field, absorbed by a
-    throwaway column."""
+    throwaway column. SURVEY row S1 (text file scan): no registered
+    query reads raw .tbl; tests pin it."""
     cols = TBL_SCHEMAS[table]
     schema = T.StructType(
         [T.StructField(n, t, True) for n, t in cols]
@@ -127,7 +128,9 @@ _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 
 def write_text_table(df: DataFrame, out_dir: str) -> None:
-    """K1 text sink: pipe-delimited CSV + StructType sidecar."""
+    """K1 text sink: pipe-delimited CSV + StructType sidecar. SURVEY
+    row K1: no registered query writes text; tests pin the round trip
+    through ``read_text_table``."""
     import os
 
     (

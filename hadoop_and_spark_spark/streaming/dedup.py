@@ -31,7 +31,6 @@ from .runtime import run_replay
 
 def streaming_dedup_exact(
     docs_stream: DataFrame,
-    text_col: str = "text",
     watermark: tuple[str, str] | None = None,
 ) -> DataFrame:
     """First-arrival-wins exact dedup over a document stream.
@@ -42,7 +41,7 @@ def streaming_dedup_exact(
     cost of re-admitting a duplicate that re-arrives after the
     delay).
     """
-    hashed = docs_stream.withColumn("text_md5", F.md5(F.col(text_col)))
+    hashed = docs_stream.withColumn("text_md5", F.md5(F.col("text")))
     if watermark is not None:
         ts_col, delay = watermark
         return hashed.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(

@@ -112,7 +112,8 @@ def purchase_click_pairs_stream(events_stream: DataFrame) -> DataFrame:
 
 
 def purchase_click_pairs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch twin of the stream-stream join, for the duality test.
+    """The batch twin of the stream-stream join: a reference form the
+    duality test diffs the stream against.
     (Deliberately the naive interval join: at test scale it is exact
     and simple; the scale-safe BATCH form is the bucketized
     range_join_counts — X23 — which aggregates these same pairs.)"""

@@ -131,7 +131,8 @@ def register_sink(tag: str, sf_dir: str) -> str:
 def sink_table(spark, sf_dir: str, tag: str) -> DataFrame:
     """The raw (pre-consolidation) memory sink of the newest ``tag``
     stream run over ``sf_dir`` in this session. Raises KeyError if no
-    such stream has run — callers invoke the query first."""
+    such stream has run — callers invoke the query first. A test hook
+    onto the private sink registry."""
     return spark.table(_SINKS[(tag, _corpus_digest(sf_dir))])
 
 

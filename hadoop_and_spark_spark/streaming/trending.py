@@ -526,17 +526,22 @@ def _run_weekly_replay(spark, sf_dir: str) -> DataFrame:
     ).orderBy("key", "week")
 
 
-def trending_stream(events_stream: DataFrame, key_col: str = "event_type") -> DataFrame:
-    """Per-micro-batch arrival counts per key with trend alerts.
+def trending_stream(events_stream: DataFrame) -> DataFrame:
+    """Per-micro-batch arrival counts per event type with trend alerts.
 
     Matches the reference's batch-granularity semantics (each
     micro-batch plays the role of one 1-minute DStream batch; the
     10-minute windowing variant composes this after a windowed
     pre-aggregation).
+
+    Reference form, not registered: the stateful twin that
+    tests/test_streaming.py replays scripted batches through and diffs
+    against windows.trending_lagged_counts. The registered
+    ``trending_arrivals_stream`` runs the same rule per week.
     """
     from pyspark.sql import functions as F
 
-    keyed = events_stream.select(F.col(key_col).alias("key"))
+    keyed = events_stream.select(F.col("event_type").alias("key"))
     return keyed.groupBy("key").applyInPandasWithState(
         _trend_fn,
         outputStructType=OUTPUT_SCHEMA,

@@ -2,12 +2,10 @@
 
 The reference runs DStream jobs — `reduceByKeyAndWindow` with an
 inverse function, manual-clock micro-batches — whose *semantics* are
-plain event-time tumbling windows. Each query here is expressed
-once over the batch `events` table (DuckDB-checkable, the driver
-gate) and once as a Structured Streaming pipeline
-(`streaming_windowed_counts`) used by the streaming tests; both
-share the same aggregation expression, so the batch oracle checks
-the streaming logic too.
+plain event-time tumbling windows. Each query here is expressed over
+the batch `events` table (DuckDB-checkable, the driver gate). The
+Structured Streaming twins are the replay queries of
+streaming/trending.py, whose oracles live here beside the batch forms.
 
 Mapping (SURVEY §2.9):
 - T2 EventCount: tumbling 1-hour count over everything.
@@ -146,13 +144,21 @@ def trending_arrivals_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/trending.py::_trend_fn). No fan_out — see
     event_count_hourly."""
     ev = load_table(spark, sf_dir, "events")
-    return trending_alerts_core(ev)
+    return (
+        trending_lagged_counts(ev)
+        .where("trending")
+        .select(
+            "event_type",
+            F.date_format("ws", _WINDOW_FMT).alias("window_start"),
+            "cnt",
+            "prev",
+        )
+        .orderBy("event_type", "window_start")
+    )
 
 
-def trending_lagged_counts(
-    ev: DataFrame, key_col: str = "event_type", window_len: str = "1 hour"
-) -> DataFrame:
-    """Per-key windowed counts with the previous EXISTING window's
+def trending_lagged_counts(ev: DataFrame) -> DataFrame:
+    """Per-type hourly counts with the previous EXISTING window's
     count and the trend flag — the full state trajectory, unfiltered.
     This is the exact batch twin of streaming/trending.py::_trend_fn
     (which is likewise only invoked for batches where the key has
@@ -160,37 +166,17 @@ def trending_lagged_counts(
     cross-check test replays the same events through both and
     requires identical (key, cnt, prev, trending) trajectories."""
     counts = (
-        ev.groupBy(key_col, F.window("ts", window_len).alias("w"))
+        ev.groupBy("event_type", F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("cnt"))
-        .select(key_col, F.col("w.start").alias("ws"), "cnt")
+        .select("event_type", F.col("w.start").alias("ws"), "cnt")
     )
-    lagw = Window.partitionBy(key_col).orderBy("ws")
+    lagw = Window.partitionBy("event_type").orderBy("ws")
     return counts.withColumn(
         "prev", F.coalesce(F.lag("cnt").over(lagw), F.lit(0))
     ).withColumn(
         "trending",
         (F.col("cnt") >= TREND_MIN)
         & (F.col("cnt") >= TREND_FACTOR * F.greatest("prev", F.lit(1))),
-    )
-
-
-def trending_alerts_core(
-    ev: DataFrame, key_col: str = "event_type", window_len: str = "1 hour"
-) -> DataFrame:
-    """The trend-alert plan over any (key, ts) DataFrame — the
-    alert-rows projection of ``trending_lagged_counts``, shared by the
-    registered batch query and the batch↔stream cross-check test
-    (tests/test_streaming.py::test_batch_stream_trend_trajectories)."""
-    return (
-        trending_lagged_counts(ev, key_col, window_len)
-        .where("trending")
-        .select(
-            key_col,
-            F.date_format("ws", _WINDOW_FMT).alias("window_start"),
-            "cnt",
-            "prev",
-        )
-        .orderBy(key_col, "window_start")
     )
 
 
@@ -472,28 +458,6 @@ def with_batch_counter(df: DataFrame, name: str = "engine_metrics") -> DataFrame
     driver round-trip, exactly like the batch-side ``Observation``
     channel in operators/graph.py."""
     return df.observe(name, F.count(F.lit(1)).alias("n_rows"))
-
-
-def streaming_windowed_counts(
-    events_stream: DataFrame,
-    key_col: str | None = "event_type",
-    window_len: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """The same keyed tumbling-window count as a streaming plan
-    (IncrementalExecution handles the inverse-function optimization
-    the reference hand-specified, T4)."""
-    ev = events_stream.withWatermark("ts", watermark)
-    keys = [F.col(key_col)] if key_col else []
-    return (
-        ev.groupBy(*keys, F.window("ts", window_len).alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            *([F.col(key_col)] if key_col else []),
-            F.col("w.start").alias("window_start"),
-            "cnt",
-        )
-    )
 
 
 ORACLE_SQL: dict[str, str] = {

@@ -35,6 +35,30 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def events_stream(spark, sf_dir, tmp_path):
+    """The events table as a file-source stream, ts as TIMESTAMP (the
+    type watermarks need). The file source reads directories and the
+    testdata ships one parquet file, so the stream reads a symlink to
+    it staged under ``tmp_path``."""
+    from pyspark.sql import functions as F
+
+    from hadoop_and_spark_spark.catalog import read_parquet, table_path
+
+    src = table_path(sf_dir, "events")
+    stage = tmp_path / "events_stream"
+    stage.mkdir()
+    (stage / "events.parquet").symlink_to(src)
+    schema = read_parquet(spark, src).schema
+    # ts is stored TIMESTAMP_NTZ; the session time zone is UTC, so the
+    # cast keeps the stored wall clock
+    return (
+        spark.readStream.schema(schema)
+        .parquet(str(stage))
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+
+
 def run_queries_concurrently(names, worker, max_workers: int = 16) -> list:
     """Run ``worker(name)`` for every query name on a thread pool —
     the registry-wide sweeps are latency-bound (driver-side planning,

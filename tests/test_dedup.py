@@ -99,7 +99,6 @@ def test_portable_hash_parity(spark):
     from hadoop_and_spark_spark.functions.portable import (
         dot_fold,
         dot_fold_sql,
-        float_list_sql,
         poly_hash,
         poly_hash_sql,
     )
@@ -115,6 +114,9 @@ def test_portable_hash_parity(spark):
         lit = "'" + r.w.replace("'", "''") + "'"
         (oh,) = con.execute(f"select {poly_hash_sql(lit)}").fetchone()
         assert oh == r.h, r.w
+
+    def float_list_sql(vals: list[float]) -> str:
+        return "[" + ", ".join(repr(v) + "::DOUBLE" for v in vals) + "]"
 
     xs, ys = [0.1, -2.5, 3.25, 0.125], [1.5, 2.0, -0.5, 4.0]
     sv = (

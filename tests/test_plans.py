@@ -112,23 +112,6 @@ def test_fan_out_widens_only_narrow_plans(spark):
     assert fan_out(wide) is wide  # identity, no plan change at all
 
 
-def test_fan_out_sorted_orders_and_parallelizes(spark):
-    """fan_out_sorted must deliver orderBy(col) output order while
-    keeping an explicit (AQE-exempt) partition count > 1, so a
-    CPU-heavy kernel downstream of a small sort is not serialized."""
-    from pyspark.sql import functions as F
-
-    from hadoop_and_spark_spark.session import fan_out_sorted
-
-    df = spark.range(10_000).select(
-        (F.col("id") * 2654435761 % 1_000_003).alias("k")
-    )
-    out = fan_out_sorted(df, "k")
-    assert out.rdd.getNumPartitions() > 1
-    got = [r.k for r in out.collect()]
-    assert got == sorted(got)
-
-
 def test_q8_rollup_one_expand_one_aggregate_pass(spark, sf_dir):
     """ROLLUP must plan as one Expand feeding a single partial+final
     aggregate pair — one shuffle for all three grouping levels, never

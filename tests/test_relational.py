@@ -2,10 +2,11 @@
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from hadoop_and_spark_spark.operators import relational
-from hadoop_and_spark_spark.oracle import compare
+from hadoop_and_spark_spark.oracle import _normalize, compare
 
 
 @pytest.mark.parametrize("name", sorted(relational.QUERIES))
@@ -37,17 +38,17 @@ def test_entry_smoke(spark):
 
 
 def test_sql_surface_over_registered_views(spark, sf_dir):
-    """The engine is usable as literal SQL: register_views + a
-    spark.sql() rendering of the Q6 pricing summary must match the
-    DataFrame query exactly (same Catalyst plan space, a5's
-    SQL-vs-DataFrame duality)."""
-    from hadoop_and_spark_spark.catalog import register_views
+    """The engine is usable as literal SQL: a catalog table registered
+    as a temp view + a spark.sql() rendering of the Q6 pricing summary
+    must match the DataFrame query exactly (same Catalyst plan space,
+    a5's SQL-vs-DataFrame duality)."""
+    from hadoop_and_spark_spark.catalog import load_table
     from hadoop_and_spark_spark.operators.relational import (
         Q6_CUTOFF,
         q6_pricing_summary,
     )
 
-    register_views(spark, sf_dir)
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     got = spark.sql(f"""
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2)                         AS sum_qty,
@@ -68,20 +69,56 @@ def test_sql_surface_over_registered_views(spark, sf_dir):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_q9_histogram_matches_builtin_percentile_bitwise(spark, sf_dir):
+def _lineitem_with_nulls(out_dir) -> str:
+    """A lineitem directory whose prices and flags hold NULLs: a flag
+    with some NULL prices, a NULL-flag group, and a flag whose prices
+    are all NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        ("A", 10.5), ("A", None), ("A", 99.25), ("A", 10.5), ("A", 7000.0),
+        ("N", None), ("N", None),
+        (None, 12.0), (None, None), (None, 500.0),
+        ("R", 64.0), ("R", 63.99), ("R", 128.0), ("R", None),
+    ]
+    pq.write_table(
+        pa.table({
+            "l_returnflag": pa.array([f for f, _ in rows], pa.string()),
+            "l_extendedprice": pa.array([p for _, p in rows], pa.float64()),
+        }),
+        out_dir / "lineitem.parquet",
+    )
+    return str(out_dir)
+
+
+def test_q9_histogram_matches_builtin_percentile_bitwise(spark, sf_dir, tmp_path):
     """The registered domain-bounded histogram plan must reproduce the
     builtin exact ``percentile`` aggregate BIT-FOR-BIT (same
     Percentile.getPercentile interpolation arithmetic), not merely
     within tolerance — that identity is what lets the scale-safe plan
-    keep q9's hash-green DuckDB oracle."""
+    keep q9's hash-green DuckDB oracle. Run on the testdata and on a
+    lineitem with NULL prices and flags: a NULL flag is its own
+    group, percentiles skip NULL prices, and cnt counts every row,
+    as in the builtin and the oracle."""
     from hadoop_and_spark_spark.operators.relational import (
         q9_percentiles_builtin,
         q9_price_percentiles,
     )
 
-    got = [tuple(r) for r in q9_price_percentiles(spark, sf_dir).collect()]
-    want = [tuple(r) for r in q9_percentiles_builtin(spark, sf_dir).collect()]
-    assert got == want
+    nulls_dir = _lineitem_with_nulls(tmp_path)
+    for src in (sf_dir, nulls_dir):
+        got = [tuple(r) for r in q9_price_percentiles(spark, src).collect()]
+        want = [tuple(r) for r in q9_percentiles_builtin(spark, src).collect()]
+        assert got == want, src
+    assert [r[0] for r in want] == [None, "A", "N", "R"]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{nulls_dir}/lineitem.parquet'"
+    )
+    oracle = con.execute(relational.ORACLE_SQL["q9_price_percentiles"]).fetchall()
+    cols = ["l_returnflag", "p50", "p90", "p99", "cnt"]
+    assert _normalize(got, cols) == _normalize(oracle, cols)
 
 
 def test_approx_percentile_tracks_exact(spark, sf_dir):

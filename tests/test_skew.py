@@ -191,18 +191,20 @@ def test_user_keyed_state_handles_hot_user(spark, hot_user_corpus_dir):
     skew, and streaming-family query on exactly that corpus and pins
     ORACLE PARITY (the driver's own check) wherever an oracle exists,
     totality otherwise."""
+    import importlib
+
     from conftest import run_queries_concurrently
 
     from hadoop_and_spark_spark import oracle
-    from hadoop_and_spark_spark.registry import collect, query_modules
+    from hadoop_and_spark_spark.registry import _OPERATOR_MODULES, collect
 
-    mods = query_modules()
     queries, oracles = collect()
     names = [
         n
-        for n in queries
-        if mods.get(n, "") in ("temporal", "skew", "taxi")
-        or mods.get(n, "").startswith("streaming")
+        for modname in _OPERATOR_MODULES
+        if ".streaming." in modname
+        or modname.rsplit(".", 1)[1] in ("temporal", "skew", "taxi")
+        for n in importlib.import_module(modname).QUERIES
     ]
     assert len(names) >= 25  # the sweep must not silently shrink
 

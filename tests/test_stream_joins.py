@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from hadoop_and_spark_spark.catalog import load_events_stream, load_table
+from hadoop_and_spark_spark.catalog import load_table
 from hadoop_and_spark_spark.streaming import joins as J
 
 
@@ -19,7 +19,7 @@ def _run_stream(spark, df, name, tmp_path, mode):
     return spark.sql(f"select * from {name}").collect()
 
 
-def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path, events_stream):
     """T8: the same enrich+window expression over the same feed must
     produce identical tier counts in batch and streaming."""
     profiles = J.user_profiles(spark, sf_dir)
@@ -29,12 +29,11 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
             load_table(spark, sf_dir, "events"), profiles
         ).collect()
     }
-    stream = load_events_stream(spark, sf_dir)
     got = {
         (r.tier, r.window_start, r.cnt)
         for r in _run_stream(
             spark,
-            J.enriched_tier_counts(stream, profiles),
+            J.enriched_tier_counts(events_stream, profiles),
             "tier_counts",
             tmp_path,
             "complete",
@@ -45,19 +44,18 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
     assert {t for t, _, _ in got} == {"low", "high"}
 
 
-def test_stream_stream_pairs_match_batch(spark, sf_dir, tmp_path):
+def test_stream_stream_pairs_match_batch(spark, sf_dir, tmp_path, events_stream):
     """T9: the watermarked stream-stream interval self-join must emit
     exactly the batch join's (purchase, click) pair set."""
     want = {
         (r.purchase_id, r.click_id, r.user_id)
         for r in J.purchase_click_pairs_batch(spark, sf_dir).collect()
     }
-    stream = load_events_stream(spark, sf_dir)
     got = {
         (r.purchase_id, r.click_id, r.user_id)
         for r in _run_stream(
             spark,
-            J.purchase_click_pairs_stream(stream),
+            J.purchase_click_pairs_stream(events_stream),
             "pc_pairs",
             tmp_path,
             "append",

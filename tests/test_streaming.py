@@ -17,7 +17,6 @@ from hadoop_and_spark_spark.oracle import compare
 from hadoop_and_spark_spark.sources.mock_stream import (
     read_replay_stream,
     write_replay_batches,
-    write_replay_files,
     write_scripted_batches,
 )
 from hadoop_and_spark_spark.streaming import trending as T
@@ -25,6 +24,18 @@ from hadoop_and_spark_spark.streaming import windows as W
 
 # windows.ORACLE_SQL holds the oracles of trending's replay queries too
 WINDOW_QUERIES = {**W.QUERIES, **T.QUERIES}
+
+
+def _windowed_counts(events_stream):
+    """Per-type 10-minute tumbling counts as a streaming plan under a
+    30-minute watermark (IncrementalExecution handles the
+    inverse-function optimization the reference hand-specified, T4)."""
+    return (
+        events_stream.withWatermark("ts", "30 minutes")
+        .groupBy("event_type", F.window("ts", "10 minutes").alias("w"))
+        .agg(F.count("*").alias("cnt"))
+        .select("event_type", F.col("w.start").alias("window_start"), "cnt")
+    )
 
 
 @pytest.mark.parametrize("name", sorted(WINDOW_QUERIES))
@@ -74,13 +85,10 @@ def test_hll_reach_tracks_exact(spark, sf_dir):
     assert "partial_approx_count_distinct" in p
 
 
-def test_streaming_matches_batch(spark, sf_dir, tmp_path):
+def test_streaming_matches_batch(spark, sf_dir, tmp_path, events_stream):
     """availableNow streaming windowed counts == batch aggregation."""
-    from hadoop_and_spark_spark.catalog import load_events_stream
-
     ev = load_table(spark, sf_dir, "events")
-    stream = load_events_stream(spark, sf_dir)
-    out = W.streaming_windowed_counts(stream, key_col="event_type")
+    out = _windowed_counts(events_stream)
     q = (
         out.writeStream.format("memory")
         .queryName("win_counts")
@@ -150,17 +158,13 @@ def test_trending_stateful_multi_batch(spark, tmp_path):
     assert got == [(4, 0, False), (20, 4, True), (21, 20, False)]
 
 
-def test_streaming_observed_batch_counter(spark, sf_dir, tmp_path):
+def test_streaming_observed_batch_counter(spark, sf_dir, tmp_path, events_stream):
     """A14 streaming: the named observation reports per-micro-batch
     row counts through StreamingQueryProgress.observedMetrics — the
     reference's completed-RDD accumulator (EventCount.scala:55)."""
-    from hadoop_and_spark_spark.catalog import load_events_stream
-
     n_events = load_table(spark, sf_dir, "events").count()
-    with_counter = W.with_batch_counter(
-        load_events_stream(spark, sf_dir), "engine_metrics"
-    )
-    out = W.streaming_windowed_counts(with_counter, key_col="event_type")
+    with_counter = W.with_batch_counter(events_stream, "engine_metrics")
+    out = _windowed_counts(with_counter)
     q = (
         out.writeStream.format("memory")
         .queryName("obs_counts")
@@ -336,11 +340,8 @@ def test_watermark_drops_late_events(spark, tmp_path):
     ]
     replay_dir = str(tmp_path / "late_replay")
     write_scripted_batches(batches, replay_dir)
-    out = W.streaming_windowed_counts(
-        read_replay_stream(spark, replay_dir, batches[0].schema),
-        key_col="event_type",
-        window_len="10 minutes",
-        watermark="30 minutes",
+    out = _windowed_counts(
+        read_replay_stream(spark, replay_dir, batches[0].schema)
     )
     q = (
         out.writeStream.format("memory")
@@ -489,15 +490,13 @@ def test_streaming_upsert_sink_converges_to_batch_merge(spark, sf_dir, tmp_path)
     assert got == {(1, "a1", 2), (2, "b2", 3), (3, "c0", 1)}
 
 
-def test_streaming_hll_reach_matches_batch_sketch(spark, sf_dir, tmp_path):
+def test_streaming_hll_reach_matches_batch_sketch(spark, sf_dir, tmp_path, events_stream):
     """The HLL distinct-reach sketch under IncrementalExecution: the
     same approx_count_distinct aggregation run as an availableNow
     stream (complete mode — register state merges across
     micro-batches) must land within the batch sketch's own tolerance
     of the exact per-type reach. Proves the bounded-state cardinality
     path works in the streaming engine, not just batch."""
-    from hadoop_and_spark_spark.catalog import load_events_stream
-
     exact = {
         (r.event_type): r.n_users
         for r in load_table(spark, sf_dir, "events")
@@ -505,8 +504,7 @@ def test_streaming_hll_reach_matches_batch_sketch(spark, sf_dir, tmp_path):
         .agg(F.count_distinct("user_id").alias("n_users"))
         .collect()
     }
-    stream = load_events_stream(spark, sf_dir)
-    out = stream.groupBy("event_type").agg(
+    out = events_stream.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=W.HLL_RSD).alias("n_approx")
     )
     q = (
@@ -984,59 +982,6 @@ def test_stream_restart_recovers_state_from_checkpoint(spark, tmp_path):
     )
 
 
-def test_replay_files_time_ordered(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").limit(100)
-    out = str(tmp_path / "rp")
-    assert write_replay_files(ev, "ts", out, n_files=4) == 4
-    files = sorted(glob.glob(out + "/part-*.parquet"))
-    assert len(files) == 4
-    prev_max = None
-    for f in files:
-        pdf = spark.read.parquet(f).agg(
-            F.min("ts").alias("lo"), F.max("ts").alias("hi")
-        ).collect()[0]
-        if prev_max is not None:
-            assert pdf.lo >= prev_max
-        prev_max = pdf.hi
-
-
-def test_replay_files_match_ntile_reference(spark, sf_dir, tmp_path):
-    """The range-partitioned writer reproduces ntile buckets exactly:
-    equal-count contiguous time ranges, remainder rows to the
-    EARLIEST buckets — pinned against the ntile formula computed
-    independently here."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 103)
-    out = str(tmp_path / "rp_eq")
-    write_replay_files(ev, "ts", out, n_files=4)
-    rows = sorted(ev.collect(), key=lambda r: r.ts)
-    base, rem = divmod(len(rows), 4)
-    expect, i = [], 0
-    for b in range(4):
-        size = base + (1 if b < rem else 0)
-        expect.append({tuple(r) for r in rows[i : i + size]})
-        i += size
-    files = sorted(glob.glob(out + "/part-*.parquet"))
-    got = [{tuple(r) for r in spark.read.parquet(f).collect()} for f in files]
-    assert got == expect
-    # mtimes strictly increasing in bucket order: FileStreamSource
-    # admits files by modification time
-    mt = [os.path.getmtime(f) for f in files]
-    assert mt == sorted(mt) and len(set(mt)) == len(files)
-
-
-def test_replay_files_more_files_than_rows(spark, sf_dir, tmp_path):
-    """n_files > rows: the leading buckets get one row each, the rest
-    are genuinely EMPTY parquet files (schema intact)."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 3)
-    out = str(tmp_path / "rp_small")
-    assert write_replay_files(ev, "ts", out, n_files=5) == 5
-    files = sorted(glob.glob(out + "/part-*.parquet"))
-    assert len(files) == 5
-    counts = [spark.read.parquet(f).count() for f in files]
-    assert counts == [1, 1, 1, 0, 0]
-    assert spark.read.parquet(files[-1]).columns == ev.columns
-
-
 def test_replay_writer_refuses_split_partition_files(spark, sf_dir, tmp_path):
     """The replay writers rename ONE parquet file per partition dir
     into each scripted batch; if a conf like
@@ -1050,8 +995,6 @@ def test_replay_writer_refuses_split_partition_files(spark, sf_dir, tmp_path):
 
     ev = load_table(spark, sf_dir, "events").limit(40)
     with _scoped_conf(spark, "spark.sql.files.maxRecordsPerFile", "3"):
-        with pytest.raises(AssertionError, match="maxRecordsPerFile"):
-            write_replay_files(ev, "ts", str(tmp_path / "rp_split"), n_files=2)
         with pytest.raises(AssertionError, match="maxRecordsPerFile"):
             write_doc_replay(spark, sf_dir, str(tmp_path / "doc_split"))
         with pytest.raises(AssertionError, match="maxRecordsPerFile"):

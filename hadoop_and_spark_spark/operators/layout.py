@@ -40,8 +40,11 @@ from ..functions.portable import round6, round6_sql
 
 # --------------------------------------------------------------- bloom
 
-# Bitmap sizing for the demo: 2^18 bits. With ~1.1k keys at sf0.1 the
-# false-positive rate of the k=1 filter is ~keys/M ≈ 0.4% — false
+# Bitmap sizing for the demo: M = 2^18 bits, k = 2 hashes. With n keys
+# the false-positive rate is (1 - e^(-kn/M))^k: ~0.007% for the ~1.1k
+# keys at sf0.1 (measured: 9 of 146,190 non-matching order keys, 32 of
+# 595,747 non-matching lineitems; the rate predicts ~10 and ~39), and
+# ~0.00007% for the 109 keys at sf0.01 (measured: none). False
 # positives only cost work (they are removed by the exact join), never
 # correctness. At a real 100 TB build-side, size M at ~10 bits/key and
 # raise K_HASHES. Build and probe both read these two constants, so
@@ -119,7 +122,7 @@ def bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, but its Bloom bitmap is ≤ M_BITS/64 rows by construction
     — always broadcastable. Probe side: every lineitem checks the
     bitmap via broadcast word lookups (no shuffle), so only the ~1%
-    true matches plus ~0.4% false positives ever reach the exact
+    true matches plus ~0.007% false positives ever reach the exact
     sort-merge join; shuffle volume drops ~99% versus joining first.
     The final join is hinted ``merge`` to model the production case
     where the build side exceeds the broadcast threshold — when it

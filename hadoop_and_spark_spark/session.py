@@ -19,6 +19,9 @@ One place to encode the execution-model decisions that matter at
 - Streaming checkpoints written through the FileSystem-based
   checkpoint manager, whose local rename is one atomic call instead
   of a shell process per checkpoint file.
+- Python workers forked from ``worker_daemon``, whose zip importers
+  re-read ``pyspark.zip``'s directory only when the file changed
+  instead of on every task.
 """
 
 from __future__ import annotations
@@ -94,12 +97,12 @@ def get_spark(app_name: str = "hadoop-and-spark-spark") -> SparkSession:
     # hash map, built while concurrent tasks hold execution memory, so
     # what is a fine broadcast on a 16 GiB JVM OOMs a 2 GiB one (the
     # bounded-memory probe caught exactly this: AQE re-chose broadcast
-    # for a vocabulary-sized join under a 2 GiB heap at the old flat
-    # 64 MB threshold and the driver-side build failed). heap/256 ==
-    # the previous 64 MB at the 16 GiB default, so bench plans are
-    # unchanged; smaller heaps degrade to shuffled joins instead of
-    # dying. On a real cluster this mirrors sizing the threshold to
-    # executor memory, not to the dataset you hope is small.
+    # for a vocabulary-sized join under a 2 GiB heap at a flat 64 MB
+    # threshold and the broadcast build failed). heap/256 is 64 MB
+    # at the 16 GiB default; smaller heaps degrade to shuffled joins
+    # instead of dying. On a real cluster this mirrors sizing the
+    # threshold to executor memory, not to the dataset you hope is
+    # small.
     bcast_threshold = max(4 << 20, min(64 << 20, _mem_bytes(driver_mem) // 256))
     # Tungsten page size, heap-scaled for the same reason: Spark sizes
     # pages up as cores-per-memory shrinks (a 2 GiB/2-core session
@@ -108,9 +111,9 @@ def get_spark(app_name: str = "hadoop-and-spark-spark") -> SparkSession:
     # granular pages let them trade memory through spill cycles where
     # one 256 MB request on a ~1 GiB execution pool dies with
     # UNABLE_TO_ACQUIRE_MEMORY (measured by the 2 GiB bounded-memory
-    # probe on the ngram-jaccard candidate stage). heap/128 == the
-    # 64 MB ceiling at the 16 GiB default, so bench behavior is
-    # unchanged; small heaps get proportionally granular pages.
+    # probe on the ngram-jaccard candidate stage). heap/128 is the
+    # 64 MB ceiling at the 16 GiB default; small heaps get
+    # proportionally granular pages.
     page_size = max(1 << 20, min(64 << 20, _mem_bytes(driver_mem) // 128))
     # Spill-merge readers each hold a 2 x 1 MB read-ahead double
     # buffer, and UnsafeExternalSorter merges ALL of a task's spill
@@ -233,6 +236,14 @@ def get_spark(app_name: str = "hadoop-and-spark-spark") -> SparkSession:
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
+        )
+        # Python worker daemon (worker_daemon.py): the workers it forks
+        # keep each zip archive's directory until the file changes,
+        # where pyspark.daemon's re-read pyspark.zip on every task
+        # (~0.27 CPU-s each). Static conf: read when the worker
+        # factory starts the daemon.
+        .config(
+            "spark.python.daemon.module", "hadoop_and_spark_spark.worker_daemon"
         )
         .config("spark.ui.enabled", "false")
         # Console progress bars share stdout with the driver's JSON

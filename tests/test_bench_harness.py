@@ -217,6 +217,27 @@ class TestPrivateInternals:
         assert hasattr(getattr(importlib.import_module(module), cls), attr)
 
 
+class TestWorkerDaemonInternals:
+    """hadoop_and_spark_spark/worker_daemon.py relies on these PySpark
+    internals; a PySpark upgrade that changes one must fail here."""
+
+    def test_daemon_manager_exists(self):
+        import pyspark.daemon
+
+        assert callable(pyspark.daemon.manager)
+
+    def test_every_task_invalidates_import_caches(self):
+        """worker_daemon.py exists because every task's
+        setup_spark_files calls importlib.invalidate_caches(); if that
+        call goes, so does the daemon's reason to exist."""
+        import inspect
+
+        import pyspark.worker_util
+
+        source = inspect.getsource(pyspark.worker_util.setup_spark_files)
+        assert "importlib.invalidate_caches()" in source
+
+
 class TestCodegenCache:
     """session.get_spark sizes Spark's generated-code cache so that a
     repeated query shape reuses its compiled classes. At Spark's
@@ -307,3 +328,40 @@ class TestMemoDetection:
         assert converged_lineitem_ranks(spark, sf_dir) is first
         maintenance.clear_session_caches()
         assert converged_lineitem_ranks(spark, sf_dir) is not first
+
+
+class TestDescendantCpu:
+    """qtime.descendant_cpu_s reads the CPU of a process's live
+    descendants with their reaped children, which is how qtime prices
+    the JVM's Python worker daemon and workers."""
+
+    def test_counts_live_grandchild_and_its_reaped_child(self):
+        import subprocess
+
+        burn = "import time\nt = time.process_time()\nwhile time.process_time() - t < 0.3: pass"
+        # B burns 0.3 s in a child it reaps and 0.3 s itself, then
+        # stays alive until its stdin closes
+        grandchild = (
+            "import subprocess, sys, time\n"
+            f"subprocess.run([sys.executable, '-c', {burn!r}], check=True)\n"
+            "t = time.process_time()\n"
+            "while time.process_time() - t < 0.3: pass\n"
+            "print('ready', flush=True)\n"
+            "sys.stdin.read()\n"
+        )
+        child = (
+            "import subprocess, sys\n"
+            f"subprocess.run([sys.executable, '-c', {grandchild!r}], check=True)\n"
+        )
+        proc = subprocess.Popen(
+            [sys.executable, "-c", child],
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        try:
+            assert proc.stdout.readline().strip() == "ready"
+            assert 0.5 <= qtime.descendant_cpu_s(proc.pid) < 5.0
+        finally:
+            proc.stdin.close()
+            proc.wait(timeout=30)

@@ -2,11 +2,10 @@
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from hadoop_and_spark_spark.operators import relational
-from hadoop_and_spark_spark.oracle import _normalize, compare
+from hadoop_and_spark_spark.oracle import compare
 
 
 @pytest.mark.parametrize("name", sorted(relational.QUERIES))
@@ -112,13 +111,13 @@ def test_q9_histogram_matches_builtin_percentile_bitwise(spark, sf_dir, tmp_path
         want = [tuple(r) for r in q9_percentiles_builtin(spark, src).collect()]
         assert got == want, src
     assert [r[0] for r in want] == [None, "A", "N", "R"]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{nulls_dir}/lineitem.parquet'"
+    ok, msg = compare(
+        spark,
+        nulls_dir,
+        q9_price_percentiles,
+        relational.ORACLE_SQL["q9_price_percentiles"],
     )
-    oracle = con.execute(relational.ORACLE_SQL["q9_price_percentiles"]).fetchall()
-    cols = ["l_returnflag", "p50", "p90", "p99", "cnt"]
-    assert _normalize(got, cols) == _normalize(oracle, cols)
+    assert ok, msg
 
 
 def test_approx_percentile_tracks_exact(spark, sf_dir):

@@ -23,8 +23,9 @@ After the timed passes one stderr line prices the codegen layer over
 them (see codegen_counters): Janino compiles and generated classes
 (both 0 when the generated-code cache holds every shape), JIT ms, the
 CPU seconds of the JVM's reaped child processes (the shell-outs of
-Hadoop's local filesystem) and Metaspace MB — all read outside the
-timed calls.
+Hadoop's local filesystem), the CPU seconds of its live descendants
+(the Python worker daemon and its workers) and Metaspace MB — all
+read outside the timed calls.
 """
 
 from __future__ import annotations
@@ -69,27 +70,61 @@ def mismatch(ref_df, got_df) -> list[str]:
     )
 
 
+def _stat_fields(pid: int | str) -> list[str]:
+    """Fields 3 onward of /proc/<pid>/stat (proc(5)): fields[0] is
+    field 3 (state), so field N is fields[N - 3]. The command name in
+    field 2 may hold spaces and parentheses, so fields count from its
+    closing parenthesis."""
+    with open(f"/proc/{pid}/stat") as fh:
+        return fh.read().rpartition(")")[2].split()
+
+
 def reaped_child_cpu_s(pid: int) -> float:
     """``cutime + cstime`` of ``pid`` in seconds: the CPU its waited-for
     child processes used, cumulative since it started (proc(5)
-    fields 16 and 17 of /proc/<pid>/stat). The command name in field
-    2 may hold spaces and parentheses, so fields count from its
-    closing parenthesis."""
-    with open(f"/proc/{pid}/stat") as fh:
-        fields = fh.read().rpartition(")")[2].split()
-    # fields[0] is field 3 (state), so field N is fields[N - 3]
+    fields 16 and 17)."""
+    fields = _stat_fields(pid)
     return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
+def descendant_cpu_s(pid: int) -> float:
+    """User + system CPU seconds of every live descendant of ``pid``,
+    each with the children it has reaped (proc(5) fields 14-17). For
+    the JVM these are the Python worker daemon and its workers: a
+    worker the daemon reaps moves from its own count to the daemon's,
+    so the sum only grows. ``pid`` itself is not counted."""
+    procs: dict[int, tuple[int, int]] = {}  # pid -> (ppid, ticks)
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            fields = _stat_fields(entry)
+        except OSError:  # exited while we looked
+            continue
+        procs[int(entry)] = (int(fields[1]), sum(int(f) for f in fields[11:15]))
+    children: dict[int, list[int]] = {}
+    for child, (ppid, _) in procs.items():
+        children.setdefault(ppid, []).append(child)
+    ticks, todo = 0, list(children.get(pid, ()))
+    while todo:
+        child = todo.pop()
+        ticks += procs[child][1]
+        todo.extend(children.get(child, ()))
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def codegen_counters(spark) -> dict[str, float]:
     """JVM-wide codegen readings. Janino compiles and generated-class
-    count (Spark's CodegenMetrics histograms), HotSpot JIT compile ms
-    and the CPU of the JVM's reaped children (``reaped_child_cpu_s``:
+    count (Spark's CodegenMetrics histograms), HotSpot JIT compile ms,
+    the CPU of the JVM's reaped children (``reaped_child_cpu_s``:
     every process the JVM forks, e.g. Hadoop's local-filesystem
-    ``chmod``/``readlink`` shell-outs) are cumulative since JVM start,
+    ``chmod``/``readlink`` shell-outs) and of its live descendants
+    (``descendant_cpu_s``: the Python worker daemon and its workers,
+    which the JVM never reaps while the session lives) are cumulative,
     so difference two reads to price a span; Metaspace used MB (where
     generated classes live) is a level."""
     jvm = spark.sparkContext._jvm
+    jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
     codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
     mgmt = jvm.java.lang.management.ManagementFactory
     metaspace = next(
@@ -101,9 +136,8 @@ def codegen_counters(spark) -> dict[str, float]:
             codegen.METRIC_GENERATED_CLASS_BYTECODE_SIZE().getCount()
         ),
         "jit_ms": mgmt.getCompilationMXBean().getTotalCompilationTime(),
-        "jvm_child_cpu_s": reaped_child_cpu_s(
-            jvm.java.lang.ProcessHandle.current().pid()
-        ),
+        "jvm_child_cpu_s": reaped_child_cpu_s(jvm_pid),
+        "py_worker_cpu_s": descendant_cpu_s(jvm_pid),
         "metaspace_mb": round(metaspace.getUsage().getUsed() / (1 << 20), 1),
     }
 
@@ -165,7 +199,13 @@ def main() -> int:
     print(json.dumps(out, indent=1))
     spent = " ".join(
         f"{k}={round(after[k] - before[k], 2)}"
-        for k in ("janino_compiles", "generated_classes", "jit_ms", "jvm_child_cpu_s")
+        for k in (
+            "janino_compiles",
+            "generated_classes",
+            "jit_ms",
+            "jvm_child_cpu_s",
+            "py_worker_cpu_s",
+        )
     )
     print(
         f"# qtime codegen over {n_passes} timed passes: {spent} "

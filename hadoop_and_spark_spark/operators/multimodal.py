@@ -4,16 +4,17 @@ Driver-mandated extension (SURVEY §7 M7): treat image/audio/video as
 opaque ``binary`` columns and run decode / feature-extract /
 frame-sample as Arrow-batched Pandas UDFs (``mapInPandas``).
 
-The container ships no media libraries, so the default pipeline uses
-the fake-decode kernel ``_decode_batches`` — a deterministic function
-of the byte payload (documented below) — keeping the full Spark-side
-machinery (binary column through Arrow, batch iteration, output
-schema, downstream relational ops) real and oracle-checked
+The corpora carry no media files (see below), so ``multimodal_decode``
+runs the fake-decode kernel ``_decode_batches`` — a deterministic
+function of the byte payload (documented below) — keeping the full
+Spark-side machinery (binary column through Arrow, batch iteration,
+output schema, downstream relational ops) real and oracle-checked
 end-to-end.
 
-Real-decode scope (a deliberate boundary, not a stub):
-$SPARK_GRAFT_REAL_DECODE=1 switches ``multimodal_decode`` to
-``_decode_real``, whose BUILT-IN support is header metadata for the
+Real-decode scope (a deliberate boundary, not a stub): the kernel
+``_decode_batches_real`` runs ``_decode_real`` per row and takes the
+fake kernel's place in ``mapInPandas`` for a caller whose payloads
+are real media. Its BUILT-IN support is header metadata for the
 five container formats with fully public, dependency-free layouts —
 BMP, PNG (IHDR), JPEG (SOFn), RIFF/WAVE PCM, MP4/ISO-BMFF
 (mvhd+stts) — all fixture-pinned in tests. When Pillow is importable
@@ -85,9 +86,6 @@ DECODE_SCHEMA = T.StructType(
 )
 
 _TYPES = ("image", "audio", "video")
-
-
-REAL_DECODE_ENV = "SPARK_GRAFT_REAL_DECODE"  # "1" → decode real headers
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -385,7 +383,9 @@ def _decode_batches_real(
     batches: Iterator["pd.DataFrame"],
 ) -> Iterator["pd.DataFrame"]:
     """mapInPandas kernel running the REAL per-row header parsers
-    (BMP/WAV). Row-at-a-time inside the Arrow batch — inherent to
+    (BMP/PNG/JPEG/WAV/ISO-BMFF) on real media payloads; the
+    synthesized corpus payloads are outside its scope and raise
+    ``UnsupportedMediaError``. Row-at-a-time inside the Arrow batch — inherent to
     decoding; the Arrow transfer and schema are shared with the fake
     kernel."""
     import pandas as pd
@@ -397,18 +397,6 @@ def _decode_batches_real(
             for d, m, t in zip(pdf["doc_id"], pdf["media"], pdf["media_type"])
         ]
         yield pd.DataFrame(rows, columns=cols)
-
-
-def _decode_kernel():
-    """Kernel selection happens DRIVER-side at plan-build time (an
-    env check inside the worker would race the worker pool's startup
-    environment): $SPARK_GRAFT_REAL_DECODE=1 → real header parsers,
-    else the deterministic fake."""
-    import os
-
-    if os.environ.get(REAL_DECODE_ENV) == "1":
-        return _decode_batches_real
-    return _decode_batches
 
 
 FEAT_BUCKETS = 16
@@ -515,7 +503,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row-in/1-row-out, so it preserves the partition-local sort.
     """
     media = fan_out_local_sorted(_media_table(spark, sf_dir), "doc_id")
-    return media.mapInPandas(_decode_kernel(), schema=DECODE_SCHEMA)
+    return media.mapInPandas(_decode_batches, schema=DECODE_SCHEMA)
 
 
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,9 +6,8 @@ operator — near-dup survivor selection (X57, `dedup_survivors`),
 benchmark decontamination (X38, `decontaminate`), the
 repetition/quality gates (X26 `repetition_filter` / X9
 `doc_quality`), context-window chunking (X27, `chunk_frame`), and
-sequence packing (X43, the `pack_sequences` window shape). What no
-single query proved before round 12 is that they COMPOSE in one
-plan: the gate outputs narrow to bare doc_id keys before anything
+sequence packing (X43, the `pack_sequences` window shape). This
+query shows that they COMPOSE in one plan: the gate outputs narrow to bare doc_id keys before anything
 joins, the survivor filter rides the session-memoized MinHash pair
 graph instead of re-mining it, the chunker runs text-free
 (`with_text=False` — only sizes reach the packer), and the whole
@@ -89,17 +88,14 @@ def corpus_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     # The repetition and quality gates are both pure per-document
-    # projections (since r12 — repetition_filter's top-token share is
-    # array-side), so they run FUSED on the one documents scan the
-    # chunker reads anyway, via the stage operators' own shared
-    # feature expressions (single definition of the gate semantics —
-    # the kept-set-equality test pins them against the standalone
-    # stages). The pre-fusion plan composed them as two more scans
-    # joined on doc_id: 8 documents scans and 9 join nodes; this plan
-    # has 5 and 6 (`git show
-    # 79dd7a2:plans/r12/corpus_training_set_{before,after}.txt`; guide
-    # §2.4 — the join's only purpose was to re-attach a predicate
-    # already computable in place).
+    # projections (repetition_filter's top-token share is array-side),
+    # so they run FUSED on the one documents scan the chunker reads
+    # anyway, via the stage operators' own shared feature expressions
+    # (single definition of the gate semantics — the kept-set-equality
+    # test pins them against the standalone stages). Composing them as
+    # two more scans joined on doc_id would only re-attach a predicate
+    # already computable in place: this plan has 5 documents scans and
+    # 6 join nodes, that one 8 and 9.
     gated = (
         fan_out(load_table(spark, sf_dir, "documents"))
         .where(

@@ -21,8 +21,7 @@ Scale notes (100 TB corpus):
   reference's window truncation, so ≤40×39 ordered pairs per doc)
   and runs as two chained explodes inside the scan stage — no
   doc_id self-join, no corpus-sized exchange before the (a, b) pair
-  aggregate itself (see _cooc_pairs; the r11 self-join form and the
-  r12 A/B that retired it are logged in OPTIMIZATION_r12.md).
+  aggregate itself (see _cooc_pairs).
 - Unigram counts are a vocabulary-sized aggregate, joined into the
   pair counts UNhinted: AQE broadcasts them from measured stats while
   the vocabulary is small and falls back to a shuffled join when it
@@ -167,22 +166,17 @@ def _cooc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thresholded co-occurrence pair counts (a, b, cnt) — the shared
     core of pmi_pairs and pmi_stripes.
 
-    r11 generated the pairs RELATIONALLY: the exploded distinct-token
-    stream self-joined on doc_id — a corpus-sized exchange+join whose
-    only purpose was to enumerate within-document pairs. The pair set
-    is purely document-local (≤ 40×39 ordered pairs after the window
-    truncation), so it is generated ARRAY-SIDE and the first (and
-    only corpus-sized) shuffle is the (a, b) pair aggregate itself
-    (guide §2.4: remove shuffles outright). Generation is two chained
-    explodes (doc's distinct array → `a` rows → partner `b` rows)
-    rather than one nested transform+flatten: both are shuffle-free
-    single-stage Generates, but the nested form materialized a
-    ≤ 40×39-element array of structs per document before exploding
-    it, which measured ~0.25 s slower at sf0.1 (the r12 pair-gen
-    A/B); the chained form streams pairs without ever allocating the
-    per-document pair array. Same rows by construction: all ordered
-    pairs (a, b), a ≠ b, of each document's windowed distinct
-    tokens."""
+    The pair set is purely document-local (≤ 40×39 ordered pairs
+    after the window truncation), so it is generated ARRAY-SIDE, never
+    by a doc_id self-join of the token stream: the first (and only
+    corpus-sized) shuffle is the (a, b) pair aggregate itself.
+    Generation is two chained explodes (doc's distinct array → `a`
+    rows → partner `b` rows), not one nested transform+flatten: both
+    are shuffle-free single-stage Generates, but the nested form
+    materializes a ≤ 40×39-element array of structs per document
+    before exploding it (~0.25 s slower at sf0.1), and the chained
+    form streams pairs without that array. The rows are all ordered pairs (a, b), a ≠ b, of
+    each document's windowed distinct tokens."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return (
         docs.select(
@@ -231,8 +225,8 @@ def pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exploded = toks.select("doc_id", F.explode("toks").alias("word"))
     unigram = exploded.groupBy("word").agg(F.count("*").alias("wcnt"))
-    # Pair counts: array-side generation (see _cooc_pairs) — the r11
-    # doc_id self-join exchange is gone.
+    # Pair counts: array-side generation, no doc_id self-join (see
+    # _cooc_pairs).
     pairs = _cooc_pairs(spark, sf_dir)
     # unigram is word-vocabulary-sized — bounded on this corpus, but
     # unbounded on a 100 TB crawl (Heaps' law never flattens over web
@@ -242,11 +236,11 @@ def pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side table, a1 PairsPMI setup(), carries the same corpus-growth
     # assumption this removes).
     # Both lookups join the SAME unigram frame (aliased, not
-    # re-projected): the r11 per-side renames (word→a / word→b) made
-    # the two broadcast subplans canonically different, so each join
-    # re-scanned and re-tokenized the corpus to rebuild the identical
-    # vocabulary — ReuseExchange now serves the second join from the
-    # first's exchange (one unigram pass instead of two; guide §2.4).
+    # re-projected), so ReuseExchange serves the second join from the
+    # first's exchange: one unigram pass, not two. Per-side renames
+    # (word→a / word→b) would make the two broadcast subplans
+    # canonically different, and each join would re-scan and
+    # re-tokenize the corpus to rebuild the identical vocabulary.
     ua, ub = unigram.alias("ua"), unigram.alias("ub")
     return (
         pairs.join(ua, F.col("a") == F.col("ua.word"))
@@ -349,13 +343,12 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant, same plan with a broadcast LM). Bigram formation is
     array-side (W1) — the token stream itself never shuffles.
 
-    r12 optimization (guide §2.4): the continuation vocabulary V now
-    comes from the (vocab²-bounded) LM itself rather than a second
-    corpus-wide count_distinct aggregate — distinct b over lm ≡
-    distinct b over the bigram stream, so one whole corpus pass is
-    gone with results unchanged. Two rewrites of the occurrence
-    pipeline itself were measured and REJECTED (numbers in
-    OPTIMIZATION_r12.md): per-document run-length-encoded distinct
+    The continuation vocabulary V comes from the (vocab²-bounded) LM
+    itself, not a second corpus-wide count_distinct aggregate:
+    distinct b over lm ≡ distinct b over the bigram stream, so the
+    query makes one corpus pass fewer. Two rewrites of the occurrence
+    pipeline itself measured slower (numbers in OPTIMIZATION_r12.md):
+    per-document run-length-encoded distinct
     counts (sorting the bigram struct array per doc cost more than
     every downstream saving, 2.60 → 2.76-3.51 s at sf0.1) and a
     groupBy(doc_id, a, b) pre-aggregate (adds the corpus-sized

@@ -584,12 +584,11 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``top_tok_share`` — count of the most frequent token over total
       tokens, as the LONGEST RUN of the sorted token array (equal
       tokens sort adjacent, so max run length = max frequency) — a
-      pure O(n log n) array projection, replacing the r11 explode →
-      per-(doc, token) count → per-doc max/sum → join-back plan. That
-      plan shuffled every token occurrence twice and joined on doc_id
-      (3 Exchanges); this one never leaves the scan stage, at any
-      vocabulary size. (The earlier objection was to the O(distinct·n)
-      filter-count form, which the sorted-run form avoids.)
+      pure O(n log n) array projection that never leaves the scan
+      stage, at any vocabulary size. An explode → per-(doc, token)
+      count → per-doc max/sum → join-back plan would shuffle every
+      token occurrence twice and join on doc_id (3 Exchanges), and an
+      O(distinct·n) filter-count form would scale with vocabulary.
     Thresholds sit at the corpus p90 so the keep flag actually splits
     the synthetic corpus. The whole operator is now one shuffle-free
     projection (the local round-robin fan-out aside) — at 100 TB it

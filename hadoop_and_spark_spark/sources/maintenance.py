@@ -74,10 +74,9 @@ def _keyed_lock(locks: dict, key) -> object:
     Registered queries may run on concurrent threads with no
     cross-query serialization (tests' run_queries_concurrently), so
     all shared state is locked at its source: the session memo and
-    on-disk builds here, the replay shuffle-partition pin
-    (streaming/runtime.py, refcounted), the memory-sink sequence
-    (runtime._SEQ_LOCK) and scoped SQL-conf mutation
-    (catalog._CONF_LOCK). An in-session artifact cache is a
+    on-disk builds here (a replay stream's memory sink is unique per
+    memo key), the replay shuffle-partition pin (streaming/runtime.py,
+    refcounted) and scoped SQL-conf mutation (catalog._CONF_LOCK). An in-session artifact cache is a
     ``session_memo`` call, not a new module-level dict."""
     with _LOCK_GUARD:
         return locks.setdefault(key, threading.Lock())

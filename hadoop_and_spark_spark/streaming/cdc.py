@@ -33,65 +33,63 @@ def cdc_upsert_stream(spark, sf_dir: str) -> DataFrame:
     table. Shares latest_snapshot's window-form oracle shape, minus
     the tombstone filter (a keep-latest merge never deletes).
 
-    Runs once per (session, corpus) like every registered stream —
-    re-invoking reads the sink, it does not restart the stream. The
-    memo entry owns the run's work directory, which the read-back
-    frame reads lazily: evicting the entry deletes it."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "cdcupsert_run_v1",
-        lambda: _run_cdc_upsert(spark, sf_dir),
-    )[0]
-
-
-def _run_cdc_upsert(spark, sf_dir: str) -> tuple:
-    """(final table frame, the ScratchDir it reads) of one run."""
+    Its sink is a ``foreachBatch`` merge, so it builds its own writer
+    but, like ``runtime.run_replay``, runs once per (session, corpus)
+    under its registry name. The memo entry holds (final table frame,
+    the run's work directory), which the read-back frame reads
+    lazily: evicting the entry deletes the directory."""
     import os
     import shutil
 
     from ..catalog import read_parquet
-    from ..sources.maintenance import ScratchDir, merge_upsert
+    from ..sources.maintenance import (
+        ScratchDir,
+        merge_upsert,
+        session_memo,
+    )
     from ..sources.mock_stream import read_replay_stream
     from .runtime import scratch_dir, start_and_await
     from .trending import weekly_replay_source
 
-    src = weekly_replay_source(spark, sf_dir)
-    work = ScratchDir(scratch_dir("cdc"))
-    table = os.path.join(work, "table")
-    # versioned changelog row: (ts, event_id) is a unique per-key total
-    # order, so max_by on it IS "latest"
-    empty = spark.createDataFrame([], _CDC_COLS).withColumn(
-        "ver", F.struct("ts", "event_id")
-    )
-    empty.write.parquet(table)
+    def run() -> tuple:
+        src = weekly_replay_source(spark, sf_dir)
+        work = ScratchDir(scratch_dir("cdc"))
+        table = os.path.join(work, "table")
+        # versioned changelog row: (ts, event_id) is a unique per-key
+        # total order, so max_by on it IS "latest"
+        empty = spark.createDataFrame([], _CDC_COLS).withColumn(
+            "ver", F.struct("ts", "event_id")
+        )
+        empty.write.parquet(table)
 
-    def apply_batch(bdf: DataFrame, _bid: int) -> None:
-        staged = os.path.join(work, "staged")
-        updates = bdf.withColumn("ver", F.struct("ts", "event_id"))
-        base = read_parquet(bdf.sparkSession, table, schema=empty.schema)
-        merge_upsert(base, updates, "user_id", "ver", staged)
-        shutil.rmtree(table)
-        os.replace(staged, table)
+        def apply_batch(bdf: DataFrame, _bid: int) -> None:
+            staged = os.path.join(work, "staged")
+            updates = bdf.withColumn("ver", F.struct("ts", "event_id"))
+            base = read_parquet(bdf.sparkSession, table, schema=empty.schema)
+            merge_upsert(base, updates, "user_id", "ver", staged)
+            shutil.rmtree(table)
+            os.replace(staged, table)
 
-    ckpt = os.path.join(work, "ckpt")
-    writer = (
-        read_replay_stream(spark, src, _CDC_COLS)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    try:
-        start_and_await(spark, writer)
-    finally:
-        # the memo serves the final table; the checkpoint is dead
-        shutil.rmtree(ckpt, ignore_errors=True)
-    final = read_parquet(spark, table, schema=empty.schema).select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_type"),
-    )
-    return final.sortWithinPartitions("user_id"), work
+        ckpt = os.path.join(work, "ckpt")
+        writer = (
+            read_replay_stream(spark, src, _CDC_COLS)
+            .writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+        try:
+            start_and_await(spark, writer)
+        finally:
+            # the memo serves the final table; the checkpoint is dead
+            shutil.rmtree(ckpt, ignore_errors=True)
+        final = read_parquet(spark, table, schema=empty.schema).select(
+            "user_id",
+            F.col("ts").alias("last_ts"),
+            F.col("event_type").alias("last_type"),
+        )
+        return final.sortWithinPartitions("user_id"), work
+
+    return session_memo(spark, sf_dir, "events", "cdc_upsert_stream", run)[0]
 
 
 QUERIES = {"cdc_upsert_stream": cdc_upsert_stream}

@@ -88,6 +88,20 @@ def write_doc_replay(spark, sf_dir: str, out_path: str) -> None:
     write_scripted_batches(batches, out_path)
 
 
+def _doc_replay_source(spark, sf_dir: str, src: str, version: str, write) -> str:
+    """Build a document replay at ``src`` once per corpus (build_once
+    marker ``version``) with ``write(spark, sf_dir, src)`` and return
+    the directory its stream reads."""
+    from ..sources.maintenance import build_once, source_marker
+
+    build_once(
+        src,
+        source_marker(sf_dir, "documents", version),
+        lambda: write(spark, sf_dir, src),
+    )
+    return src
+
+
 def dedup_exact_stream(spark, sf_dir: str) -> DataFrame:
     """Exact dedup through the REAL streaming state store, driver-
     gated: replay documents in DOC_REPLAY_BUCKETS micro-batches where
@@ -105,32 +119,18 @@ def dedup_exact_stream(spark, sf_dir: str) -> DataFrame:
     identical for both — is the deterministic surface. Scale: state
     is one (md5) key per distinct document, payload never stored;
     unbounded streams bound it with dropDuplicatesWithinWatermark
-    (streaming_dedup_exact's watermark form, unit-tested). Runs once
-    per (session, corpus) via the session memo like every registered
-    stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "documents", "docdedup_run_v1",
-        lambda: _run_dedup_stream(spark, sf_dir),
-    )
-
-
-def _run_dedup_stream(spark, sf_dir: str) -> DataFrame:
-    from ..sources.maintenance import build_once, source_marker
-
-    src = doc_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "documents", "docdedup_v2"),
-        lambda: write_doc_replay(spark, sf_dir, src),
-    )
+    (streaming_dedup_exact's watermark form, unit-tested)."""
     return run_replay(
-        spark, sf_dir, "dedup_stream", src,
+        spark, sf_dir, "dedup_exact_stream", "documents",
+        lambda: _doc_replay_source(
+            spark, sf_dir, doc_replay_path(sf_dir), "docdedup_v2",
+            write_doc_replay,
+        ),
         "doc_id long, text string",
         lambda stream: streaming_dedup_exact(stream).select("text_md5"),
         "append",
-    ).sortWithinPartitions("text_md5")
+        lambda sink: sink.sortWithinPartitions("text_md5"),
+    )
 
 
 # ------------------------------- bounded-state (watermarked) variant
@@ -217,33 +217,20 @@ def dedup_bounded_stream(spark, sf_dir: str) -> DataFrame:
     suppression AND eviction both happen exactly at the watermark.
 
     Scale: state = distinct keys inside the watermark horizon, not
-    stream history; only (md5, ts) is stored. Runs once per (session,
-    corpus) via the session memo like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "documents", "docdedupwm_run_v2",
-        lambda: _run_bounded_stream(spark, sf_dir),
-    )
-
-
-def _run_bounded_stream(spark, sf_dir: str) -> DataFrame:
-    from ..sources.maintenance import build_once, source_marker
-
-    src = timed_doc_replay_path(sf_dir)
-    build_once(
-        src,
-        source_marker(sf_dir, "documents", "docdedupwm_v3"),
-        lambda: write_doc_timed_replay(spark, sf_dir, src),
-    )
+    stream history; only (md5, ts) is stored."""
     return run_replay(
-        spark, sf_dir, "dedupwm_stream", src,
+        spark, sf_dir, "dedup_bounded_stream", "documents",
+        lambda: _doc_replay_source(
+            spark, sf_dir, timed_doc_replay_path(sf_dir), "docdedupwm_v3",
+            write_doc_timed_replay,
+        ),
         "doc_id long, text string, ts timestamp",
         lambda stream: streaming_dedup_exact(
             stream, watermark=("ts", DEDUP_WM_DELAY)
         ).select("text_md5"),
         "append",
-    ).sortWithinPartitions("text_md5")
+        lambda sink: sink.sortWithinPartitions("text_md5"),
+    )
 
 
 QUERIES = {

@@ -153,26 +153,17 @@ def tier_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched_tier_counts — whose SQL the oracle runs. The stream side
     never shuffles for the join (broadcast), the streaming analogue of
     the J2 broadcast dim join; aggregation state is bounded by
-    tiers x watermark-horizon windows. Runs once per (session,
-    corpus) via the session memo like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "tierstream_run_v1",
-        lambda: _run_tier_stream(spark, sf_dir),
-    )
-
-
-def _run_tier_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    profiles = user_profiles(spark, sf_dir)
+    tiers x watermark-horizon windows."""
     return run_replay(
-        spark, sf_dir, "tier_stream", weekly_replay_source(spark, sf_dir),
+        spark, sf_dir, "tier_counts_stream", "events",
+        lambda: weekly_replay_source(spark, sf_dir),
         "ts timestamp, user_id bigint",
         lambda stream: enriched_tier_counts(
-            stream.withWatermark("ts", "1 hour"), profiles
+            stream.withWatermark("ts", "1 hour"), user_profiles(spark, sf_dir)
         ),
         "update",
-    ).orderBy("tier", "window_start")
+        lambda sink: sink.orderBy("tier", "window_start"),
+    )
 
 
 def purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,21 +180,14 @@ def purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (purchase, click) pair exactly once and the DuckDB interval-join
     oracle gates the state store's buffering AND eviction. Output is
     event-proportional: within-partition order only."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "pairstream_run_v1",
-        lambda: _run_pair_stream(spark, sf_dir),
-    )
-
-
-def _run_pair_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_replay(
-        spark, sf_dir, "pair_stream", weekly_replay_source(spark, sf_dir),
+        spark, sf_dir, "purchase_click_pairs", "events",
+        lambda: weekly_replay_source(spark, sf_dir),
         "event_id bigint, event_type string, ts timestamp, user_id bigint",
         purchase_click_pairs_stream,
         "append",
-    ).sortWithinPartitions("purchase_id", "click_id")
+        lambda sink: sink.sortWithinPartitions("purchase_id", "click_id"),
+    )
 
 
 QUERIES = {

@@ -2,12 +2,14 @@
 
 ``run_replay`` owns the harness every registered replay query shares:
 a one-file-per-trigger file source over a scripted replay directory,
-a memory sink with a unique per-corpus name, a fresh checkpoint
-(deleted after the run), an ``availableNow`` trigger that drains the
-replay, and the sink read back as a DataFrame. A query supplies only
-its plan (stream -> frame), its sink tag and its output mode.
-(cdc_upsert_stream, whose sink is a ``foreachBatch`` merge, builds
-its own writer and shares the source and ``start_and_await``.)
+a memory sink named after the stream and its corpus, a fresh
+checkpoint (deleted after the run), an ``availableNow`` trigger that
+drains the replay, the sink read back as a DataFrame, and one run per
+(session, corpus) through the session memo. A query supplies its
+registry name, its replay source, its plan (stream -> frame), its
+output mode and its read-back. (cdc_upsert_stream, whose sink is a
+``foreachBatch`` merge, builds its own writer, memoizes it under its
+registry name, and shares the source and ``start_and_await``.)
 
 State partitions equal the replay's scan parallelism. Every stateful
 streaming operator (windowed aggregation, streaming dedup,
@@ -95,74 +97,61 @@ def scratch_dir(tag: str) -> str:
     return tempfile.mkdtemp(prefix=f"hs_{tag}_")
 
 
-_STREAM_SEQ = [0]  # unique memory-sink names across repeat invocations
-_SEQ_LOCK = threading.Lock()  # guards seq + _SINKS registration
-
-# Newest memory-sink name per (tag, corpus). A replay runs once per
-# (session, corpus), but the totality sweeps run every registered
-# query against OTHER corpora too (e.g. an empty dir), each starting
-# its own stream with a fresh seq — so "the raw sink for MY corpus"
-# resolves by (tag, corpus), never by newest seq. Latest registration
-# wins per key, which is the session_memo invariant (one live replay
-# per session+corpus).
-_SINKS: dict[tuple[str, str], str] = {}
-
-
-def _corpus_digest(sf_dir: str) -> str:
+def sink_name(name: str, sf_dir: str) -> str:
+    """The memory sink the registered stream ``name`` writes over
+    ``sf_dir``: the registry name plus the corpus digest, so runs over
+    different corpora never shadow each other. A rerun over the same
+    corpus reuses the name; a frame read from the earlier run keeps
+    that run's rows."""
     from ..sources.maintenance import corpus_digest
 
-    return corpus_digest(sf_dir, width=8)
-
-
-def register_sink(tag: str, sf_dir: str) -> str:
-    """Allocate a unique memory-sink name for a replay stream over
-    ``sf_dir`` and record it as the newest sink for (tag, corpus).
-    The name embeds the corpus digest so sinks from different corpora
-    can never shadow each other. Locked: replay queries may run on
-    concurrent sweep threads, and a duplicated seq would alias two
-    streams onto one memory-sink table."""
-    with _SEQ_LOCK:
-        _STREAM_SEQ[0] += 1
-        qname = f"{tag}_{_corpus_digest(sf_dir)}_{_STREAM_SEQ[0]}"
-        _SINKS[(tag, _corpus_digest(sf_dir))] = qname
-    return qname
-
-
-def sink_table(spark, sf_dir: str, tag: str) -> DataFrame:
-    """The raw (pre-consolidation) memory sink of the newest ``tag``
-    stream run over ``sf_dir`` in this session. Raises KeyError if no
-    such stream has run — callers invoke the query first. A test hook
-    onto the private sink registry."""
-    return spark.table(_SINKS[(tag, _corpus_digest(sf_dir))])
+    return f"{name}_{corpus_digest(sf_dir, width=8)}"
 
 
 def run_replay(
     spark,
     sf_dir: str,
-    tag: str,
-    source_dir: str,
+    name: str,
+    table: str,
+    source: Callable[[], str],
     schema: str,
     plan: Callable[[DataFrame], DataFrame],
     mode: str,
+    read: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Replay ``source_dir`` (one file per micro-batch) through
-    ``plan`` into a fresh memory sink in output ``mode``, drain it
-    with ``availableNow``, and return the sink table. The checkpoint
-    is deleted once the run ends: the sink table lives in the driver
-    and never reads it. Read-back order and any consolidation are the
-    caller's."""
-    qname = register_sink(tag, sf_dir)
-    ckpt = scratch_dir(f"{tag}_ck")
-    writer = (
-        plan(read_replay_stream(spark, source_dir, schema))
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    try:
-        start_and_await(spark, writer)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    """Run the registered stream ``name`` once per (session, corpus)
+    and return ``read`` of its memory sink.
+
+    A cold call builds the replay directory (``source``), replays it
+    (one file per micro-batch) through ``plan`` into the memory sink
+    ``sink_name(name, sf_dir)`` in output ``mode``, drains it with
+    ``availableNow`` and deletes the checkpoint: the sink lives in the
+    driver and never reads it. The result is memoized under version
+    ``name`` of the source ``table``: a stream executes continuously
+    in production, so re-invoking the query reads its sink, it does
+    not restart the stream, and a warm call returns the same frame
+    without touching the replay directory. Cold replay cost is priced
+    by clearing the memo (bench warm-up, tools/scaling_probe.py)."""
+    # imported here so a wrapper on the module attribute (the
+    # benchmark tracer) sees every call
+    from ..sources.maintenance import session_memo
+
+    def run() -> DataFrame:
+        src = source()
+        qname = sink_name(name, sf_dir)
+        ckpt = scratch_dir(f"{name}_ck")
+        writer = (
+            plan(read_replay_stream(spark, src, schema))
+            .writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+        try:
+            start_and_await(spark, writer)
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
+        return read(spark.table(qname))
+
+    return session_memo(spark, sf_dir, table, name, run)

@@ -24,15 +24,13 @@ run REAL streaming execution over it under the driver's hash gate:
 trending_arrivals_stream (T5, applyInPandasWithState), the hourly
 (T2), late, late-tolerated, keyed (T3) and hopping windowed counts,
 and user_sessions_stream (session windows). Each is a plan handed to
-``runtime.run_replay`` and runs once per (session, corpus) via the
-session memo — a production stream executes continuously; re-invoking
-reads its sink. Their oracles live in streaming/windows.py beside the
-batch twins they share.
+``runtime.run_replay``. Their oracles live in streaming/windows.py
+beside the batch twins they share.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -56,15 +54,23 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "prev long"
 
 
+def _trend_step(cur: int, state: GroupState) -> tuple[int, bool]:
+    """Advance one key's state by a batch of ``cur`` arrivals. Returns
+    the previous batch's count and the alert: ``cur`` at least
+    TREND_FACTOR times the previous count (floored at 1) and at least
+    TREND_MIN."""
+    prev = state.get[0] if state.exists else 0
+    state.update((cur,))
+    return prev, cur >= TREND_FACTOR * max(prev, 1) and cur >= TREND_MIN
+
+
 def _trend_fn(
     key: tuple[Any, ...],
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     cur = sum(len(pdf) for pdf in batches)
-    prev = state.get[0] if state.exists else 0
-    trending = cur >= TREND_FACTOR * max(prev, 1) and cur >= TREND_MIN
-    state.update((cur,))
+    prev, trending = _trend_step(cur, state)
     yield pd.DataFrame(
         {
             "key": [key[0]],
@@ -94,9 +100,7 @@ def _trend_fn_week(
         cur += len(pdf)
         if len(pdf):
             week = max(week, pdf["wk"].max())
-    prev = state.get[0] if state.exists else 0
-    trending = cur >= TREND_FACTOR * max(prev, 1) and cur >= TREND_MIN
-    state.update((cur,))
+    prev, trending = _trend_step(cur, state)
     yield pd.DataFrame(
         {
             "key": [key[0]],
@@ -245,18 +249,49 @@ def trending_arrivals_stream(spark, sf_dir: str) -> DataFrame:
 
     Scale: state is one long per key; the memory sink holds
     |keys|×|weeks| rows (a console/kafka sink in production). The
-    replay source is built once per corpus (build_once marker), and
-    the replay itself runs once per (session, corpus): a stream
-    executes continuously in production — re-invoking the query reads
-    its sink, it does not restart the stream — so repeat invocations
-    are served from the session memo (cold replay cost stays in the
-    bench warm-up and tools/scaling_probe.py)."""
-    from ..sources.maintenance import session_memo
+    replay source is built once per corpus (build_once marker)."""
 
-    return session_memo(
-        spark, sf_dir, "events", "trendwk_run_v1",
-        lambda: _run_weekly_replay(spark, sf_dir),
+    def plan(stream: DataFrame) -> DataFrame:
+        return (
+            stream.select(F.col("event_type").alias("key"), "wk")
+            .groupBy("key")
+            .applyInPandasWithState(
+                _trend_fn_week,
+                outputStructType=WEEK_OUTPUT_SCHEMA,
+                stateStructType=STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
+        )
+
+    return run_replay(
+        spark, sf_dir, "trending_arrivals_stream", "events",
+        lambda: weekly_replay_source(spark, sf_dir),
+        "event_type string, wk string", plan, "update",
+        lambda sink: sink.orderBy("key", "week"),
     )
+
+
+def _hourly_plan(delay: str) -> Callable[[DataFrame], DataFrame]:
+    """The hourly tumbling count, watermarked ``delay`` behind the
+    newest event."""
+
+    def plan(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", delay)
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count("*").alias("cnt"))
+            .select(
+                F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
+                "cnt",
+            )
+        )
+
+    return plan
+
+
+def _by_window(sink: DataFrame) -> DataFrame:
+    return sink.orderBy("window_start")
 
 
 def event_count_hourly_stream(spark, sf_dir: str) -> DataFrame:
@@ -272,14 +307,11 @@ def event_count_hourly_stream(spark, sf_dir: str) -> DataFrame:
     oracle this query shares. The watermark bounds state: windows a
     week behind the stream are evicted after their single update (at
     scale: state size = windows within the watermark horizon, not
-    stream history). Runs once per (session, corpus) like the trend
-    replay — a production stream executes continuously; re-invoking
-    reads its sink."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "hourlystream_run_v1",
-        lambda: _run_hourly(spark, sf_dir, "hourly_stream", ""),
+    stream history)."""
+    return run_replay(
+        spark, sf_dir, "event_count_hourly_stream", "events",
+        lambda: weekly_replay_source(spark, sf_dir), "ts timestamp",
+        _hourly_plan("1 hour"), "update", _by_window,
     )
 
 
@@ -298,13 +330,11 @@ def event_count_hourly_late(spark, sf_dir: str) -> DataFrame:
 
     Scale: identical to event_count_hourly_stream — watermark-bounded
     state, update-mode sink; the only difference is the scripted
-    delivery order. Runs once per (session, corpus) via the session
-    memo, like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "hourlylate_run_v1",
-        lambda: _run_hourly(spark, sf_dir, "hourly_late", "late_"),
+    delivery order."""
+    return run_replay(
+        spark, sf_dir, "event_count_hourly_late", "events",
+        lambda: weekly_replay_source(spark, sf_dir, "late_"), "ts timestamp",
+        _hourly_plan("1 hour"), "update", _by_window,
     )
 
 
@@ -321,37 +351,11 @@ def event_count_hourly_late_tolerated(spark, sf_dir: str) -> DataFrame:
     Scale note: tolerating 60-day lateness means 60 days of window
     state; the production trade the pair of queries demonstrates is
     exactly state size vs completeness."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "hourlylatetol_run_v1",
-        lambda: _run_hourly(
-            spark, sf_dir, "hourly_late", "late_", delay="60 days"
-        ),
-    )
-
-
-def _run_hourly(
-    spark, sf_dir: str, tag: str, variant: str, delay: str = "1 hour"
-) -> DataFrame:
-    """The hourly tumbling count over the ``variant`` weekly replay,
-    watermarked ``delay`` behind the newest event."""
-
-    def plan(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", delay)
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count("*").alias("cnt"))
-            .select(
-                F.date_format("w.start", _WINDOW_FMT).alias("window_start"),
-                "cnt",
-            )
-        )
-
-    src = weekly_replay_source(spark, sf_dir, variant)
     return run_replay(
-        spark, sf_dir, tag, src, "ts timestamp", plan, "update"
-    ).orderBy("window_start")
+        spark, sf_dir, "event_count_hourly_late_tolerated", "events",
+        lambda: weekly_replay_source(spark, sf_dir, "late_"), "ts timestamp",
+        _hourly_plan("60 days"), "update", _by_window,
+    )
 
 
 def region_event_count_stream(spark, sf_dir: str) -> DataFrame:
@@ -365,15 +369,7 @@ def region_event_count_stream(spark, sf_dir: str) -> DataFrame:
     week-batch boundaries, so each (region, window) updates exactly
     once and the update-mode sink equals the batch query — whose
     oracle it shares."""
-    from ..sources.maintenance import session_memo
 
-    return session_memo(
-        spark, sf_dir, "events", "regionstream_run_v1",
-        lambda: _run_region_stream(spark, sf_dir),
-    )
-
-
-def _run_region_stream(spark, sf_dir: str) -> DataFrame:
     def plan(stream: DataFrame) -> DataFrame:
         return (
             stream.withWatermark("ts", "1 hour")
@@ -387,11 +383,12 @@ def _run_region_stream(spark, sf_dir: str) -> DataFrame:
             )
         )
 
-    src = weekly_replay_source(spark, sf_dir)
     return run_replay(
-        spark, sf_dir, "region_stream", src,
+        spark, sf_dir, "region_event_count_stream", "events",
+        lambda: weekly_replay_source(spark, sf_dir),
         "event_type string, ts timestamp", plan, "update",
-    ).orderBy("region", "window_start")
+        lambda sink: sink.orderBy("region", "window_start"),
+    )
 
 
 def event_count_sliding_stream(spark, sf_dir: str) -> DataFrame:
@@ -413,15 +410,7 @@ def event_count_sliding_stream(spark, sf_dir: str) -> DataFrame:
     the straddling windows are exactly the ones whose state must
     outlive a batch boundary to be evicted only after their second
     update."""
-    from ..sources.maintenance import session_memo
 
-    return session_memo(
-        spark, sf_dir, "events", "slidingstream_run_v1",
-        lambda: _run_sliding_stream(spark, sf_dir),
-    )
-
-
-def _run_sliding_stream(spark, sf_dir: str) -> DataFrame:
     def plan(stream: DataFrame) -> DataFrame:
         return (
             stream.withWatermark("ts", "1 hour")
@@ -433,15 +422,13 @@ def _run_sliding_stream(spark, sf_dir: str) -> DataFrame:
             )
         )
 
-    src = weekly_replay_source(spark, sf_dir)
-    return (
-        run_replay(
-            spark, sf_dir, "sliding_stream", src, "ts timestamp", plan,
-            "update",
-        )
-        .groupBy("window_start")
+    return run_replay(
+        spark, sf_dir, "event_count_sliding_stream", "events",
+        lambda: weekly_replay_source(spark, sf_dir), "ts timestamp", plan,
+        "update",
+        lambda sink: sink.groupBy("window_start")
         .agg(F.max("cnt").alias("cnt"))
-        .orderBy("window_start")
+        .orderBy("window_start"),
     )
 
 
@@ -471,17 +458,7 @@ def user_sessions_stream(spark, sf_dir: str) -> DataFrame:
 
     Scale: state = open sessions per user inside the watermark
     horizon (one row each), evicted at close; the memory sink holds
-    the emitted sessions (keyed cardinality). Runs once per (session,
-    corpus) like every registered stream."""
-    from ..sources.maintenance import session_memo
-
-    return session_memo(
-        spark, sf_dir, "events", "sessstream_run_v1",
-        lambda: _run_sessions_stream(spark, sf_dir),
-    )
-
-
-def _run_sessions_stream(spark, sf_dir: str) -> DataFrame:
+    the emitted sessions (keyed cardinality)."""
     from ..operators.temporal import streaming_user_sessions
 
     # NO user_id >= 0 filter on the STREAM side: Catalyst pushes such
@@ -489,41 +466,20 @@ def _run_sessions_stream(spark, sf_dir: str) -> DataFrame:
     # grouping key), which drops the sentinel rows BEFORE they can
     # advance the watermark — un-flushing the exact tail the sentinel
     # exists to flush. The sentinels are filtered on the batch-side
-    # sink read below instead (sentinel 2's watermark closes sentinel
-    # 1's session, so exactly one sentinel row does reach the sink).
-    src = weekly_replay_source(spark, sf_dir, "sess_")
-    sink = run_replay(
-        spark, sf_dir, "sessions_stream", src,
+    # sink read instead (sentinel 2's watermark closes sentinel 1's
+    # session, so exactly one sentinel row does reach the sink).
+    # Within-partition order only: output is corpus-proportional
+    # (sessions per user), same presentation policy as the batch twin.
+    return run_replay(
+        spark, sf_dir, "user_sessions_stream", "events",
+        lambda: weekly_replay_source(spark, sf_dir, "sess_"),
         "ts timestamp, user_id bigint, value double",
         lambda stream: streaming_user_sessions(stream, watermark="1 hour"),
         "append",
+        lambda sink: sink.where(F.col("user_id") >= 0).sortWithinPartitions(
+            "user_id", "session_start_us"
+        ),
     )
-    # within-partition order only: output is corpus-proportional
-    # (sessions per user), same presentation policy as the batch twin
-    return sink.where(F.col("user_id") >= 0).sortWithinPartitions(
-        "user_id", "session_start_us"
-    )
-
-
-def _run_weekly_replay(spark, sf_dir: str) -> DataFrame:
-    def plan(stream: DataFrame) -> DataFrame:
-        return (
-            stream.select(F.col("event_type").alias("key"), "wk")
-            .groupBy("key")
-            .applyInPandasWithState(
-                _trend_fn_week,
-                outputStructType=WEEK_OUTPUT_SCHEMA,
-                stateStructType=STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    src = weekly_replay_source(spark, sf_dir)
-    return run_replay(
-        spark, sf_dir, "trend_weekly", src, "event_type string, wk string",
-        plan, "update",
-    ).orderBy("key", "week")
 
 
 def trending_stream(events_stream: DataFrame) -> DataFrame:

@@ -134,9 +134,9 @@ TEST_ONLY_ALLOWED = {
     "score_with_model": "SURVEY M3 float-model scoring",
     "with_batch_counter": "SURVEY A14 streaming batch counter",
     "read_taxi_csv_stream": "a7 taxi CSV feed as a stream",
+    "_decode_batches_real": "SURVEY X12 real header decode",
     # test hooks onto module-private state
     "evict_version": "evicts one artifact family from the session memo",
-    "sink_table": "reads a replay's raw memory sink",
     "compare": "the tests' oracle-compare harness",
 }
 

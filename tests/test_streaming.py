@@ -619,7 +619,7 @@ def test_sliding_stream_equals_batch_and_straddles_batches(spark, sf_dir):
     2-hour span straddles a weekly batch edge). Without the second
     batch's update, max-consolidation would under-count and the
     equality half would fail too."""
-    from hadoop_and_spark_spark.streaming.runtime import sink_table
+    from hadoop_and_spark_spark.streaming.runtime import sink_name
     from hadoop_and_spark_spark.streaming.trending import (
         event_count_sliding_stream,
     )
@@ -632,11 +632,10 @@ def test_sliding_stream_equals_batch_and_straddles_batches(spark, sf_dir):
     )
     assert got == want and got
 
-    # the consolidated result comes from a memory sink; resolve THIS
-    # corpus's sink via the (tag, corpus)-keyed registry — newest-seq
-    # scanning would find whichever corpus ran a sliding stream last
-    # (e.g. the empty-dir totality sweep) and inspect zero rows
-    raw = sink_table(spark, sf_dir, "sliding_stream")
+    # the consolidated result comes from a memory sink named per
+    # (stream, corpus): another corpus's run (e.g. the empty-dir
+    # totality sweep) cannot shadow it
+    raw = spark.table(sink_name("event_count_sliding_stream", sf_dir))
     multi = (
         raw.groupBy("window_start")
         .count()
@@ -684,13 +683,12 @@ def test_bounded_dedup_suppresses_within_and_readmits_beyond(spark, sf_dir):
 
 
 def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
-    """Sinks resolve per (tag, corpus): after a sliding stream runs
-    against a SECOND corpus (here: an empty one, the totality-sweep
-    shape), sink_table for the FIRST corpus must still return the
-    first corpus's sink — newest-seq scanning would find the second
-    corpus's zero-row sink."""
+    """Sink names resolve per (stream, corpus): after a sliding stream
+    runs against a SECOND corpus (here: an empty one, the
+    totality-sweep shape), the FIRST corpus's sink must still hold the
+    first corpus's rows, not the second corpus's zero-row sink."""
     from hadoop_and_spark_spark.catalog import TABLES
-    from hadoop_and_spark_spark.streaming.runtime import sink_table
+    from hadoop_and_spark_spark.streaming.runtime import sink_name
     from hadoop_and_spark_spark.streaming.trending import (
         event_count_sliding_stream,
     )
@@ -706,9 +704,67 @@ def test_sink_registry_resolves_per_corpus(spark, sf_dir, tmp_path):
         )
     event_count_sliding_stream(spark, ed).count()  # newer stream, 0 rows
 
-    raw = sink_table(spark, sf_dir, "sliding_stream")
+    name = "event_count_sliding_stream"
+    raw = spark.table(sink_name(name, sf_dir))
     assert raw.count() > 0, "empty-corpus sink shadowed the real one"
-    assert sink_table(spark, ed, "sliding_stream").count() == 0
+    assert spark.table(sink_name(name, ed)).count() == 0
+
+
+def test_late_data_queries_keep_separate_sinks(spark, sf_dir):
+    """The two late-data queries share a replay source but not a sink:
+    the evicting one's raw sink holds fewer rows than the tolerant
+    one's, because it dropped the displaced week."""
+    from hadoop_and_spark_spark.streaming.runtime import sink_name
+    from hadoop_and_spark_spark.streaming.trending import (
+        event_count_hourly_late,
+        event_count_hourly_late_tolerated,
+    )
+
+    dropped = event_count_hourly_late(spark, sf_dir).count()
+    kept = event_count_hourly_late_tolerated(spark, sf_dir).count()
+    assert 0 < dropped < kept
+    evicting = spark.table(sink_name("event_count_hourly_late", sf_dir))
+    tolerant = spark.table(
+        sink_name("event_count_hourly_late_tolerated", sf_dir)
+    )
+    assert evicting.count() == dropped < tolerant.count() == kept
+
+
+def test_rerun_under_the_same_sink_name_keeps_earlier_frames(spark, sf_dir):
+    """A rerun of one name over one corpus replaces the memory-sink
+    view the name points at, but a frame read from the earlier run
+    still returns that run's rows — the Spark behaviour reusing one
+    sink name per (stream, corpus) relies on. The rerun's plan keeps
+    no rows, so a frame that followed the view would come back
+    empty."""
+    from hadoop_and_spark_spark.sources.maintenance import evict_version
+    from hadoop_and_spark_spark.streaming.runtime import run_replay, sink_name
+    from hadoop_and_spark_spark.streaming.trending import weekly_replay_source
+
+    name = "test_sink_name_reuse"
+
+    def run(keep):
+        return run_replay(
+            spark, sf_dir, name, "events",
+            lambda: weekly_replay_source(spark, sf_dir), "ts timestamp",
+            lambda stream: stream.where(keep)
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .count(),
+            "update",
+            lambda sink: sink,
+        )
+
+    try:
+        evict_version(name)
+        first = run(F.col("ts").isNotNull())
+        rows = sorted(first.collect())
+        assert rows
+        evict_version(name)
+        run(F.col("ts") < F.lit(0).cast("timestamp"))
+        assert spark.table(sink_name(name, sf_dir)).count() == 0
+        assert sorted(first.collect()) == rows
+    finally:
+        evict_version(name)
 
 
 def test_replay_pin_is_refcounted_and_restored(spark):
@@ -819,28 +875,30 @@ def test_checkpoints_use_the_filesystem_manager(spark):
     )
 
 
-# Every registered replay query -> its session_memo version.
-REPLAY_QUERIES = {
-    "trending_arrivals_stream": "trendwk_run_v1",
-    "event_count_hourly_stream": "hourlystream_run_v1",
-    "event_count_hourly_late": "hourlylate_run_v1",
-    "event_count_hourly_late_tolerated": "hourlylatetol_run_v1",
-    "region_event_count_stream": "regionstream_run_v1",
-    "event_count_sliding_stream": "slidingstream_run_v1",
-    "user_sessions_stream": "sessstream_run_v1",
-    "tier_counts_stream": "tierstream_run_v1",
-    "purchase_click_pairs": "pairstream_run_v1",
-    "dedup_exact_stream": "docdedup_run_v1",
-    "dedup_bounded_stream": "docdedupwm_run_v2",
-    "cdc_upsert_stream": "cdcupsert_run_v1",
-}
+# Every registered replay query; each is memoized under its own name.
+REPLAY_QUERIES = (
+    "cdc_upsert_stream",
+    "dedup_bounded_stream",
+    "dedup_exact_stream",
+    "event_count_hourly_late",
+    "event_count_hourly_late_tolerated",
+    "event_count_hourly_stream",
+    "event_count_sliding_stream",
+    "purchase_click_pairs",
+    "region_event_count_stream",
+    "tier_counts_stream",
+    "trending_arrivals_stream",
+    "user_sessions_stream",
+)
 
 
-@pytest.mark.parametrize("name", sorted(REPLAY_QUERIES))
+@pytest.mark.parametrize("name", REPLAY_QUERIES)
 def test_replay_runs_once_per_session_and_corpus(spark, sf_dir, name, monkeypatch):
-    """A cold call starts exactly one stream; a second call returns
-    the memoized frame itself and starts none."""
+    """A cold call starts exactly one stream and leaves exactly one
+    memo entry, whose version is the registry name; a second call
+    returns the memoized frame itself and starts none."""
     from hadoop_and_spark_spark.registry import collect
+    from hadoop_and_spark_spark.sources import maintenance
     from hadoop_and_spark_spark.sources.maintenance import evict_version
     from hadoop_and_spark_spark.streaming import runtime
 
@@ -853,9 +911,11 @@ def test_replay_runs_once_per_session_and_corpus(spark, sf_dir, name, monkeypatc
 
     monkeypatch.setattr(runtime, "start_and_await", counting_start)
     fn = collect()[0][name]
-    evict_version(REPLAY_QUERIES[name])
+    evict_version(name)
     first = fn(spark, sf_dir)
     assert len(starts) == 1
+    versions = [k[1].rsplit("|", 3)[3] for k in maintenance._SESSION_MEMO]
+    assert versions.count(name) == 1
     assert fn(spark, sf_dir) is first
     assert len(starts) == 1
 
@@ -1062,7 +1122,7 @@ def test_replay_runs_remove_their_checkpoints(spark, sf_dir):
     before = leftovers()
     queries = collect()[0]
     for name in ("event_count_hourly_stream", "cdc_upsert_stream"):
-        evict_version(REPLAY_QUERIES[name])
+        evict_version(name)
         assert queries[name](spark, sf_dir).count() > 0
     assert leftovers() == before
 
@@ -1078,7 +1138,7 @@ def test_cdc_work_dir_lives_as_long_as_its_memo_entry(spark, sf_dir):
         return glob.glob(f"{tempfile.gettempdir()}/hs_cdc_*")
 
     fn = collect()[0]["cdc_upsert_stream"]
-    maintenance.evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+    maintenance.evict_version("cdc_upsert_stream")
     assert work_dirs() == []
     assert fn(spark, sf_dir).count() > 0
     assert len(work_dirs()) == 1
@@ -1091,7 +1151,7 @@ def test_cdc_work_dir_lives_as_long_as_its_memo_entry(spark, sf_dir):
         assert work_dirs() == []
     finally:
         # the entry's frame reads the deleted table; drop it
-        maintenance.evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+        maintenance.evict_version("cdc_upsert_stream")
 
 
 def test_cdc_rerun_adds_no_schema_entry(spark, sf_dir):
@@ -1106,7 +1166,7 @@ def test_cdc_rerun_adds_no_schema_entry(spark, sf_dir):
     fn = collect()[0]["cdc_upsert_stream"]
     # one run first: its source reads (the events table) may add entries
     assert fn(spark, sf_dir).count() > 0
-    evict_version(REPLAY_QUERIES["cdc_upsert_stream"])
+    evict_version("cdc_upsert_stream")
     size = len(catalog._SCHEMAS)
     assert fn(spark, sf_dir).count() > 0
     assert len(catalog._SCHEMAS) == size

@@ -3,10 +3,10 @@
 The repo's `oracle.compare` checks Python-level values; the driver instead
 pulls both sides into pandas (Spark `toPandas()` vs DuckDB `.df()`), sorts
 columns by name, sorts rows, and hashes cells WITH their runtime types.
-Round 3 proved those can disagree (DuckDB renders DECIMAL as float64 while
+Those can disagree on equal values (DuckDB renders DECIMAL as float64 while
 Spark keeps object(Decimal) — identical values, different hash). This tool
-reproduces that stricter comparison locally so a red driver row is caught
-before the round ends.
+reproduces that stricter comparison locally, so a red driver row shows
+before the driver runs.
 
 Usage:  python tools/driver_check.py [sf_dir] [query ...]
 """

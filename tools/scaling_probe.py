@@ -562,9 +562,9 @@ def main() -> None:
     print(f"{'query':32s} {'1x':>7s} {factor:>6d}x {'growth':>7s}")
     rows = []
     for name in names:
-        # Both tables carry measured engine-side (noop sink) twins —
-        # the 10x table gained them in round 9 so neither table mixes
-        # harness collect cost into its growth column.
+        # Both tables carry measured engine-side (noop sink) twins, so
+        # neither table mixes harness collect cost into its growth
+        # column.
         fn = queries[name]
         one = cold_min(fn, spark, BASE_SF)
         big = cold_min(fn, spark, probe_dir)
